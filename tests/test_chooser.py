@@ -156,9 +156,9 @@ def test_knn_join_auto_ivf_route_matches_ivf_join(spark, emb):
     idx = IvfIndex.build_deterministic(
         emb, n_centroids=min(plan.params["n_centroids"], emb.count()))
     want = knn_join_ivf(queries, idx, k=5, nprobe=plan.params["nprobe"])
-    got = {(r["query_id"], r["vec_id"]) for r in res.collect()}
-    exp = {(r["query_id"], r["vec_id"]) for r in want.collect()}
-    assert got == exp
+    norm = lambda d: sorted((r["query_id"], r["vec_id"],
+                             round(r["distance"], 9)) for r in d.collect())
+    assert norm(res) == norm(want)
 
 
 def test_search_auto_lsh_route_returns_neighbors(spark, emb):
@@ -169,3 +169,144 @@ def test_search_auto_lsh_route_returns_neighbors(spark, emb):
     assert plan.tier == "lsh"
     rows = res.collect()
     assert rows and rows[0]["vec_id"] == 3
+
+
+# -- sizing seam and job budgets ----------------------------------------------
+
+EMB = f"{SF}/embeddings.parquet"
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted through a job
+    group once the listener bus has delivered every job event."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def emb_copy(tmp_path_factory):
+    """A private copy of the sf0.001 embeddings file: a scan of the
+    original path can match a frame another test cached, and a cached
+    plan is not a file scan."""
+    import shutil
+    dst = tmp_path_factory.mktemp("emb") / "embeddings.parquet"
+    shutil.copy(EMB, dst)
+    return str(dst)
+
+
+@pytest.fixture(scope="module")
+def bare_scans(spark, emb_copy, tmp_path_factory):
+    """(queries, corpus) as bare parquet scans: 10 query rows written
+    to their own file, the embeddings copy as the corpus."""
+    qdir = str(tmp_path_factory.mktemp("queries"))
+    spark.read.parquet(emb_copy).filter("vec_id < 10").select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec")) \
+        .coalesce(1).write.mode("overwrite").parquet(qdir)
+    return (spark.read.schema("query_id long, query_vec array<float>")
+            .parquet(qdir),
+            spark.read.schema("vec_id long, embedding array<float>, "
+                              "label int").parquet(emb_copy))
+
+
+def test_knn_join_auto_ivf_broadcast_job_and_plan_budget(spark, bare_scans):
+    # over bare scans the only jobs before the frame exists are the
+    # det_sample centroid pick and the query collect; the plan is one
+    # Arrow pass (no broadcast hash join of exploded probes)
+    from toy_vector_db_spark.operators.chooser import knn_join_auto
+    queries, corpus = bare_scans
+    (plan, res), jobs = _jobs(spark, lambda: knn_join_auto(
+        queries, corpus, k=5, recall_target=0.9, exact_max_pairs=10))
+    assert plan.tier == "ivf-broadcast"
+    assert jobs <= 2
+    text = res._jdf.queryExecution().executedPlan().toString()
+    assert text.count("MapInPandas") == 1
+    assert "BroadcastHashJoin" not in text
+    assert {r["query_id"] for r in res.collect()} == set(range(10))
+
+
+def test_knn_join_auto_exact_route_launches_no_sizing_job(spark, bare_scans):
+    from toy_vector_db_spark.operators.chooser import knn_join_auto
+    queries, corpus = bare_scans
+    (plan, _), jobs = _jobs(spark, lambda: knn_join_auto(queries, corpus,
+                                                         k=5))
+    assert plan.tier == "exact-broadcast"
+    assert jobs == 0
+
+
+def test_rows_reads_footers_of_file_scans(spark, emb_copy, tmp_path):
+    from toy_vector_db_spark.operators.ann import IvfIndex
+    from toy_vector_db_spark.operators.chooser import rows
+    from toy_vector_db_spark.plans.catalog import CollectionCatalog
+    emb = spark.read.parquet(emb_copy)
+    emb.write.partitionBy("label").parquet(str(tmp_path / "by_label"))
+    IvfIndex.build_deterministic(emb, n_centroids=4).save(
+        str(tmp_path / "ivf"))
+    cat = CollectionCatalog(spark, str(tmp_path / "catalog"))
+    cat.insert_df("c", emb.select(F.col("vec_id").alias("id"), "embedding"))
+    cat.insert_df("c", emb.limit(7).select(
+        (F.col("vec_id") + 10_000).alias("id"), "embedding"))
+    scans = {
+        "bare": emb,
+        "projected": emb.select("vec_id", F.size("embedding").alias("n")),
+        "partition directory": spark.read.parquet(str(tmp_path / "by_label")),
+        "saved index": IvfIndex.load(spark, str(tmp_path / "ivf")).table,
+        "catalog": cat.read("c"),
+    }
+    for name, df in scans.items():
+        want = df.count()
+        got, jobs = _jobs(spark, lambda: rows(df))
+        assert (got, jobs) == (want, 0), name
+    assert rows(emb, n=3) == 3
+
+
+def test_rows_falls_back_to_count(spark, emb_copy):
+    from toy_vector_db_spark.operators.chooser import rows
+    emb = spark.read.parquet(emb_copy)
+    frames = {
+        "filtered": emb.filter("vec_id % 3 = 0"),
+        "limited": emb.limit(17),
+        "unioned": emb.unionByName(emb),
+        "local": spark.createDataFrame([(1,), (2,)], "a int"),
+    }
+    for name, df in frames.items():
+        want = df.count()
+        got, jobs = _jobs(spark, lambda: rows(df))
+        assert got == want and jobs >= 1, name
+
+
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
+                                "/root/testdata/sf0.01"])
+def test_footer_sizing_leaves_tier_picks_unchanged(spark, sf, tmp_path):
+    # the same decisions as sizing with count(): both entry points, on
+    # the exact and the pruned sides of each crossover
+    import shutil
+    from toy_vector_db_spark.operators.chooser import (
+        _parquet_scan_files, knn_join_auto, search_auto)
+    shutil.copy(f"{sf}/embeddings.parquet", tmp_path)
+    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    assert _parquet_scan_files(emb) is not None
+    queries = emb.select(F.col("vec_id").alias("query_id"),
+                         F.col("embedding").alias("query_vec"))
+    nq, nc = queries.count(), emb.count()
+    qvec = emb.first()["embedding"]
+    for kw in ({}, {"recall_target": 0.9, "exact_max_pairs": 10}):
+        a, _ = knn_join_auto(queries, emb, k=5, **kw)
+        b, _ = knn_join_auto(queries, emb, k=5, n_queries=nq, n_corpus=nc,
+                             **kw)
+        assert a == b, kw
+    for kw in ({}, {"recall_target": 0.9, "exact_max_rows": 10},
+               {"metric": "cosine", "recall_target": 0.5,
+                "exact_max_rows": 10}):
+        a, _ = search_auto(emb, qvec, k=5, **kw)
+        b, _ = search_auto(emb, qvec, k=5, n_rows=nc, **kw)
+        assert a == b, kw

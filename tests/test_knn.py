@@ -296,6 +296,122 @@ def test_knn_join_arrow_boundary_ties_in_one_batch(spark):
         assert got == col, metric
 
 
+# -- knn_join_ivf_arrow(broadcast_queries=True) vs the Column tier ----------
+
+METRICS = ("euclidean", "cosine", "dotproduct", "manhattan")
+EMB_SMALL = "/root/testdata/sf0.001/embeddings.parquet"
+
+
+def _triples(df):
+    return sorted((r["query_id"], r["vec_id"], round(r["distance"], 9))
+                  for r in df.collect())
+
+
+def _assert_broadcast_parity(queries, idx, k, nprobe, label):
+    from toy_vector_db_spark.operators.knn import (knn_join_ivf,
+                                                   knn_join_ivf_arrow)
+    for metric in METRICS:
+        a = knn_join_ivf(queries, idx, k=k, nprobe=nprobe, metric=metric)
+        b = knn_join_ivf_arrow(queries, idx, k=k, nprobe=nprobe,
+                               metric=metric, broadcast_queries=True)
+        want = _triples(a)
+        assert want, (label, metric)
+        assert _triples(b) == want, (label, metric)
+
+
+@pytest.fixture(scope="module")
+def emb_queries(spark):
+    emb = spark.read.parquet(EMB_SMALL)
+    queries = emb.filter(F.col("vec_id") < 12).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    return emb, queries
+
+
+@pytest.mark.parametrize("n_centroids", [4, 40])
+def test_knn_join_ivf_arrow_broadcast_matches_column_tier(
+        spark, emb_queries, n_centroids, tmp_path):
+    """The broadcast mode picks probes driver-side and scores the
+    stored clusters in one Arrow pass; it must return the Column
+    tier's exact answer on every metric — with both probe tiers
+    (4 centroids: expression fold, 40: BLAS), with tombstones, and on
+    a saved-and-reloaded partitioned index."""
+    from toy_vector_db_spark.operators.ann import IvfIndex
+    emb, queries = emb_queries
+    idx = IvfIndex.build_deterministic(emb, n_centroids=n_centroids)
+    _assert_broadcast_parity(queries, idx, 5, 3, "built")
+    # tombstones: some queries' own rows and their neighbours vanish
+    _assert_broadcast_parity(queries, idx.delete(list(range(0, 40, 3))),
+                             5, 3, "tombstoned")
+    idx.save(str(tmp_path))
+    loaded = IvfIndex.load(spark, str(tmp_path))
+    _assert_broadcast_parity(queries, loaded, 5, 3, "reloaded")
+
+
+def test_knn_join_ivf_arrow_broadcast_boundary_ties(spark, emb_queries):
+    """Duplicate vectors tie exactly; at the k boundary the smaller
+    corpus id must win, as in the Column tier's struct sort. Every
+    query's own row and its duplicate tie at distance 0 (k=1 keeps
+    one), and duplicated neighbours tie further down (k=4). One
+    partition puts both copies in the same Arrow batch, so the tie is
+    cut inside the kernel, not only in the merge."""
+    from toy_vector_db_spark.operators.ann import IvfIndex
+    emb, queries = emb_queries
+    dups = emb.filter(F.col("vec_id") < 120).withColumn(
+        "vec_id", F.col("vec_id") + 100_000)
+    idx = IvfIndex.build_deterministic(
+        emb.unionByName(dups).coalesce(1), n_centroids=4)
+    _assert_broadcast_parity(queries, idx, 1, 2, "k=1")
+    _assert_broadcast_parity(queries, idx, 4, 2, "k=4")
+
+
+def test_knn_join_ivf_arrow_broadcast_excludes_bad_vectors(spark,
+                                                           emb_queries):
+    """A null and a wrong-length corpus vector are never scored, even
+    when the stored layout gives them a probed cluster."""
+    from toy_vector_db_spark.operators.ann import IvfIndex
+    emb, queries = emb_queries
+    idx = IvfIndex.build_deterministic(emb, n_centroids=4)
+    assert idx.table.columns == ["vec_id", "embedding", "label", "__cluster"]
+    bad = spark.createDataFrame(
+        [(999998, None, 0, 0), (999999, [1.0, 2.0], 0, 0)], idx.table.schema)
+    bad_idx = IvfIndex(idx.centroids, idx.table.unionByName(bad),
+                       idx.id_col, idx.vec_col)
+    _assert_broadcast_parity(queries, bad_idx, 5, 4, "bad vectors")
+    from toy_vector_db_spark.operators.knn import knn_join_ivf_arrow
+    got = knn_join_ivf_arrow(queries, bad_idx, k=500, nprobe=4,
+                             broadcast_queries=True).collect()
+    assert len(got) == 12 * 500
+    assert not {999998, 999999} & {r["vec_id"] for r in got}
+
+
+def test_knn_join_ivf_arrow_broadcast_edge_inputs(spark, emb_queries):
+    from toy_vector_db_spark.operators.ann import IvfIndex
+    from toy_vector_db_spark.operators.knn import (knn_join_ivf,
+                                                   knn_join_ivf_arrow)
+    emb, queries = emb_queries
+    idx = IvfIndex.build_deterministic(emb, n_centroids=4)
+    # an empty query side is an empty frame with the output schema
+    none = queries.filter(F.lit(False))
+    got = knn_join_ivf_arrow(none, idx, k=5, broadcast_queries=True)
+    assert got.collect() == []
+    want = knn_join_ivf(none, idx, k=5)
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in want.schema]
+    # mixed query dimensions raise, as in knn_join_arrow
+    mixed = queries.unionByName(spark.createDataFrame(
+        [(7777, [0.5, 0.5])], "query_id long, query_vec array<float>"))
+    with pytest.raises(ValueError, match="share one dimension"):
+        knn_join_ivf_arrow(mixed, idx, k=5, broadcast_queries=True)
+    narrow = spark.createDataFrame([(1, [0.5, 0.5])],
+                                   "query_id long, query_vec array<float>")
+    with pytest.raises(ValueError, match="index dimension"):
+        knn_join_ivf_arrow(narrow, idx, k=5, broadcast_queries=True)
+    for bad in ({"k": 0}, {"nprobe": 0}, {"metric": "hamming"}):
+        with pytest.raises(ValueError):
+            knn_join_ivf_arrow(queries, idx, broadcast_queries=True, **bad)
+
+
 def test_knn_per_group_quota_and_order(spark):
     from toy_vector_db_spark.operators.knn import knn_per_group
 

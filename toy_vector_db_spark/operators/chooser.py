@@ -26,8 +26,9 @@ re-expressed for our tiers:
   swaps the scan payload for m-byte codes (~dim*4/m compression) and
   re-ranks exact.
 
-Everything here is a PURE function of scalars -> plan, so the policy
-is unit-testable without a SparkSession; ``search_auto`` applies the
+Every decision here is a PURE function of scalars -> plan, so the
+policy is unit-testable without a SparkSession; ``rows`` sizes a
+DataFrame for it, and ``search_auto`` / ``knn_join_auto`` apply the
 chosen plan to a DataFrame.
 """
 
@@ -38,7 +39,6 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Below this corpus size an exact scan beats build+probe even at loose
 # recall targets: a 200k-row scan is one task wave, while an IVF build
@@ -145,6 +145,48 @@ def ivf_nlist(n_rows: int) -> int:
     return max(8, int(4 * math.sqrt(max(1, n_rows))))
 
 
+def rows(df: DataFrame, n: int | None = None) -> int:
+    """Row count for a sizing decision — the one seam every tier pick
+    sizes through. ``n`` wins when the caller already knows it (a
+    deployed service keeps table stats the way Catalyst keeps its own
+    statistics). Otherwise, when the optimized plan is a bare or
+    projected parquet file scan (a Project never changes the row
+    count), the answer is the sum of the files' FOOTER row counts,
+    read driver-side: the same number as ``count()`` with no Spark
+    job, where a count() pays a full job round-trip even though Spark
+    serves it from those same footers. Any other plan — a filter,
+    limit, join, union, sample, cached or local frame, or files on a
+    non-local file system — takes ``df.count()``."""
+    if n is not None:
+        return n
+    files = _parquet_scan_files(df)
+    if files is None:
+        return df.count()
+    import pyarrow.parquet as pq
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def _parquet_scan_files(df: DataFrame) -> list[str] | None:
+    """Local paths of the files behind a bare/projected parquet scan
+    (partition directories included, hidden files excluded — the
+    file index's own listing), or None for any other plan."""
+    from urllib.parse import unquote, urlparse
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while plan.getClass().getSimpleName() == "Project":
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"):
+        return None
+    uris = [urlparse(u) for u in rel.location().inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return None
+    return [unquote(u.path) for u in uris]
+
+
 @dataclass(frozen=True)
 class SearchPlan:
     """A chosen tier plus the parameters to run it with."""
@@ -233,7 +275,7 @@ def choose_search_tier(n_rows: int, dim: int, k: int,
 BROADCAST_MAX_QUERIES = 100_000
 
 
-def choose_join_tier(n_queries: int, n_corpus: int, dim: int, k: int,
+def choose_join_tier(n_queries: int, n_corpus: int, dim: int | None, k: int,
                      recall_target: float = 1.0,
                      exact_max_pairs: int = 10**9,
                      broadcast_max_queries: int = BROADCAST_MAX_QUERIES
@@ -243,13 +285,23 @@ def choose_join_tier(n_queries: int, n_corpus: int, dim: int, k: int,
 
     - ``exact-broadcast``: queries broadcast, every pair scored, exact
       two-phase top-k. Right while |q| x |c| pairs stay scan-shaped.
-    - ``ivf-broadcast``: cluster equi-join prunes candidates to
-      ~nprobe/nlist of the corpus per query; queries still broadcast.
+    - ``ivf-broadcast``: the queries are broadcast-sized, so their
+      probes are picked driver-side and ONE Arrow pass over the corpus
+      scores each row only against the queries probing its cluster
+      (~nprobe/nlist of the corpus per query, no shuffle before the
+      per-query top-k merge).
     - ``ivf-cogroup``: query side is corpus-sized (all-pairs regime) —
       broadcast would not fit, so both sides shuffle ONCE on cluster id
       and each cluster scores as one BLAS matrix op.
+
+    Both IVF tiers run ``knn.knn_join_ivf_arrow`` (its
+    ``broadcast_queries`` flag is the tier). ``dim`` is only
+    range-checked when given: every tier scores raw vectors, so the
+    decision does not depend on it, and ``knn_join_auto`` passes None
+    rather than launch a probe job to learn it.
     """
-    if n_queries < 0 or n_corpus < 0 or dim < 1 or k < 1:
+    if (n_queries < 0 or n_corpus < 0 or k < 1
+            or (dim is not None and dim < 1)):
         raise ValueError("invalid stats")
     pairs = n_queries * n_corpus
     if pairs <= exact_max_pairs or recall_target >= EXACT_RECALL:
@@ -273,7 +325,7 @@ def choose_join_tier(n_queries: int, n_corpus: int, dim: int, k: int,
                           "-> co-partition on cluster id, BLAS per cluster")
     return SearchPlan("ivf-broadcast", params,
                       f"{pairs:.0f} pairs too many for exact "
-                      "-> cluster-pruned equi-join")
+                      "-> broadcast queries, cluster-pruned Arrow scan")
 
 
 def knn_join_auto(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -287,12 +339,18 @@ def knn_join_auto(queries: DataFrame, corpus: DataFrame, k: int = 10,
                   exact_max_pairs: int = 10**9,
                   broadcast_max_queries: int = BROADCAST_MAX_QUERIES):
     """Route a batch similarity join through ``choose_join_tier``.
-    Returns ``(plan, DataFrame)`` with (query_id, vec_id, distance)."""
-    dim_row = corpus.select(F.size(corpus_vec_col)).first()
-    dim = int(dim_row[0]) if dim_row else 1
-    nq = queries.count() if n_queries is None else n_queries
-    nc = corpus.count() if n_corpus is None else n_corpus
-    plan = choose_join_tier(nq, nc, dim, k, recall_target,
+    Returns ``(plan, DataFrame)`` with (query_id, vec_id, distance).
+
+    Both sides are sized through ``rows`` (``n_queries`` / ``n_corpus``
+    skip it), so bare or projected parquet scans cost no sizing job.
+    The exact tier is ``knn.knn_join``; both IVF tiers build one
+    deterministic index (one ``det_sample`` job) and run
+    ``knn.knn_join_ivf_arrow``: ``ivf-broadcast`` collects the queries
+    (one job) and scores the corpus in one Arrow pass, ``ivf-cogroup``
+    shuffles both sides on cluster id."""
+    nq = rows(queries, n_queries)
+    nc = rows(corpus, n_corpus)
+    plan = choose_join_tier(nq, nc, None, k, recall_target,
                             exact_max_pairs, broadcast_max_queries)
     if plan.tier == "exact-broadcast":
         from .knn import knn_join
@@ -302,19 +360,14 @@ def knn_join_auto(queries: DataFrame, corpus: DataFrame, k: int = 10,
                               corpus_id_col=corpus_id_col,
                               corpus_vec_col=corpus_vec_col)
     from .ann import IvfIndex
-    from .knn import knn_join_ivf, knn_join_ivf_arrow
+    from .knn import knn_join_ivf_arrow
     idx = IvfIndex.build_deterministic(
         corpus, n_centroids=min(plan.params["n_centroids"], max(1, nc)),
         id_col=corpus_id_col, vec_col=corpus_vec_col)
-    nprobe = plan.params["nprobe"]
-    if plan.tier == "ivf-cogroup":
-        return plan, knn_join_ivf_arrow(queries, idx, k=k, nprobe=nprobe,
-                                        metric=metric,
-                                        query_id_col=query_id_col,
-                                        query_vec_col=query_vec_col)
-    return plan, knn_join_ivf(queries, idx, k=k, nprobe=nprobe,
-                              metric=metric, query_id_col=query_id_col,
-                              query_vec_col=query_vec_col)
+    return plan, knn_join_ivf_arrow(
+        queries, idx, k=k, nprobe=plan.params["nprobe"], metric=metric,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        broadcast_queries=plan.tier == "ivf-broadcast")
 
 
 def search_auto(df: DataFrame, query_vec: Sequence[float], k: int = 10,
@@ -328,11 +381,11 @@ def search_auto(df: DataFrame, query_vec: Sequence[float], k: int = 10,
     """Route one top-k search through ``choose_search_tier``.
 
     Returns ``(plan, DataFrame)`` — callers that only want the frame
-    drop the plan; tests assert on it. ``n_rows`` skips the count when
-    the caller already knows the corpus size (a deployed service
-    caches table stats exactly like Catalyst's own statistics)."""
+    drop the plan; tests assert on it. The corpus is sized through
+    ``rows``: ``n_rows`` when the caller already knows it, else parquet
+    footers for a bare or projected scan (no job), else a count()."""
     qvec = list(query_vec)
-    n = df.count() if n_rows is None else n_rows
+    n = rows(df, n_rows)
     plan = choose_search_tier(n, len(qvec), k, metric, recall_target,
                               memory_budget_bytes, exact_max_rows)
     if plan.tier == "flat-column":

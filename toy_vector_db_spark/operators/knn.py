@@ -500,6 +500,32 @@ def probe_clusters_expr(centroids, qvec_col: Column, nprobe: int) -> Column:
                        lambda s: s["i"])
 
 
+def _probe_np(Q, centroids, nprobe: int):
+    """Driver-side twin of ``probe_clusters_expr`` for a collected
+    query matrix: each row's ``nprobe`` nearest centroid indexes, with
+    the same arithmetic per tier and the same (distance, index) order
+    — ``_centroid_d2`` + stable argsort above EXPR_MAX_CENTROIDS, the
+    expression tier's left fold of squared differences (then sqrt) at
+    or below it. Query rows go in chunks of <=4e7 distance cells."""
+    import numpy as np
+    C = np.asarray(centroids, dtype=np.float64)
+    cn = (C ** 2).sum(1)
+    take = min(nprobe, len(C))
+    out = np.empty((len(Q), take), dtype=np.int64)
+    step = max(1, int(4e7) // len(C))
+    for s in range(0, len(Q), step):
+        X = Q[s:s + step]
+        if len(C) > EXPR_MAX_CENTROIDS:
+            d = _centroid_d2(X, C, cn)
+        else:
+            d = np.zeros((len(X), len(C)))
+            for j in range(C.shape[1]):
+                d = d + (X[:, None, j] - C[None, :, j]) ** 2
+            d = np.sqrt(d)
+        out[s:s + step] = np.argsort(d, axis=1, kind="stable")[:, :take]
+    return out
+
+
 def _np_dists(Q, C, metric: str):
     """(q, c) distance matrix, NumPy/BLAS — same metric semantics as
     functions/distance.py (cosine zero-norm => 1.0, clamped sim)."""
@@ -535,36 +561,91 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
                        nprobe: int = 3, metric: str = "euclidean",
                        query_id_col: str = "query_id",
                        query_vec_col: str = "query_vec",
-                       dist_col: str = "distance") -> DataFrame:
-    """The BLAS tier of the IVF similarity join — built for the
-    all-pairs / corpus-sized-queries regime where the Column-expression
-    tier's per-pair interpreted fold dominates (measured 28 s vs ~2 s
-    at sf0.1 all-pairs).
+                       dist_col: str = "distance",
+                       broadcast_queries: bool = False) -> DataFrame:
+    """The BLAS tier of the IVF similarity join, in two modes. Same
+    probes, same candidates and same (distance, corpus id) answers as
+    the Column-expression ``knn_join_ivf`` in either mode (parity-
+    tested on every metric), without its per-pair interpreted fold.
 
-    Plan shape: both sides shuffle ONCE on cluster id (the same
-    co-partitioning as ``knn_join_ivf(broadcast_queries=False)``), then
-    a cogroup-applyInPandas scores each cluster's queries against its
+    ``broadcast_queries=False`` (all-pairs / corpus-sized queries):
+    both sides shuffle ONCE on cluster id (the same co-partitioning as
+    ``knn_join_ivf(broadcast_queries=False)``), then a
+    cogroup-applyInPandas scores each cluster's queries against its
     corpus rows as one (q, c) matrix op and emits only the per-query
     local top-k; the global merge reduces queries x nprobe x k rows.
-    Per-cluster candidate work is identical to the Column tier — same
-    probes, same candidates, same answers (shared value oracle).
-    """
-    import numpy as np
-    import pandas as pd
+    Measured 28 s vs ~2 s for the Column tier at sf0.1 all-pairs.
 
+    ``broadcast_queries=True`` (the chooser's ``ivf-broadcast`` tier —
+    the query side is broadcast-sized by that contract): the queries
+    are collected, each query's ``nprobe`` clusters are picked
+    driver-side in ``probe_clusters_expr``'s order, and the query
+    matrix ships once as a broadcast variable. One mapInPandas pass
+    over the live index table then scores each row's stored cluster
+    only against the queries probing it — the direct euclidean form
+    (no cancellation: duplicate vectors score exactly 0), ``_np_dists``
+    for the other metrics, blocks chunked to <=4e7 cells like the
+    cogroup kernel — and emits each query's batch-local top-k, so the
+    one shuffle carries <= queries x batches x k rows. Null and
+    wrong-length corpus vectors are excluded; queries with a null
+    vector are dropped; all queries must share the index's dimension
+    (``ValueError`` otherwise, as in ``knn_join_arrow``). The kernel
+    is one Python pass per task, with no probe UDF and no broadcast
+    hash join; only an index whose clusters are not yet materialized
+    (a fresh build) adds its assign pass to the same stage.
+
+    Column broadcast join (``knn_join_ivf``) vs this mode, sf0.1
+    embeddings (2,000 x 64), euclidean, k=10, nprobe ~ 20 % of nlist
+    (the chooser's recall 0.9 rule), deterministic index built and
+    cached once, best of 3 collects, 4-core host
+    (``python tools/tier_probe.py join``), seconds:
+
+      batch  tier     nlist 16    32    64   128   179   256   565
+          1  column       0.87  0.68  0.60  0.55  0.59  0.60  0.52
+          1  this         0.50  0.41  0.36  0.41  0.31  0.36  0.40
+         10  column       0.94  0.60  0.52  0.53  0.67  0.48  0.62
+         10  this         0.36  0.36  0.44  0.34  0.40  0.31  0.37
+        100  column       1.76  1.36  1.11  1.38  1.26  1.07  1.04
+        100  this         0.46  0.38  0.36  0.41  0.33  0.39  0.37
+       1000  column       8.25  7.33  6.26  7.66  7.48  7.97  9.50
+       1000  this         0.50  0.48  0.52  0.60  0.70  0.73  0.85
+
+    The Column tier wins no cell, so there is no crossover knob: the
+    chooser sends every broadcast-sized IVF join here.
+    """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    if metric not in ("euclidean", "cosine", "dotproduct", "manhattan"):
+        raise ValueError(f"unsupported metric: {metric!r}")
     pcol = index.PARTITION_COL
-    probes = probe_clusters_expr(index.centroids,
-                                 F.col(query_vec_col), nprobe)
-    q = queries.select(F.col(query_id_col).alias("__qid"),
-                       F.col(query_vec_col).alias("__qvec"),
-                       F.explode(probes).alias(pcol))
     corpus = index._live(index.table).select(
         F.col(index.id_col).alias("__cid"),
         F.col(index.vec_col).alias("__cvec"), pcol)
+    q = queries.select(F.col(query_id_col).alias("__qid"),
+                       F.col(query_vec_col).alias("__qvec"))
+    pairs_of = _ivf_broadcast_pairs if broadcast_queries \
+        else _ivf_cogroup_pairs
+    pairs = pairs_of(q, corpus, index.centroids, k, nprobe, metric, pcol,
+                     dist_col)
+    topk = _per_query_topk(pairs, k, dist_col, two_phase=False)
+    return topk.select(F.col("__qid").alias(query_id_col),
+                       F.col("__cid").alias(index.id_col),
+                       F.col(dist_col))
+
+
+def _ivf_cogroup_pairs(q: DataFrame, corpus: DataFrame, centroids,
+                       k: int, nprobe: int, metric: str, pcol: str,
+                       dist_col: str) -> DataFrame:
+    """(__qid, __cid, dist) per-cluster local top-k rows of the
+    ``broadcast_queries=False`` mode of ``knn_join_ivf_arrow``: ``q``
+    is (__qid, __qvec), ``corpus`` is (__cid, __cvec, cluster column)."""
+    import numpy as np
+    import pandas as pd
+
+    q = q.withColumn(pcol, F.explode(probe_clusters_expr(
+        centroids, F.col("__qvec"), nprobe)))
 
     def score(key, qpdf, cpdf):
         if not len(qpdf) or not len(cpdf):
@@ -594,12 +675,102 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
 
     qid_t = dict(q.dtypes)["__qid"]
     cid_t = dict(corpus.dtypes)["__cid"]
-    pairs = q.groupBy(pcol).cogroup(corpus.groupBy(pcol)).applyInPandas(
+    return q.groupBy(pcol).cogroup(corpus.groupBy(pcol)).applyInPandas(
         score, f"__qid {qid_t}, __cid {cid_t}, {dist_col} double")
-    topk = _per_query_topk(pairs, k, dist_col, two_phase=False)
-    return topk.select(F.col("__qid").alias(query_id_col),
-                       F.col("__cid").alias(index.id_col),
-                       F.col(dist_col))
+
+
+def _ivf_broadcast_pairs(q: DataFrame, corpus: DataFrame, centroids,
+                         k: int, nprobe: int, metric: str, pcol: str,
+                         dist_col: str) -> DataFrame:
+    """(__qid, __cid, dist) batch-local top-k rows of the
+    ``broadcast_queries=True`` mode of ``knn_join_ivf_arrow``: ``q`` is
+    (__qid, __qvec), ``corpus`` is (__cid, __cvec, cluster column)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType([q.schema["__qid"], corpus.schema["__cid"],
+                         StructField(dist_col, DoubleType())])
+    rows = [r for r in q.collect() if r[1] is not None]
+    spark = q.sparkSession
+    if not rows:
+        return spark.createDataFrame([], schema)
+    dims = {len(r[1]) for r in rows}
+    if len(dims) != 1:
+        raise ValueError(f"queries must share one dimension, got {dims}")
+    d, index_dim = dims.pop(), np.shape(centroids)[1]
+    if d != index_dim:
+        raise ValueError(f"query dimension {d} != index dimension "
+                         f"{index_dim}")
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    qids = np.empty(len(rows), dtype=object)
+    qids[:] = [r[0] for r in rows]
+    # cluster -> ascending row indexes of the queries probing it
+    probes = _probe_np(Q, centroids, nprobe)
+    flat_c = probes.ravel()
+    o = np.argsort(flat_c, kind="stable")
+    clusters, starts = np.unique(flat_c[o], return_index=True)
+    flat_q = np.repeat(np.arange(len(Q)), probes.shape[1])[o]
+    by_cluster = dict(zip(clusters.tolist(), np.split(flat_q, starts[1:])))
+    bc = spark.sparkContext.broadcast((Q, qids, by_cluster))
+    # cells per query row of a distance block: the direct euclidean
+    # form materializes the (q, c, dim) difference tensor
+    width = d if metric == "euclidean" else 1
+
+    def block_topk(Qb, M, cids, qrows):
+        """Score one cluster's rows against the queries probing it and
+        keep, per query, every candidate up to its k-th distance (ties
+        included, so the (distance, id) cut below stays exact)."""
+        if metric == "euclidean":
+            D = np.sqrt(((Qb[:, None, :] - M[None, :, :]) ** 2).sum(-1))
+        else:
+            D = _np_dists(Qb, M, metric)
+        if D.shape[1] > k:
+            kth = np.partition(D, k - 1, axis=1)[:, k - 1]
+            r, c = np.nonzero(D <= kth[:, None])
+        else:
+            r, c = np.divmod(np.arange(D.size), D.shape[1])
+        return qrows[r], cids[c], D[r, c]
+
+    def score(batches):
+        Q, qids, by_cluster = bc.value
+        probed = np.fromiter(by_cluster, dtype=np.int64)
+        for pdf in batches:
+            cl = pdf[pcol].to_numpy()
+            vecs = pdf["__cvec"].to_numpy()
+            keep = np.flatnonzero(np.isin(cl, probed))
+            keep = keep[np.array([vecs[i] is not None and len(vecs[i]) == d
+                                  for i in keep], dtype=bool)]
+            if not len(keep):
+                continue
+            keep = keep[np.argsort(cl[keep], kind="stable")]
+            cl = cl[keep].astype(np.int64)
+            M = np.stack([np.asarray(v, dtype=np.float64)
+                          for v in vecs[keep]])
+            cids = pdf["__cid"].to_numpy()[keep]
+            cuts = np.flatnonzero(np.diff(cl)) + 1
+            parts = []
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(cl)]):
+                qrows = by_cluster[int(cl[lo])]
+                step = max(1, int(4e7) // ((hi - lo) * width))
+                for s in range(0, len(qrows), step):
+                    sub = qrows[s:s + step]
+                    parts.append(block_topk(Q[sub], M[lo:hi],
+                                            cids[lo:hi], sub))
+            qq, cc, dd = (np.concatenate(x) for x in zip(*parts))
+            # per-query top-k of this batch in (distance, corpus id)
+            # order: sort by (query, distance, id), keep each query's
+            # first k
+            o = np.lexsort((cc, dd, qq))
+            qq, cc, dd = qq[o], cc[o], dd[o]
+            pos = np.arange(len(qq))
+            first = np.maximum.accumulate(
+                np.where(np.r_[True, qq[1:] != qq[:-1]], pos, 0))
+            top = pos - first < k
+            yield pd.DataFrame({"__qid": qids[qq[top]], "__cid": cc[top],
+                                dist_col: dd[top]})
+
+    return corpus.mapInPandas(score, schema)
 
 
 def knn_join_ivf(queries: DataFrame, index, k: int = DEFAULT_K,
