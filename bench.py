@@ -441,11 +441,15 @@ def per_query_lines(compact: dict) -> list[str]:
     """
     lines = [json.dumps({"queries": compact}, separators=(",", ":"))]
     names = sorted(compact)
+    # a chunk line is {"queries_NofM":{...}}: reserve the wrapper (N, M
+    # up to three digits) and size each entry as it serializes,
+    # separating comma included
+    budget = QUERY_LINE_BYTES - len('{"queries_999of999":}')
     chunks: list[dict] = [{}]
     size = 2
     for n in names:
-        ent = len(n) + 10
-        if chunks[-1] and size + ent > QUERY_LINE_BYTES:
+        ent = len(json.dumps({n: compact[n]}, separators=(",", ":"))) - 1
+        if chunks[-1] and size + ent > budget:
             chunks.append({})
             size = 2
         chunks[-1][n] = compact[n]
@@ -518,6 +522,11 @@ def main() -> None:
     # absolute reference every later probe divides by (ADVICE r12:
     # the shipped per-host constant mis-calibrated everywhere else)
     calib_settled = calib_settled_constant()
+    # pinned into the env so the re-measure children share this idle
+    # reference instead of measuring their own right after the parent
+    # JVM exits (tools/bench_chunks.py does the same)
+    if calib_settled > 0:
+        os.environ["SPARK_GRAFT_CALIB_S"] = str(calib_settled)
 
     # warm-up: JVM, codegen, parquet footers
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()

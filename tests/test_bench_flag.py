@@ -291,6 +291,24 @@ def test_per_query_lines_fit_driver_tail(bench):
     assert len(lines[-1]) + 350 + bench.QUERY_LINE_BYTES <= 2000
 
 
+def test_per_query_lines_chunks_fit_with_long_names_and_values(bench):
+    # derived-scale timings run to 7+ characters (>= 1000 s) and names
+    # can be long: every chunk line, wrapper included, stays in budget
+    import json
+    compact = {f"a_rather_long_query_name_for_sizing_{i:03d}":
+               round(1000.25 + i * 37.5, 2) for i in range(163)}
+    assert min(len(json.dumps(v)) for v in compact.values()) >= 7
+    lines = bench.per_query_lines(compact)
+    assert len(lines) > 3
+    for ln in lines[1:-1]:
+        assert len(ln) <= bench.QUERY_LINE_BYTES, len(ln)
+    rebuilt = {}
+    for ln in lines[1:-1]:
+        (key, ch), = json.loads(ln).items()
+        rebuilt.update(ch)
+    assert list(rebuilt) == sorted(compact) and rebuilt == compact
+
+
 def test_run_subset_returns_child_summary(bench, monkeypatch):
     import json
     out = "\n".join([

@@ -247,6 +247,7 @@ def test_rows_reads_footers_of_file_scans(spark, emb_copy, tmp_path):
     from toy_vector_db_spark.operators.ann import IvfIndex
     from toy_vector_db_spark.operators.chooser import rows
     from toy_vector_db_spark.plans.catalog import CollectionCatalog
+    from toy_vector_db_spark.sources.tables import ensure_parallelism
     emb = spark.read.parquet(emb_copy)
     emb.write.partitionBy("label").parquet(str(tmp_path / "by_label"))
     IvfIndex.build_deterministic(emb, n_centroids=4).save(
@@ -261,12 +262,15 @@ def test_rows_reads_footers_of_file_scans(spark, emb_copy, tmp_path):
         "partition directory": spark.read.parquet(str(tmp_path / "by_label")),
         "saved index": IvfIndex.load(spark, str(tmp_path / "ivf")).table,
         "catalog": cat.read("c"),
+        # repartitions never change the row count: every _tp() read
+        # goes through ensure_parallelism
+        "ensure_parallelism": ensure_parallelism(emb),
+        "repartitioned by key": emb.repartition(7, "vec_id"),
     }
     for name, df in scans.items():
         want = df.count()
         got, jobs = _jobs(spark, lambda: rows(df))
         assert (got, jobs) == (want, 0), name
-    assert rows(emb, n=3) == 3
 
 
 def test_rows_falls_back_to_count(spark, emb_copy):
@@ -286,12 +290,15 @@ def test_rows_falls_back_to_count(spark, emb_copy):
 
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
                                 "/root/testdata/sf0.01"])
-def test_footer_sizing_leaves_tier_picks_unchanged(spark, sf, tmp_path):
-    # the same decisions as sizing with count(): both entry points, on
+def test_footer_sizing_leaves_tier_picks_unchanged(spark, sf, tmp_path,
+                                                   monkeypatch):
+    # the same decisions as sizing with count(): every entry point, on
     # the exact and the pruned sides of each crossover
     import shutil
+    from toy_vector_db_spark.operators import chooser
     from toy_vector_db_spark.operators.chooser import (
-        _parquet_scan_files, knn_join_auto, search_auto)
+        _parquet_scan_files, choose_join_tier, knn_join_auto, search_auto)
+    from toy_vector_db_spark.workload import _tp
     shutil.copy(f"{sf}/embeddings.parquet", tmp_path)
     emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
     assert _parquet_scan_files(emb) is not None
@@ -301,12 +308,82 @@ def test_footer_sizing_leaves_tier_picks_unchanged(spark, sf, tmp_path):
     qvec = emb.first()["embedding"]
     for kw in ({}, {"recall_target": 0.9, "exact_max_pairs": 10}):
         a, _ = knn_join_auto(queries, emb, k=5, **kw)
-        b, _ = knn_join_auto(queries, emb, k=5, n_queries=nq, n_corpus=nc,
-                             **kw)
-        assert a == b, kw
+        assert a == choose_join_tier(nq, nc, None, 5, **kw), kw
     for kw in ({}, {"recall_target": 0.9, "exact_max_rows": 10},
                {"metric": "cosine", "recall_target": 0.5,
                 "exact_max_rows": 10}):
         a, _ = search_auto(emb, qvec, k=5, **kw)
-        b, _ = search_auto(emb, qvec, k=5, n_rows=nc, **kw)
-        assert a == b, kw
+        assert a == choose_search_tier(nc, len(qvec), 5, **kw), kw
+    # text_tier decides as `count() >= crossover` did, sizing a _tp
+    # read (ensure_parallelism) from its footers
+    shutil.copy(f"{sf}/documents.parquet", tmp_path)
+    docs = _tp(spark, str(tmp_path), "documents")
+    nd = docs.count()
+    for crossover in (chooser.TEXT_ARROW_MIN_DOCS, nd, nd + 1):
+        monkeypatch.setattr(chooser, "TEXT_ARROW_MIN_DOCS", crossover)
+        want = "arrow" if nd >= crossover else "column"
+        assert _jobs(spark, lambda: chooser.text_tier(docs)) == (want, 0)
+
+
+# -- text tier seam -----------------------------------------------------------
+
+def test_text_tier_crossover_boundary(spark):
+    from toy_vector_db_spark.operators.chooser import (
+        TEXT_ARROW_MIN_DOCS, text_tier)
+    assert text_tier(spark.range(TEXT_ARROW_MIN_DOCS - 1)) == "column"
+    assert text_tier(spark.range(TEXT_ARROW_MIN_DOCS)) == "arrow"
+    # explicit tiers pass through unsized
+    assert text_tier(spark.range(1), "arrow") == "arrow"
+    assert text_tier(spark.range(TEXT_ARROW_MIN_DOCS), "column") == "column"
+
+
+def _text_entry_points():
+    from toy_vector_db_spark.operators import crossdoc, decontam, dedup
+    from toy_vector_db_spark.operators.chooser import text_tier
+    pairs = lambda d: d.select(F.col("doc_id").alias("id_a"),
+                               F.col("doc_id").alias("id_b"))
+    return {
+        "text_tier": text_tier,
+        "shingles_tiered": lambda d, t: dedup.shingles_tiered(d, tier=t),
+        "minhash_signatures_tiered":
+            lambda d, t: dedup.minhash_signatures_tiered(d, tier=t),
+        "minhash_lsh_pairs":
+            lambda d, t: dedup.minhash_lsh_pairs(d, sig_tier=t),
+        "fingerprints_tiered":
+            lambda d, t: dedup.fingerprints_tiered(d, tier=t),
+        "simhash_tiered": lambda d, t: dedup.simhash_tiered(d, tier=t),
+        "simhash_dup_clusters":
+            lambda d, t: dedup.simhash_dup_clusters(d, tier=t),
+        "simhash_hamming_pairs":
+            lambda d, t: dedup.simhash_hamming_pairs(d, tier=t),
+        "simhash_neighbor_counts":
+            lambda d, t: dedup.simhash_neighbor_counts(d, tier=t),
+        "ngram_jaccard_pairs":
+            lambda d, t: dedup.ngram_jaccard_pairs(d, pairs(d), tier=t),
+        "exploded_shingles":
+            lambda d, t: crossdoc.exploded_shingles(d, tier=t),
+        "shared_shingle_stats":
+            lambda d, t: crossdoc.shared_shingle_stats(d, tier=t),
+        "shingle_hash_set":
+            lambda d, t: decontam.shingle_hash_set(d, tier=t),
+        "contamination_report":
+            lambda d, t: decontam.contamination_report(d, d, train_tier=t),
+    }
+
+
+@pytest.mark.parametrize("entry", sorted(_text_entry_points()))
+def test_unknown_text_tier_raises_at_every_entry_point(spark, entry):
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unknown text tier 'arow'"):
+        _text_entry_points()[entry](docs, "arow")
+
+
+def test_streaming_frames_take_the_column_tier_under_auto(spark):
+    from toy_vector_db_spark.operators.chooser import text_tier
+    from toy_vector_db_spark.operators.crossdoc import exploded_shingles
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").alias("doc_id"),
+        F.col("value").cast("string").alias("text"))
+    assert text_tier(stream) == "column"
+    assert text_tier(stream, "arrow") == "arrow"
+    assert exploded_shingles(stream).isStreaming

@@ -79,25 +79,26 @@ def test_minhash_lsh_arrow_tier_same_pairs(docs):
     assert col == arr and col
 
 
-def test_minhash_signatures_tiered_routing(docs):
+def test_minhash_signatures_tiered_routing(docs, monkeypatch):
     """The standalone tiered entry point: both explicit tiers are
-    bit-identical, auto routes by n_docs across the crossover, and an
-    unknown tier name raises."""
+    bit-identical, auto routes by corpus size across the crossover,
+    and an unknown tier name raises."""
     import pytest
-    from toy_vector_db_spark.operators.dedup import (
-        _SIG_ARROW_MIN_DOCS, minhash_signatures_tiered)
+    from toy_vector_db_spark.operators import chooser
+    from toy_vector_db_spark.operators.dedup import minhash_signatures_tiered
     sig = lambda **kw: {r["doc_id"]: r["sig"] for r in
                         minhash_signatures_tiered(docs, **kw).collect()}
     col, arr = sig(tier="column"), sig(tier="arrow")
     assert col == arr and col
-    # auto: small corpus -> column plan (no mapInPandas), big n_docs
-    # hint -> arrow plan (mapInPandas node present)
-    small = minhash_signatures_tiered(docs, n_docs=10)
-    big = minhash_signatures_tiered(docs, n_docs=_SIG_ARROW_MIN_DOCS)
+    # auto: small corpus -> column plan (no mapInPandas); with the
+    # crossover lowered under it -> arrow plan (mapInPandas present)
+    small = minhash_signatures_tiered(docs)
+    assert sig() == col
+    monkeypatch.setattr(chooser, "TEXT_ARROW_MIN_DOCS", 1)
+    big = minhash_signatures_tiered(docs)
     assert "MapInPandas" not in small._jdf.queryExecution().toString()
     assert "MapInPandas" in big._jdf.queryExecution().toString()
-    assert sig(n_docs=10) == col
-    with pytest.raises(ValueError, match="sig tier"):
+    with pytest.raises(ValueError, match="unknown text tier"):
         minhash_signatures_tiered(docs, tier="bogus")
 
 
@@ -163,15 +164,15 @@ def test_sig_tier_parity_null_and_empty_text(spark):
     assert got == spark_sh and got[0] == frozenset([""])
 
 
-def test_simhash_tier_parity_and_routing(spark, docs):
+def test_simhash_tier_parity_and_routing(spark, docs, monkeypatch):
     """simhash Column fold vs Arrow twin: bit-identical values on the
     corpus AND the tokenizer edge texts (null, empty, punct-only,
     unicode non-JVM whitespace, short, mixed case); auto routes by
     corpus size without changing values; unknown tier raises."""
     import pytest
 
-    from toy_vector_db_spark.operators.dedup import (
-        _SIG_ARROW_MIN_DOCS, simhash, simhash_tiered)
+    from toy_vector_db_spark.operators import chooser
+    from toy_vector_db_spark.operators.dedup import simhash, simhash_tiered
     edge = [None, "", "  ", "!!! ...", "one", "A\xa0B c d",
             "Mixed CASE, with punct! and words", "a  b\t\nc d e"]
     both = docs.select("doc_id", "text").union(
@@ -187,8 +188,9 @@ def test_simhash_tier_parity_and_routing(spark, docs):
                               tier="arrow").collect()}
         assert col == arr and col
     assert col[1000] == col[1001]            # null == empty
-    small = simhash_tiered(docs, n_docs=10)
-    big = simhash_tiered(docs, n_docs=_SIG_ARROW_MIN_DOCS)
+    small = simhash_tiered(docs)
+    monkeypatch.setattr(chooser, "TEXT_ARROW_MIN_DOCS", 1)
+    big = simhash_tiered(docs)
     assert "MapInPandas" not in small._jdf.queryExecution().toString()
     assert "MapInPandas" in big._jdf.queryExecution().toString()
     direct = {r["doc_id"]: r["h"] for r in docs.select(
@@ -196,19 +198,19 @@ def test_simhash_tier_parity_and_routing(spark, docs):
     got16 = {r["doc_id"]: r["simhash"] for r in
              simhash_tiered(docs, bits=16, tier="arrow").collect()}
     assert {k: v for k, v in got16.items() if k in direct} == direct
-    with pytest.raises(ValueError, match="simhash tier"):
+    with pytest.raises(ValueError, match="unknown text tier"):
         simhash_tiered(docs, tier="bogus")
 
 
-def test_fingerprints_tier_parity_and_routing(spark, docs):
+def test_fingerprints_tier_parity_and_routing(spark, docs, monkeypatch):
     """fingerprint + rolling_fp Column vs Arrow: bit-identical on the
     corpus and the tokenizer edge texts (null stays NULL in both —
     the fingerprint family's documented null semantics, unlike the
     shingle family's null->empty); auto routes by corpus size."""
     import pytest
 
-    from toy_vector_db_spark.operators.dedup import (
-        _SIG_ARROW_MIN_DOCS, fingerprints_tiered)
+    from toy_vector_db_spark.operators import chooser
+    from toy_vector_db_spark.operators.dedup import fingerprints_tiered
     edge = [None, "", "  ", "!!! ...", "one", "one two three",
             "A\xa0B c d", "Mixed CASE, with punct! and words here"]
     both = docs.select("doc_id", "text").union(
@@ -220,11 +222,12 @@ def test_fingerprints_tier_parity_and_routing(spark, docs):
     assert col == arr
     by_id = dict((r[0], r[1:]) for r in col)
     assert by_id[1000] == (None, None)       # null propagates (family rule)
-    small = fingerprints_tiered(docs, n_docs=10)
-    big = fingerprints_tiered(docs, n_docs=_SIG_ARROW_MIN_DOCS)
+    small = fingerprints_tiered(docs)
+    monkeypatch.setattr(chooser, "TEXT_ARROW_MIN_DOCS", 1)
+    big = fingerprints_tiered(docs)
     assert "MapInPandas" not in small._jdf.queryExecution().toString()
     assert "MapInPandas" in big._jdf.queryExecution().toString()
-    with pytest.raises(ValueError, match="fingerprint tier"):
+    with pytest.raises(ValueError, match="unknown text tier"):
         fingerprints_tiered(docs, tier="bogus")
 
 
@@ -281,12 +284,14 @@ def test_all_tier_families_parity_on_random_unicode(spark):
     assert fp_c == fp_a
 
 
-def test_minhash_auto_tier_thresholds(docs):
+def test_minhash_auto_tier_thresholds(docs, monkeypatch):
     """auto routes by corpus size: below the crossover it must build
-    the Column-fold plan (no mapInPandas/ArrowEval), above it the
-    Arrow plan — decided from n_docs without an extra count job."""
-    small = minhash_lsh_pairs(docs, verify=False, n_docs=100)
-    big = minhash_lsh_pairs(docs, verify=False, n_docs=1_000_000)
+    the Column-fold plan (no mapInPandas/ArrowEval), at or above it
+    the Arrow plan."""
+    from toy_vector_db_spark.operators import chooser
+    small = minhash_lsh_pairs(docs, verify=False)
+    monkeypatch.setattr(chooser, "TEXT_ARROW_MIN_DOCS", 1)
+    big = minhash_lsh_pairs(docs, verify=False)
     small_plan = small._jdf.queryExecution().executedPlan().toString()
     big_plan = big._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in small_plan

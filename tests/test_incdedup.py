@@ -97,6 +97,14 @@ def test_sig_tier_parity_on_store_and_check(spark, tmp_path):
     assert ra == rb
 
 
+def test_misspelled_sig_tier_raises_instead_of_building(spark, tmp_path):
+    # a typo'd tier name must not silently build with the Column tier
+    st = MinHashStore(str(tmp_path / "s"), sig_tier="arow")
+    with pytest.raises(ValueError, match="unknown text tier 'arow'"):
+        st.build(_corpus(spark))
+    assert not (tmp_path / "s" / "store").exists()
+
+
 def test_meta_guard_rejects_mismatched_params(spark, store):
     batch = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
     probe = MinHashStore(store.path, num_perm=16, bands=4)

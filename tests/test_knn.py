@@ -183,11 +183,6 @@ def test_knn_auto_tier_selection(spark):
     assert "MapInPandas" not in narrow_plan and "ArrowEval" not in narrow_plan
     assert narrow.first()["vec_id"] == "a"
 
-    # knob override: force the Column tier even for wide vectors
-    forced = knn_auto(e, [0.1] * dim, k=3, arrow_min_dim=dim + 1)
-    forced_plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in forced_plan
-
 
 def test_knn_join_ivf_shuffle_path_equals_broadcast(spark):
     # broadcast_queries=False (the both-sides-large tier) must return

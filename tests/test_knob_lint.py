@@ -42,6 +42,12 @@ Scope (deliberately narrow so the signal stays strong):
   construction), as are calls in the loop's ITER expression (one job,
   iterating the result).
 
+A second rule keeps tier CROSSOVERS in the same module: an
+``if <name ending in tier> == "auto":`` block outside ``chooser.py``
+must call into ``chooser`` (``text_tier``, ``cc_local_fits``, ...) —
+a fresh count-then-compare prologue is how one crossover became nine
+copies of itself.
+
 NOT in scope: convergence/depth/radius knobs (``max_iter``,
 ``max_hops``, ``max_hamming``), display widths, algorithm parameters
 (``num_perm``, ``bands``, ``bits``, ``k``) — those change answers or
@@ -223,5 +229,102 @@ def test_lint_catches_a_raw_knob(tmp_path):
         assert len(misses) == 6, misses
         assert sum("call-site" in m for m in misses) == 3, misses
         assert sum("driver-round loop" in m for m in misses) == 1, misses
+    finally:
+        probe.unlink()
+
+
+def _ref_name(node) -> str:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return ""
+
+
+def _is_auto_tier_test(test) -> bool:
+    """``<x>tier == "auto"`` in either operand order, ``x`` a name or
+    an attribute."""
+    if not (isinstance(test, ast.Compare) and len(test.ops) == 1
+            and isinstance(test.ops[0], ast.Eq)):
+        return False
+    a, b = test.left, test.comparators[0]
+    return any(isinstance(c, ast.Constant) and c.value == "auto"
+               and _ref_name(o).endswith("tier")
+               for c, o in ((a, b), (b, a)))
+
+
+def _auto_tier_findings():
+    for f in sorted(PKG.rglob("*.py")):
+        if f.name == "chooser.py":
+            continue
+        src = f.read_text()
+        tree = ast.parse(src)
+        # names bound from the chooser module anywhere in the file,
+        # and names the module itself is bound to
+        funcs, mods = set(), set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if (n.module or "").split(".")[-1] == "chooser":
+                        funcs.add(a.asname or a.name)
+                    elif a.name == "chooser":
+                        mods.add(a.asname or a.name)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.If)
+                    and _is_auto_tier_test(node.test)):
+                continue
+            routed = False
+            for stmt in node.body:
+                for c in ast.walk(stmt):
+                    if not isinstance(c, ast.Call):
+                        continue
+                    fn = c.func
+                    if ((isinstance(fn, ast.Name) and fn.id in funcs)
+                            or (isinstance(fn, ast.Attribute)
+                                and isinstance(fn.value, ast.Name)
+                                and fn.value.id in mods)):
+                        routed = True
+            if not routed:
+                yield (f"{f.relative_to(PKG.parent)}:{node.lineno} "
+                       "auto tier pick that does not call into chooser")
+
+
+def test_every_auto_tier_pick_routes_through_chooser():
+    misses = list(_auto_tier_findings())
+    assert not misses, (
+        "tier='auto' resolved outside operators/chooser.py:\n  "
+        + "\n  ".join(misses)
+        + "\nPut the crossover in chooser (text_tier, cc_local_fits, "
+        "choose_*_tier) and call it from the auto branch.")
+
+
+def test_auto_tier_lint_catches_a_local_crossover():
+    """Guard the guard: a count-then-compare prologue fires, routed
+    auto branches (imported function or module attribute) do not."""
+    probe = PKG / "_lint_tier_probe_tmp.py"
+    probe.write_text(
+        "from . import chooser\n"
+        "def bad(df, tier='auto'):\n"
+        "    if tier == 'auto':\n"
+        "        tier = 'arrow' if df.count() >= 10 else 'column'\n"
+        "    return tier\n"
+        "class Store:\n"
+        "    def bad(self, df):\n"
+        "        if 'auto' == self.sig_tier:\n"
+        "            return df.count() >= 10\n"
+        "def good(df, tier='auto'):\n"
+        "    if tier == 'auto':\n"
+        "        from .chooser import text_tier\n"
+        "        tier = text_tier(df)\n"
+        "    return tier\n"
+        "def good_mod(df, tier='auto'):\n"
+        "    if tier == 'auto':\n"
+        "        tier = chooser.text_tier(df)\n"
+        "    return tier\n")
+    try:
+        misses = [m for m in _auto_tier_findings()
+                  if "_lint_tier_probe_tmp" in m]
+        assert [m.split(":")[1].split()[0] for m in misses] == ["3", "8"], \
+            misses
     finally:
         probe.unlink()

@@ -62,8 +62,8 @@ def main() -> None:
 
     t0 = time.time()
     pairs = minhash_lsh_pairs(corpus, num_perm=8, bands=4, shingle_k=3,
-                              threshold=0.5, max_bucket=64,
-                              n_docs=n).localCheckpoint()
+                              threshold=0.5,
+                              max_bucket=64).localCheckpoint()
     np = pairs.count()
     print(f"minhash_lsh_pairs (cap=64): {time.time() - t0:.1f}s — "
           f"{np} verified pairs (family contributes ~{fam} star pairs, "

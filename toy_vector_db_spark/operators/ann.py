@@ -36,6 +36,7 @@ import pandas as pd  # module-level: pandas_udf resolves string hints here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .chooser import rows as _rows
 from .knn import knn
 
 # ---------------------------------------------------------------------------
@@ -345,7 +346,7 @@ class IvfIndex(_MaintainableIndex):
         from pyspark.ml.functions import array_to_vector
 
         feats_col = array_to_vector(F.col(vec_col).cast("array<double>"))
-        n = df.count()
+        n = _rows(df)
         sample = df if n <= train_rows else \
             df.sample(fraction=min(1.0, train_rows / n), seed=seed)
         km = KMeans(k=n_centroids, seed=seed, maxIter=max_iter,

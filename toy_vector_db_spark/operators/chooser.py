@@ -28,8 +28,9 @@ re-expressed for our tiers:
 
 Every decision here is a PURE function of scalars -> plan, so the
 policy is unit-testable without a SparkSession; ``rows`` sizes a
-DataFrame for it, and ``search_auto`` / ``knn_join_auto`` apply the
-chosen plan to a DataFrame.
+DataFrame for it, ``text_tier`` is the text operators' one
+Column/Arrow crossover, and ``search_auto`` / ``knn_join_auto`` apply
+the chosen plan to a DataFrame.
 """
 
 from __future__ import annotations
@@ -145,20 +146,17 @@ def ivf_nlist(n_rows: int) -> int:
     return max(8, int(4 * math.sqrt(max(1, n_rows))))
 
 
-def rows(df: DataFrame, n: int | None = None) -> int:
+def rows(df: DataFrame) -> int:
     """Row count for a sizing decision — the one seam every tier pick
-    sizes through. ``n`` wins when the caller already knows it (a
-    deployed service keeps table stats the way Catalyst keeps its own
-    statistics). Otherwise, when the optimized plan is a bare or
-    projected parquet file scan (a Project never changes the row
-    count), the answer is the sum of the files' FOOTER row counts,
-    read driver-side: the same number as ``count()`` with no Spark
-    job, where a count() pays a full job round-trip even though Spark
-    serves it from those same footers. Any other plan — a filter,
-    limit, join, union, sample, cached or local frame, or files on a
-    non-local file system — takes ``df.count()``."""
-    if n is not None:
-        return n
+    sizes through. When the optimized plan is a parquet file scan
+    under only row-count-preserving nodes (Project, Repartition,
+    RepartitionByExpression, RebalancePartitions), the answer is the
+    sum of the files' FOOTER row counts, read driver-side: the same
+    number as ``count()`` with no Spark job, where a count() pays a
+    full job round-trip even though Spark serves it from those same
+    footers. Any other plan — a filter, limit, join, union, sample,
+    cached or local frame, or files on a non-local file system —
+    takes ``df.count()``."""
     files = _parquet_scan_files(df)
     if files is None:
         return df.count()
@@ -166,13 +164,19 @@ def rows(df: DataFrame, n: int | None = None) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
+#: plan nodes that never change their child's row count
+_ROW_PRESERVING = {"Project", "Repartition", "RepartitionByExpression",
+                   "RebalancePartitions"}
+
+
 def _parquet_scan_files(df: DataFrame) -> list[str] | None:
-    """Local paths of the files behind a bare/projected parquet scan
-    (partition directories included, hidden files excluded — the
-    file index's own listing), or None for any other plan."""
+    """Local paths of the files behind a parquet scan under only
+    ``_ROW_PRESERVING`` nodes (partition directories included, hidden
+    files excluded — the file index's own listing), or None for any
+    other plan."""
     from urllib.parse import unquote, urlparse
     plan = df._jdf.queryExecution().optimizedPlan()
-    while plan.getClass().getSimpleName() == "Project":
+    while plan.getClass().getSimpleName() in _ROW_PRESERVING:
         plan = plan.child()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
@@ -185,6 +189,35 @@ def _parquet_scan_files(df: DataFrame) -> list[str] | None:
     if any(u.scheme != "file" for u in uris):
         return None
     return [unquote(u.path) for u in uris]
+
+
+# Crossover for the text tiers' tier="auto" (minhash signatures,
+# shingle sets, simhash, rolling fingerprints): below this corpus
+# size the Column fold wins (measured sf0.1 / 5k docs: 0.26-0.57 s vs
+# 0.69-1.3 s — Arrow transfer costs more than the md5s); above it the
+# Arrow tier wins even JIT-warm (measured 500k docs: ~8.5 s vs ~22 s —
+# the interpreted HOF fold scales worse than hashlib's C loop). The
+# two tiers are bit-identical (parity tests in test_dedup.py), so the
+# choice never changes results, only the plan.
+TEXT_ARROW_MIN_DOCS = 50_000
+
+
+def text_tier(df: DataFrame, tier: str = "auto") -> str:
+    """The text operators' Column-fold vs Arrow-twin pick: "column" or
+    "arrow" pass through, "auto" sizes ``df`` through ``rows`` against
+    ``TEXT_ARROW_MIN_DOCS``. A streaming frame under "auto" takes the
+    Column tier (a streaming plan cannot be counted, and real
+    micro-batches are small); a caller draining a corpus-sized batch
+    through one trigger sizes its batch twin here and passes the
+    answer explicitly."""
+    if tier == "auto":
+        if df.isStreaming:
+            return "column"
+        return "arrow" if rows(df) >= TEXT_ARROW_MIN_DOCS else "column"
+    if tier not in ("column", "arrow"):
+        raise ValueError(f"unknown text tier {tier!r} "
+                         "(expected 'auto', 'column' or 'arrow')")
+    return tier
 
 
 @dataclass(frozen=True)
@@ -335,21 +368,19 @@ def knn_join_auto(queries: DataFrame, corpus: DataFrame, k: int = 10,
                   query_vec_col: str = "query_vec",
                   corpus_id_col: str = "vec_id",
                   corpus_vec_col: str = "embedding",
-                  n_queries: int | None = None, n_corpus: int | None = None,
                   exact_max_pairs: int = 10**9,
                   broadcast_max_queries: int = BROADCAST_MAX_QUERIES):
     """Route a batch similarity join through ``choose_join_tier``.
     Returns ``(plan, DataFrame)`` with (query_id, vec_id, distance).
 
-    Both sides are sized through ``rows`` (``n_queries`` / ``n_corpus``
-    skip it), so bare or projected parquet scans cost no sizing job.
-    The exact tier is ``knn.knn_join``; both IVF tiers build one
-    deterministic index (one ``det_sample`` job) and run
+    Both sides are sized through ``rows``, so parquet scans cost no
+    sizing job. The exact tier is ``knn.knn_join``; both IVF tiers
+    build one deterministic index (one ``det_sample`` job) and run
     ``knn.knn_join_ivf_arrow``: ``ivf-broadcast`` collects the queries
     (one job) and scores the corpus in one Arrow pass, ``ivf-cogroup``
     shuffles both sides on cluster id."""
-    nq = rows(queries, n_queries)
-    nc = rows(corpus, n_corpus)
+    nq = rows(queries)
+    nc = rows(corpus)
     plan = choose_join_tier(nq, nc, None, k, recall_target,
                             exact_max_pairs, broadcast_max_queries)
     if plan.tier == "exact-broadcast":
@@ -375,17 +406,15 @@ def search_auto(df: DataFrame, query_vec: Sequence[float], k: int = 10,
                 recall_target: float = 1.0,
                 memory_budget_bytes: int | None = None,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                n_rows: int | None = None,
                 exact_max_rows: int = EXACT_MAX_ROWS,
                 tie_col: str | None = None):
     """Route one top-k search through ``choose_search_tier``.
 
     Returns ``(plan, DataFrame)`` — callers that only want the frame
     drop the plan; tests assert on it. The corpus is sized through
-    ``rows``: ``n_rows`` when the caller already knows it, else parquet
-    footers for a bare or projected scan (no job), else a count()."""
+    ``rows``: parquet footers for a scan (no job), else a count()."""
     qvec = list(query_vec)
-    n = rows(df, n_rows)
+    n = rows(df)
     plan = choose_search_tier(n, len(qvec), k, metric, recall_target,
                               memory_budget_bytes, exact_max_rows)
     if plan.tier == "flat-column":

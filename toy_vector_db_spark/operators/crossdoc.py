@@ -31,27 +31,25 @@ from pyspark.sql import functions as F
 
 
 def exploded_shingles(df: DataFrame, k: int = 3, id_col: str = "doc_id",
-                      text_col: str = "text", tier: str = "auto",
-                      n_docs: int | None = None) -> DataFrame:
+                      text_col: str = "text",
+                      tier: str = "auto") -> DataFrame:
     """(id, sh): one row per DISTINCT k-word shingle per document
     (word_shingles semantics — short/empty docs contribute their whole
     normalized text as the single shingle, so every doc has >= 1 row).
     The derivation is tiered by corpus size (``dedup.shingles_tiered``
     — the Column transform is interpreter-evaluated per position);
-    membership identical either way. Streaming frames pin the Column
-    tier (no count() mid-plan; micro-batches are batch-sized)."""
+    membership identical either way. Streaming frames take the Column
+    tier under "auto" (``chooser.text_tier``)."""
     from .dedup import shingles_tiered
-    if df.isStreaming and tier == "auto":
-        tier = "column"
     sh = shingles_tiered(df, text_col=text_col, id_col=id_col, k=k,
-                         tier=tier, n_docs=n_docs, sh_col="__sh")
+                         tier=tier, sh_col="__sh")
     return sh.select(F.col(id_col), F.explode("__sh").alias("sh"))
 
 
 def shared_shingle_stats(df: DataFrame, k: int = 3, min_docs: int = 2,
                          id_col: str = "doc_id",
-                         text_col: str = "text", tier: str = "auto",
-                         n_docs: int | None = None) -> DataFrame:
+                         text_col: str = "text",
+                         tier: str = "auto") -> DataFrame:
     """Per-document cross-corpus overlap: (id, n_shingles, n_shared,
     shared_frac) where a shingle is "shared" when it occurs in at
     least ``min_docs`` documents (itself included — the count is over
@@ -63,8 +61,8 @@ def shared_shingle_stats(df: DataFrame, k: int = 3, min_docs: int = 2,
     # and the per-doc flag join); materialize it once so the text scan
     # + shingle explode doesn't run twice (the tfidf localCheckpoint
     # pattern — blocks are freed when the result frame drops).
-    sh = exploded_shingles(df, k, id_col, text_col, tier=tier,
-                           n_docs=n_docs).localCheckpoint(eager=False)
+    sh = exploded_shingles(df, k, id_col, text_col,
+                           tier=tier).localCheckpoint(eager=False)
     freq = sh.groupBy("sh").agg(F.count("*").alias("__nd"))
     shared_flag = (F.col("__nd") >= min_docs).cast("int")
     return (sh.join(freq, "sh")

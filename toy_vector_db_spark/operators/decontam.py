@@ -32,21 +32,17 @@ from pyspark.sql import functions as F
 
 def shingle_hash_set(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text", n: int = 5,
-                     tier: str = "auto",
-                     n_docs: int | None = None) -> DataFrame:
+                     tier: str = "auto") -> DataFrame:
     """(id, shingle_hash) with one row per DISTINCT n-word shingle of
     the normalized text. Map-side only — no shuffle; the projection
     prunes every other column before the shingle derivation, which is
     tiered by corpus size (``dedup.shingles_tiered`` — the Column
     transform is interpreter-evaluated per position, the wrong tier
-    for a corpus-scale decontam scan). Streaming frames pin the
-    Column tier (no count() mid-plan; micro-batches are
-    batch-sized)."""
+    for a corpus-scale decontam scan). Streaming frames take the
+    Column tier under "auto" (``chooser.text_tier``)."""
     from .dedup import shingles_tiered
-    if df.isStreaming and tier == "auto":
-        tier = "column"
     sh = shingles_tiered(df, text_col=text_col, id_col=id_col, k=n,
-                         tier=tier, n_docs=n_docs, sh_col="__sh")
+                         tier=tier, sh_col="__sh")
     return (sh.select(F.col(id_col), F.explode("__sh").alias("__shingle"))
             .select(id_col, F.md5("__shingle").alias("shingle_hash")))
 
@@ -64,11 +60,12 @@ def contamination_report(train: DataFrame, eval_df: DataFrame,
 
     ``train_tier``: shingle-derivation tier for the train side. A
     STREAMING train frame defaults to the Column tier (a streaming
-    plan cannot run the auto rule's count job, and real micro-batches
-    are small) — but a caller draining a corpus-sized batch through
-    one trigger (AvailableNow backfills) should pass "arrow"
-    explicitly: mapInPandas is streaming-legal and the Column
-    transform is the interpreted-HOF tier the crossover exists for."""
+    plan cannot be sized, and real micro-batches are small) — but a
+    caller draining a corpus-sized batch through one trigger
+    (AvailableNow backfills) should pass ``chooser.text_tier`` of its
+    batch twin explicitly: mapInPandas is streaming-legal and the
+    Column transform is the interpreted-HOF tier the crossover exists
+    for."""
     tr = shingle_hash_set(train, id_col, text_col, n, tier=train_tier)
     ev = (shingle_hash_set(eval_df, id_col, text_col, n)
           .select("shingle_hash").distinct()

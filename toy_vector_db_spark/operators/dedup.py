@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import PUNCT_CLASS, fingerprint, word_shingles
+from .chooser import text_tier
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -163,8 +164,7 @@ def word_shingles_arrow(df: DataFrame, text_col: str = "text",
 
 def shingles_tiered(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id", k: int = 3,
-                    tier: str = "auto", n_docs: int | None = None,
-                    sh_col: str = "sh") -> DataFrame:
+                    tier: str = "auto", sh_col: str = "sh") -> DataFrame:
     """(id, shingle set) under the same corpus-size tier rule as
     minhash_lsh_pairs' signatures: Column ``word_shingles`` below the
     crossover (stays JVM-side, no Arrow transfer), the Python
@@ -172,12 +172,7 @@ def shingles_tiered(df: DataFrame, text_col: str = "text",
     evaluated per position — it turned corpus-scale shingle scans in
     crossdoc/decontam/verify into the same bottleneck the signature
     tier split exists for). Membership-identical either way."""
-    if tier == "auto":
-        n = df.count() if n_docs is None else n_docs
-        tier = "arrow" if n >= _SIG_ARROW_MIN_DOCS else "column"
-    if tier not in ("column", "arrow"):
-        raise ValueError(f"unknown tier {tier!r}")
-    if tier == "arrow":
+    if text_tier(df, tier) == "arrow":
         return word_shingles_arrow(df, text_col=text_col, id_col=id_col,
                                    shingle_k=k, sh_col=sh_col)
     return df.select(F.col(id_col),
@@ -279,34 +274,17 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union == 0.0, F.lit(1.0)).otherwise(inter / union)
 
 
-# Crossover for sig_tier="auto": below this corpus size the Column
-# fold wins (measured sf0.1 / 5k docs: 0.26-0.57 s vs 0.69-1.3 s —
-# Arrow transfer costs more than the md5s); above it the Arrow tier
-# wins even JIT-warm (measured 500k docs: ~8.5 s vs ~22 s — the
-# interpreted HOF fold scales worse than hashlib's C loop). The two
-# tiers are bit-identical (parity test in test_dedup.py), so the
-# choice never changes results, only the plan.
-_SIG_ARROW_MIN_DOCS = 50_000
-
-
 def minhash_signatures_tiered(df: DataFrame, text_col: str = "text",
                               id_col: str = "doc_id", num_perm: int = 8,
                               shingle_k: int = 3, sig_col: str = "sig",
-                              tier: str = "auto",
-                              n_docs: int | None = None) -> DataFrame:
+                              tier: str = "auto") -> DataFrame:
     """Signature computation under the SAME column/arrow routing rule
-    ``minhash_lsh_pairs`` applies inline: bit-identical tiers, chosen
-    by corpus size at ``_SIG_ARROW_MIN_DOCS`` (pass ``n_docs`` to skip
-    the count). At the 100x derived set the Column HOF fold costs
-    23.7 s vs the Arrow twin's 8.5 s — standalone signature consumers
-    (the workload query, stores) should route here rather than pin a
-    tier. Output: (id_col, sig_col ARRAY<STRING>)."""
-    if tier == "auto":
-        n = df.count() if n_docs is None else n_docs
-        tier = "arrow" if n >= _SIG_ARROW_MIN_DOCS else "column"
-    if tier not in ("column", "arrow"):
-        raise ValueError(f"unknown sig tier {tier!r}")
-    if tier == "arrow":
+    ``minhash_lsh_pairs`` applies: bit-identical tiers, chosen by
+    ``chooser.text_tier``. At the 100x derived set the Column HOF fold
+    costs 23.7 s vs the Arrow twin's 8.5 s — standalone signature
+    consumers (the workload query, stores) should route here rather
+    than pin a tier. Output: (id_col, sig_col ARRAY<STRING>)."""
+    if text_tier(df, tier) == "arrow":
         return minhash_signatures_arrow(df, text_col=text_col,
                                         id_col=id_col, num_perm=num_perm,
                                         shingle_k=shingle_k,
@@ -382,8 +360,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       threshold: float | None = 0.5,
                       verify: bool = True,
                       max_bucket: int | None = None,
-                      sig_tier: str = "auto",
-                      n_docs: int | None = None) -> DataFrame:
+                      sig_tier: str = "auto") -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash.
 
     Plan shape: project (id, band_keys) -> explode bands -> groupBy
@@ -401,10 +378,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 
     ``sig_tier``: "column" (Catalyst HOF fold), "arrow" (hashlib over
     Arrow batches, bit-identical — see ``minhash_signatures_arrow``),
-    or "auto" (default): pick by corpus size at ``_SIG_ARROW_MIN_DOCS``
-    using ``n_docs`` when given, else one ``df.count()`` (cheap —
-    parquet metadata for plain scans; forces at most the upstream
-    pipeline both tiers need anyway).
+    or "auto" (default): ``chooser.text_tier`` sizes ``df`` (parquet
+    footers for a scan, no job; else one ``count()``).
 
     ``max_bucket`` is the degenerate-bucket guard for corpora whose
     duplicate families grow with corpus size (boilerplate, mirrored
@@ -423,11 +398,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     """
     from ..sources.tables import ensure_parallelism
     rows_per_band = num_perm // bands
-    if sig_tier == "auto":
-        n = df.count() if n_docs is None else n_docs
-        sig_tier = "arrow" if n >= _SIG_ARROW_MIN_DOCS else "column"
-    if sig_tier not in ("column", "arrow"):
-        raise ValueError(f"unknown sig_tier {sig_tier!r}")
+    sig_tier = text_tier(df, sig_tier)
     base = ensure_parallelism(df.select(F.col(id_col).alias("__id"),
                                         F.col(text_col).alias("__text")))
     if sig_tier == "arrow":
@@ -515,18 +486,12 @@ def fingerprints_arrow(df: DataFrame, text_col: str = "text",
 
 def fingerprints_tiered(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", window: int = 4,
-                        tier: str = "auto",
-                        n_docs: int | None = None) -> DataFrame:
+                        tier: str = "auto") -> DataFrame:
     """(id, fingerprint, rolling_fp) under the shared corpus-size tier
-    rule (``_SIG_ARROW_MIN_DOCS``). Bit-identical tiers; the Column
+    rule (``chooser.text_tier``). Bit-identical tiers; the Column
     rolling fingerprint pays per-window interpretation at corpus
     scale (measured >=2x at the 100x derived set)."""
-    if tier == "auto":
-        n = df.count() if n_docs is None else n_docs
-        tier = "arrow" if n >= _SIG_ARROW_MIN_DOCS else "column"
-    if tier not in ("column", "arrow"):
-        raise ValueError(f"unknown fingerprint tier {tier!r}")
-    if tier == "arrow":
+    if text_tier(df, tier) == "arrow":
         return fingerprints_arrow(df, text_col=text_col, id_col=id_col,
                                   window=window)
     from ..functions.text import fingerprint, rolling_fingerprint
@@ -617,22 +582,16 @@ def simhash_arrow(df: DataFrame, text_col: str = "text",
 def simhash_tiered(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", bits: int = 16,
                    shingle_k: int = 1, tier: str = "auto",
-                   n_docs: int | None = None,
                    out_col: str = "simhash") -> DataFrame:
     """(id, simhash) under the same corpus-size tier rule as the
-    minhash signatures (``_SIG_ARROW_MIN_DOCS``): the Column fold
+    minhash signatures (``chooser.text_tier``): the Column fold
     below the crossover (JVM-side, no Arrow transfer), the
     hashlib+NumPy twin above it (the interpreted per-shingle-per-bit
     fold was the simhash family's 5.9x/decade term in the 100x
     ledger; the Arrow twin measured >=2x faster there). Bit-identical
     either way (parity test incl. null/empty text), so the oracle SQL
     and every banding consumer are tier-blind."""
-    if tier == "auto":
-        n = df.count() if n_docs is None else n_docs
-        tier = "arrow" if n >= _SIG_ARROW_MIN_DOCS else "column"
-    if tier not in ("column", "arrow"):
-        raise ValueError(f"unknown simhash tier {tier!r}")
-    if tier == "arrow":
+    if text_tier(df, tier) == "arrow":
         return simhash_arrow(df, text_col=text_col, id_col=id_col,
                              bits=bits, shingle_k=shingle_k,
                              out_col=out_col)
@@ -643,8 +602,8 @@ def simhash_tiered(df: DataFrame, text_col: str = "text",
 
 def simhash_dup_clusters(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id", bits: int = 16,
-                         max_ids: int = 64, tier: str = "auto",
-                         n_docs: int | None = None) -> DataFrame:
+                         max_ids: int = 64,
+                         tier: str = "auto") -> DataFrame:
     """Documents sharing an identical simhash value (cheap near-dup
     tier: one hash shuffle, no pairwise work). Same bounded report
     shape as ``exact_dup_clusters``: exact count/extrema, ``ids``
@@ -652,7 +611,7 @@ def simhash_dup_clusters(df: DataFrame, text_col: str = "text",
     counts stay exact, work stays linear). Hashes route through
     ``simhash_tiered`` (Column fold vs Arrow twin by corpus size)."""
     keyed = simhash_tiered(df, text_col=text_col, id_col=id_col,
-                           bits=bits, tier=tier, n_docs=n_docs) \
+                           bits=bits, tier=tier) \
         .select("simhash", F.col(id_col))
     return _bounded_clusters(keyed, "simhash", id_col, max_ids)
 
@@ -662,8 +621,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
                           bands: int = 4,
                           max_hamming: int = 3,
                           max_bucket: int | None = None,
-                          tier: str = "auto",
-                          n_docs: int | None = None) -> DataFrame:
+                          tier: str = "auto") -> DataFrame:
     """Near-dup pairs within ``max_hamming`` simhash bits — the scale
     path between exact-simhash grouping (misses 1-bit differences) and
     all-pairs Hamming (quadratic).
@@ -697,8 +655,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     base = ensure_parallelism(df.select(F.col(id_col).alias("__id"),
                                         F.col(text_col).alias("__text")))
     hashed = simhash_tiered(base, text_col="__text", id_col="__id",
-                            bits=bits, tier=tier, n_docs=n_docs,
-                            out_col="__h")
+                            bits=bits, tier=tier, out_col="__h")
 
     def band_key(h: Column, b: int) -> Column:
         mask = (1 << width) - 1
@@ -751,8 +708,8 @@ def _hamming_ball_masks(bits: int, max_hamming: int) -> list[int]:
 
 def simhash_neighbor_counts(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", bits: int = 16,
-                            max_hamming: int = 3, tier: str = "auto",
-                            n_docs: int | None = None) -> DataFrame:
+                            max_hamming: int = 3,
+                            tier: str = "auto") -> DataFrame:
     """Per-document count of near-duplicates within ``max_hamming``
     simhash bits — the LINEAR-size answer to a question whose pair list
     is quadratic on heavily templated corpora (~3.8M qualifying pairs
@@ -781,7 +738,7 @@ def simhash_neighbor_counts(df: DataFrame, text_col: str = "text",
     # localCheckpoint: both the count aggregation and the final mapping
     # join consume the hashes — one fold pass, not two
     hashed = simhash_tiered(base, text_col="__text", id_col="__id",
-                            bits=bits, tier=tier, n_docs=n_docs,
+                            bits=bits, tier=tier,
                             out_col="__h").localCheckpoint()
     spark = df.sparkSession
     counts = {r["__h"]: r["cnt"] for r in
@@ -847,14 +804,14 @@ def _score_pairs_jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
                         text_col: str = "text", id_col: str = "doc_id",
-                        shingle_k: int = 3, tier: str = "auto",
-                        n_docs: int | None = None) -> DataFrame:
+                        shingle_k: int = 3,
+                        tier: str = "auto") -> DataFrame:
     """Score given (id_a, id_b) candidate pairs with exact n-gram
     Jaccard. Use after any candidate generator; one text scan (tiered
     by corpus size — ``shingles_tiered``), and only ids cross the
     candidate join (see ``_score_pairs_jaccard``)."""
     sh = shingles_tiered(df, text_col=text_col, id_col=id_col,
-                         k=shingle_k, tier=tier, n_docs=n_docs,
+                         k=shingle_k, tier=tier,
                          sh_col="__sh").withColumnRenamed(id_col, "__id")
     return _score_pairs_jaccard(sh, pairs)
 

@@ -203,11 +203,11 @@ class KnnGraphIndex(_MaintainableIndex):
         quadratic (each node scored against 3N/8 candidates)."""
         import math
 
-        from .chooser import ivf_nlist
+        from .chooser import ivf_nlist, rows as _rows
         from .knn import knn_join_ivf_arrow
 
         if n_centroids is None or nprobe is None:
-            n = df.count()
+            n = _rows(df)
             if n_centroids is None:
                 n_centroids = ivf_nlist(n)
             if nprobe is None:
@@ -278,10 +278,10 @@ class KnnGraphIndex(_MaintainableIndex):
         Returns self (mutates the cache; cheap to re-derive)."""
         import numpy as np
 
-        from .chooser import ivf_nlist
+        from .chooser import ivf_nlist, rows as _rows
         live = self._live(self.table)
         if n_coarse is None:
-            n_coarse = ivf_nlist(live.count())
+            n_coarse = ivf_nlist(_rows(live))
         rows = (live.select(self.id_col, self.vec_col)
                 .orderBy(F.md5(F.col(self.id_col).cast("string")),
                          F.col(self.id_col))

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import word_shingles
+from .chooser import text_tier
 from .dedup import jaccard, minhash_bands, minhash_signature
 
 
@@ -87,18 +88,14 @@ class MinHashStore:
         ``sig_tier`` follows minhash_lsh_pairs: "column" (Catalyst HOF
         fold + word_shingles), "arrow" (hashlib over Arrow batches,
         sig bit-identical, shingles sorted-set order), or "auto" —
-        one df.count() picks by the same crossover. The corpus-sized
-        store BUILD is where the Arrow tier earns its keep (the
-        interpreted HOF fold is the dominant build cost at scale);
-        the two tiers agree on every downstream value because sig is
-        parity-tested byte-identical and sh is only ever consumed as
-        a set (jaccard's array_intersect/union)."""
-        tier = self.sig_tier
-        if tier == "auto":
-            from .dedup import _SIG_ARROW_MIN_DOCS
-            tier = ("arrow" if df.count() >= _SIG_ARROW_MIN_DOCS
-                    else "column")
-        if tier == "arrow":
+        ``chooser.text_tier`` picks by the same crossover (an unknown
+        name raises there). The corpus-sized store BUILD is where the
+        Arrow tier earns its keep (the interpreted HOF fold is the
+        dominant build cost at scale); the two tiers agree on every
+        downstream value because sig is parity-tested byte-identical
+        and sh is only ever consumed as a set (jaccard's
+        array_intersect/union)."""
+        if text_tier(df, self.sig_tier) == "arrow":
             from .dedup import minhash_signatures_arrow
             return minhash_signatures_arrow(
                 df, text_col=self.text_col, id_col=self.id_col,

@@ -173,16 +173,15 @@ def knn_auto(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
              metric: str = "euclidean", vec_col: str = "embedding",
              id_cols: Sequence[str] | None = None,
              exclude_id=None, id_col: str | None = None,
-             dist_col: str = "distance", tie_col: str | None = None,
-             arrow_min_dim: int | None = None) -> DataFrame:
+             dist_col: str = "distance",
+             tie_col: str | None = None) -> DataFrame:
     """Exact top-k with explicit tier selection: dispatches to the
     Arrow/BLAS tier (``knn_arrow``) when the query dimension is >=
-    ``arrow_min_dim`` (default ``ARROW_TIER_MIN_DIM``), else the pure
-    Column-expression tier (``knn``). Both tiers return identical
-    answers (both are oracle-checked); the knob trades JVM codegen
-    against NumPy batch scoring."""
-    threshold = ARROW_TIER_MIN_DIM if arrow_min_dim is None else arrow_min_dim
-    if len(list(query_vec)) >= threshold:
+    ``ARROW_TIER_MIN_DIM``, else the pure Column-expression tier
+    (``knn``). Both tiers return identical answers (both are
+    oracle-checked); the crossover trades JVM codegen against NumPy
+    batch scoring."""
+    if len(list(query_vec)) >= ARROW_TIER_MIN_DIM:
         return knn_arrow(df, query_vec, k, metric, vec_col, id_cols,
                          exclude_id, id_col, dist_col, tie_col)
     return knn(df, query_vec, k, metric, vec_col,

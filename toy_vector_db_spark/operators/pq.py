@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ann import IvfIndex, _MaintainableIndex
+from .chooser import rows as _rows
 from .knn import DEFAULT_K
 
 
@@ -94,7 +95,7 @@ class PqCodec:
         ``sample`` short-circuits the scan when the caller already has
         training vectors in hand (e.g. residual training)."""
         if sample is None:
-            n = df.count()
+            n = _rows(df)
             sdf = df if n <= train_rows else \
                 df.sample(fraction=min(1.0, train_rows / n), seed=seed)
             sample = np.array([list(r[0]) for r in
@@ -244,7 +245,7 @@ class OpqCodec:
             opq_iters: int = 8,
             sample: np.ndarray | None = None) -> "OpqCodec":
         if sample is None:
-            n = df.count()
+            n = _rows(df)
             sdf = df if n <= train_rows else \
                 df.sample(fraction=min(1.0, train_rows / n), seed=seed)
             sample = np.array([list(r[0]) for r in
@@ -528,7 +529,7 @@ class IvfPqIndex(_MaintainableIndex):
                if trained_centroids else
                IvfIndex.build_deterministic(df, n_centroids, id_col, vec_col))
         # train codebooks on RESIDUALS of a bounded sample
-        n = df.count()
+        n = _rows(df)
         sdf = ivf.table if n <= train_rows else \
             ivf.table.sample(fraction=min(1.0, train_rows / n), seed=seed)
         rows = sdf.select(F.col(vec_col).cast("array<double>"),

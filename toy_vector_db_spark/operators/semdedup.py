@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ann import IvfIndex
-from .chooser import ivf_nlist
+from .chooser import ivf_nlist, rows
 from .components import connected_components
 from .dedup import cosine_near_dup_blocked
 
@@ -48,14 +48,14 @@ def semantic_clusters(df: DataFrame, n_clusters: int | None = None,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       deterministic: bool = True) -> DataFrame:
     """Rows of ``df`` plus a ``__cluster`` int column (nearest
-    centroid). ``n_clusters=None`` auto-sizes via ``ivf_nlist``
-    (one footer-served count job). ``deterministic=True`` uses
-    md5-sampled init-only centroids (any SQL engine reproduces them —
-    the value-oracle path); ``False`` trains KMeans on a bounded
-    sample (better blocking on strongly clustered data, not
-    bit-reproducible)."""
+    centroid). ``n_clusters=None`` auto-sizes via ``ivf_nlist`` over
+    ``chooser.rows`` (footers for a scan, else one count job).
+    ``deterministic=True`` uses md5-sampled init-only centroids (any
+    SQL engine reproduces them — the value-oracle path); ``False``
+    trains KMeans on a bounded sample (better blocking on strongly
+    clustered data, not bit-reproducible)."""
     if n_clusters is None:
-        n_clusters = ivf_nlist(df.count())
+        n_clusters = ivf_nlist(rows(df))
     if deterministic:
         idx = IvfIndex.build_deterministic(df, n_centroids=n_clusters,
                                            id_col=id_col, vec_col=vec_col)

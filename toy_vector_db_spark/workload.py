@@ -854,7 +854,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The Arrow/hashlib fingerprint tier PINNED, under the SAME oracle as
 # the tier-routed query above: fingerprints_tiered routes by corpus
-# size (crossover _SIG_ARROW_MIN_DOCS = 50k docs), so the driver at
+# size (chooser.text_tier, crossover 50k docs), so the driver at
 # sf0.01 only ever exercises the Column tier through text_fingerprints
 # — this twin makes the 100x default path driver-value-hashable too
 # (same move as dedup_minhash_signatures_arrow; VERDICT r7 next #1).
@@ -3230,13 +3230,13 @@ def knn_join_ivfpq_rerank_batch(spark: SparkSession,
                                                  where=""))
 def knn_join_ivf_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ann import IvfIndex
-    from .operators.chooser import ivf_nlist
+    from .operators.chooser import ivf_nlist, rows
     from .operators.knn import knn_join_ivf_arrow
     e = _t(spark, sf_dir, "embeddings")
     # all-anchors regime: nlist ~ 4*sqrt(N) keeps total scored pairs
     # O(N^1.5) — pinned-8 is N^2/8 (measured 61x for the second 10x
     # decade on the derived set before this sizing)
-    idx = IvfIndex.build_deterministic(e, n_centroids=ivf_nlist(e.count()))
+    idx = IvfIndex.build_deterministic(e, n_centroids=ivf_nlist(rows(e)))
     queries = e.select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_vec"))
     return knn_join_ivf_arrow(queries, idx, k=3, nprobe=3,
@@ -4597,15 +4597,15 @@ QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id)
 @q("hard_negatives_ivf", _hard_neg_ivf_oracle(cluster_cap=64))
 def hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ann import IvfIndex
-    from .operators.chooser import ivf_nlist
+    from .operators.chooser import ivf_nlist, rows
     from .operators.negatives import hard_negative_join_ivf
     e = _t(spark, sf_dir, "embeddings")
-    # size nlist from the corpus count (one footer-served count job)
+    # size nlist from the corpus row count (parquet footers, no job)
     # so cluster occupancy stays ~sqrt(N)/4; cluster_cap=64 then bounds
     # PER-ANCHOR candidates to nprobe*64 regardless of N (total O(N)) —
     # occupancy crosses the cap past ~65k vectors, where the uncapped
     # tier's O(N^1.5) showed up as 12.4x wall for the second 10x decade
-    idx = IvfIndex.build_deterministic(e, n_centroids=ivf_nlist(e.count()))
+    idx = IvfIndex.build_deterministic(e, n_centroids=ivf_nlist(rows(e)))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
                    str(min(int(prev), 32)) if prev.isdigit() else "32")
@@ -5408,12 +5408,13 @@ def corpus_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (broadcast, bloom, streaming) run under the SAME oracle.
 @q("decontam_streaming", _DECONTAM_ORACLE)
 def decontam_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.chooser import text_tier
     from .operators.decontam import contamination_report
     from .operators.sampling import train_test_split
     from .streaming.corpus import read_document_stream
     from .streaming.events import run_available_now
-    ev = train_test_split(_tp(spark, sf_dir, "documents"), "doc_id", 0.1) \
-        .filter("split = 'test'")
+    docs = _tp(spark, sf_dir, "documents")
+    ev = train_test_split(docs, "doc_id", 0.1).filter("split = 'test'")
     src = train_test_split(
         read_document_stream(spark, os.path.join(sf_dir,
                                                  "documents.parque[t]"),
@@ -5424,12 +5425,9 @@ def decontam_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
                    _stream_partitions(spark, sf_dir))
     # the AvailableNow drain pushes the WHOLE corpus through one
     # trigger, so the train side's shingle tier must follow corpus
-    # size like the batch twin does — a streaming frame can't run the
-    # auto rule's count job, but the batch-side footer count can
-    # stand in for it (same table)
-    from .operators.dedup import _SIG_ARROW_MIN_DOCS
-    n_docs = _footer_rows(sf_dir, "documents")  # metadata, no job (r13)
-    tier = "arrow" if n_docs >= _SIG_ARROW_MIN_DOCS else "column"
+    # size like the batch twin does — a streaming frame can't be
+    # sized, but the batch read of the same table can (footers, no job)
+    tier = text_tier(docs)
     try:
         report = contamination_report(src, ev, n=5,
                                       train_tier=tier).select(
