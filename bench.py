@@ -464,6 +464,23 @@ def per_query_lines(compact: dict) -> list[str]:
     return lines
 
 
+#: flagged row names the summary line carries. The full set is already
+#: in the "load" line (element 3 of each row); an unbounded list would
+#: push the last line out of the 2000-byte tail once most rows flag
+#: (derived 100x scales).
+SUMMARY_FLAGGED_NAMES = 5
+
+
+def summary_line(summary: dict) -> str:
+    """The last stdout line: ``summary`` as compact JSON, keys in the
+    given order, with ``flagged_load`` cut to its first
+    ``SUMMARY_FLAGGED_NAMES`` names."""
+    capped = dict(summary)
+    capped["flagged_load"] = \
+        list(summary["flagged_load"])[:SUMMARY_FLAGGED_NAMES]
+    return json.dumps(capped, separators=(",", ":"))
+
+
 def host_load() -> tuple[float, float]:
     """(1-min loadavg, MemAvailable GiB) — the two numbers the r5/r6
     drift forensics had to reconstruct from shell history."""
@@ -623,14 +640,13 @@ def main() -> None:
         print(json.dumps({"remeasured": remeasured}, separators=(",", ":")))
     for line in per_query_lines(compact):
         print(line)
-    print(json.dumps({"metric": "workload_total", "value": total,
-                      "core_total": core, "unit": "sec", "sf": sf_val,
-                      "max_load1": max_load,
-                      "flagged_load": flagged,
-                      "sustained_load": sustained,
-                      "calib_drift": drifts,
-                      "calib_s": round(calib_settled, 5)},
-                     separators=(",", ":")))
+    print(summary_line({"metric": "workload_total", "value": total,
+                        "core_total": core, "unit": "sec", "sf": sf_val,
+                        "max_load1": max_load,
+                        "flagged_load": flagged,
+                        "sustained_load": sustained,
+                        "calib_drift": drifts,
+                        "calib_s": round(calib_settled, 5)}))
 
 
 if __name__ == "__main__":

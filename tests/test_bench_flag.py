@@ -309,6 +309,29 @@ def test_per_query_lines_chunks_fit_with_long_names_and_values(bench):
     assert list(rebuilt) == sorted(compact) and rebuilt == compact
 
 
+def test_summary_line_bounded_with_many_flagged_rows(bench):
+    # at derived scales most rows can flag: the last line keeps its
+    # keys and order but only the first few flagged names (the full
+    # set is in the load line), so it stays within one chunk budget
+    import json
+    flagged = sorted(f"{i:03d}_" + "q" * 36 for i in range(150))
+    assert {len(n) for n in flagged} == {40}
+    summary = {"metric": "workload_total", "value": 12345.678,
+               "core_total": 2345.678, "unit": "sec", "sf": 0.1,
+               "max_load1": 31.5, "flagged_load": flagged,
+               "sustained_load": True,
+               "calib_drift": [1.01, 2.34, 2.56, 1.99, 3.01, 2.2, 1.7,
+                               2.9, 1.4],
+               "calib_s": 0.12345}
+    line = bench.summary_line(summary)
+    assert len(line) <= bench.QUERY_LINE_BYTES, len(line)
+    got = json.loads(line)
+    assert list(got) == list(summary)
+    assert got["flagged_load"] == flagged[:bench.SUMMARY_FLAGGED_NAMES]
+    assert {k: v for k, v in got.items() if k != "flagged_load"} == \
+        {k: v for k, v in summary.items() if k != "flagged_load"}
+
+
 def test_run_subset_returns_child_summary(bench, monkeypatch):
     import json
     out = "\n".join([

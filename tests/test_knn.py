@@ -69,18 +69,6 @@ def test_knn_join_matches_single_knn(spark):
         assert (qid, qid) in rows
 
 
-def test_knn_join_two_phase_equals_window(spark):
-    df = five_vectors(spark)
-    queries = df.select(F.col("id").alias("query_id"),
-                        F.col("embedding").alias("query_vec"))
-    corpus = df.select(F.col("id").alias("vec_id"), "embedding")
-    a = knn_join(queries, corpus, k=3, two_phase=True)
-    b = knn_join(queries, corpus, k=3, two_phase=False)
-    norm = lambda d: sorted((r["query_id"], r["vec_id"], round(r["distance"], 9))
-                            for r in d.collect())
-    assert norm(a) == norm(b)
-
-
 def test_knn_join_ivf_full_probe_equals_exact(spark):
     # probing every cluster makes the IVF join exhaustive, so it must
     # reproduce the exact knn_join answer bit-for-bit
@@ -184,40 +172,11 @@ def test_knn_auto_tier_selection(spark):
     assert narrow.first()["vec_id"] == "a"
 
 
-def test_knn_join_ivf_shuffle_path_equals_broadcast(spark):
-    # broadcast_queries=False (the both-sides-large tier) must return
-    # the identical answer via a shuffle equi-join on the cluster id
-    from toy_vector_db_spark.operators.ann import IvfIndex
-    from toy_vector_db_spark.operators.knn import knn_join_ivf
-    df = five_vectors(spark)
-    corpus = df.select(F.col("id").alias("vec_id"), "embedding")
-    queries = df.select(F.col("id").alias("query_id"),
-                        F.col("embedding").alias("query_vec"))
-    idx = IvfIndex.build_deterministic(corpus, n_centroids=3,
-                                       id_col="vec_id")
-    a = knn_join_ivf(queries, idx, k=2, nprobe=2)
-    b = knn_join_ivf(queries, idx, k=2, nprobe=2, broadcast_queries=False)
-    norm = lambda d: sorted((r["query_id"], r["vec_id"], round(r["distance"], 9))
-                            for r in d.collect())
-    assert norm(a) == norm(b)
-    # and it must not plan as a broadcast of the query side
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = knn_join_ivf(queries, idx, k=2, nprobe=2,
-                            broadcast_queries=False)._jdf \
-            .queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_knn_join_ivf_arrow_matches_column_tier(spark):
     """The BLAS cogroup tier (knn_join_ivf_arrow) must return the
-    identical all-pairs answer as the Column-expression shuffle path —
-    same probes, same candidates, same (dist, id) tie order — across
-    every metric."""
+    identical all-pairs answer as the Column-expression join — same
+    probes, same candidates, same (dist, id) tie order — across every
+    metric."""
     from toy_vector_db_spark.operators.ann import IvfIndex
     from toy_vector_db_spark.operators.knn import (knn_join_ivf,
                                                    knn_join_ivf_arrow)
@@ -228,8 +187,7 @@ def test_knn_join_ivf_arrow_matches_column_tier(spark):
     norm = lambda d: sorted((r["query_id"], r["vec_id"],
                              round(r["distance"], 6)) for r in d.collect())
     for metric in ("euclidean", "cosine", "dotproduct", "manhattan"):
-        a = knn_join_ivf(queries, idx, k=3, nprobe=2, metric=metric,
-                         broadcast_queries=False)
+        a = knn_join_ivf(queries, idx, k=3, nprobe=2, metric=metric)
         b = knn_join_ivf_arrow(queries, idx, k=3, nprobe=2, metric=metric)
         assert norm(a) == norm(b), metric
     with pytest.raises(ValueError):
@@ -289,6 +247,92 @@ def test_knn_join_arrow_boundary_ties_in_one_batch(spark):
                for r in knn_join(queries, corpus, k=2, metric=metric)
                .orderBy("distance", "vec_id").collect()]
         assert got == col, metric
+
+
+def test_knn_join_arrow_null_query_vector_matches_column_tier(spark):
+    """A query with a null vector beside valid ones gets no rows, as in
+    the Column knn_join; the valid queries' answers are unchanged.
+    (Cosine is left out: the Column cosine scores a null vector 2.0
+    rather than null, so that tier answers the null query.)"""
+    from toy_vector_db_spark.operators.knn import knn_join_arrow
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec")).unionByName(
+        spark.createDataFrame([(7777, None)],
+                              "query_id long, query_vec array<float>"))
+    norm = lambda d: sorted((r["query_id"], r["vec_id"],
+                             round(r["distance"], 6)) for r in d.collect())
+    for metric in ("euclidean", "dotproduct", "manhattan"):
+        want = norm(knn_join(queries, emb, k=3, metric=metric))
+        assert want and 7777 not in {t[0] for t in want}
+        assert norm(knn_join_arrow(queries, emb, k=3, metric=metric)) \
+            == want, metric
+
+
+def _cut_rows(D, k, cids):
+    from toy_vector_db_spark.operators.knn import _topk_cut
+    import numpy as np
+    qq, cc, dd = _topk_cut(D, k, np.arange(len(D)), cids)
+    return [(int(q), c, float(d)) for q, c, d in zip(qq, cc, dd)]
+
+
+def _cut_oracle(D, k, cids):
+    import math
+    out = []
+    for r, row in enumerate(D):
+        best = sorted((d, c) for d, c in zip(row, cids) if math.isfinite(d))
+        out += [(r, c, float(d)) for d, c in best[:k]]
+    return out
+
+
+def test_topk_cut_equals_per_row_sort():
+    """The shared per-query cut of the Arrow tiers equals a per-row
+    sorted((distance, id))[:k] with non-finite entries dropped: ties
+    at the k-th distance resolve to the smallest ids, duplicate rows
+    cut alike, and rows with fewer than k finite candidates keep them
+    all."""
+    import numpy as np
+    rng = np.random.default_rng(7)
+    inf = np.inf
+    cids = np.array([40, 30, 10, 20, 50, 60])
+    D = np.array([
+        [1.0, 5.0, 5.0, 5.0, 9.0, 5.0],       # 4-way tie at the k-th
+        [1.0, 5.0, 5.0, 5.0, 9.0, 5.0],       # duplicate row
+        [inf, 2.0, inf, inf, inf, 3.0],       # fewer than k finite
+        [inf, inf, inf, inf, inf, inf],       # nothing finite
+        [0.0, 0.0, 0.0, 0.0, 0.0, 0.0],       # all tied
+        [np.nan, 1.0, 4.0, -inf, 2.0, 2.0],   # nan and -inf dropped
+    ])
+    for k in (1, 2, 3, 6, 8):
+        assert _cut_rows(D, k, cids) == _cut_oracle(D, k, cids), k
+    # string ids, and random blocks drawn from few values (many ties)
+    names = np.array([f"v{i:02d}" for i in range(30)], dtype=object)
+    for trial in range(20):
+        M = rng.integers(0, 4, (5, 30)).astype(float)
+        M[rng.random(M.shape) < 0.2] = inf
+        M[3] = M[1]
+        ids = names[rng.permutation(30)]
+        for k in (1, 3, 7, 30, 40):
+            assert _cut_rows(M, k, ids) == _cut_oracle(M, k, ids), (trial, k)
+
+
+@pytest.mark.parametrize("cells", [50, 10 ** 9])
+def test_diff_dists_chunking_is_bit_identical(monkeypatch, cells):
+    """The direct-form kernel equals the per-query form bit for bit,
+    whether the cell bound splits queries and rows into chunks (50)
+    or not at all."""
+    import importlib
+
+    import numpy as np
+    knn_mod = importlib.import_module("toy_vector_db_spark.operators.knn")
+    monkeypatch.setattr(knn_mod, "DIFF_CHUNK_CELLS", cells)
+    rng = np.random.default_rng(3)
+    Q, M = rng.normal(size=(7, 9)), rng.normal(size=(23, 9))
+    eu = np.stack([np.sqrt(((M - q) ** 2).sum(axis=1)) for q in Q])
+    mh = np.stack([np.abs(M - q).sum(axis=1) for q in Q])
+    assert np.array_equal(knn_mod._diff_dists(Q, M, "euclidean"), eu)
+    assert np.array_equal(knn_mod._diff_dists(Q, M, "manhattan"), mh)
 
 
 # -- knn_join_ivf_arrow(broadcast_queries=True) vs the Column tier ----------

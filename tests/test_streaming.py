@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from toy_vector_db_spark.streaming.events import (
     dedup_stream, followup_pairs_stream, hourly_rollup_stream,
-    read_event_stream, run_to_memory, sessionize_stream,
+    read_event_stream, run_available_now, run_to_memory, sessionize_stream,
     sessionize_stream_windows,
 )
 
@@ -147,6 +147,42 @@ def test_stream_stream_join_multi_batch_matches_batch(spark, events_dir):
         .select("user_id", "a_id", "b_id").collect()}
     assert got == want
     assert len(got) > 0
+
+
+@pytest.mark.parametrize("files_per_trigger", [None, 1])
+def test_no_data_batches_off_drains_equal(spark, events_dir, tmp_path,
+                                          files_per_trigger):
+    """The bounded drains of events_dedup_streaming and
+    events_followups_streaming skip the trailing no-data micro-batch:
+    dropDuplicatesWithinWatermark and a stream-stream inner join emit
+    in data batches, so with noDataMicroBatches off the drained output
+    must equal the default-config drain — in one batch and in many."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    dup_dir = str(tmp_path / "dup")
+    base = spark.read.parquet(events_dir)
+    base.union(base).repartition(3).write.mode("overwrite").parquet(dup_dir)
+
+    def drains(tag):
+        dedup = f"ndmb_dedup_{tag}_{files_per_trigger}"
+        follow = f"ndmb_follow_{tag}_{files_per_trigger}"
+        run_available_now(dedup_stream(read_event_stream(
+            spark, dup_dir, files_per_trigger)), dedup, "append")
+        run_available_now(followup_pairs_stream(
+            read_event_stream(spark, events_dir, files_per_trigger),
+            read_event_stream(spark, events_dir, files_per_trigger),
+            gap_minutes=30), follow, "append")
+        return (sorted(spark.table(dedup).collect()),
+                sorted(spark.table(follow).collect()))
+
+    default = drains("default")
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        off = drains("off")
+    finally:
+        spark.conf.set(key, prev)
+    assert default[0] and default[1]
+    assert off == default
 
 
 def test_watermark_drops_late_data(spark, tmp_path):

@@ -16,6 +16,28 @@ Scale design:
   distances partition-locally, then reduces with a two-phase top-k
   (per-partition groupBy -> global groupBy) so the shuffle carries at
   most |queries| x num_partitions x k rows instead of |queries| x N.
+  It is the narrow-dim tier and the oracle tier of the exact join.
+
+The Arrow tiers share one NumPy kernel, a local top-k per batch or
+group plus one global merge (the REPOSE shape of distributed top-k):
+
+- ``_np_dists`` is the only NumPy definition of the four metrics
+  (BLAS-expansion euclidean); ``_diff_dists`` is the direct difference
+  form (euclidean without cancellation, and manhattan), chunked to
+  ``DIFF_CHUNK_CELLS``; ``_scan_dists`` picks the direct euclidean for
+  the scan kernels.
+- ``_topk_cut`` is the only per-query (distance, id) cut: tie-safe,
+  vectorized, non-finite distances dropped (``_topk_candidates`` then
+  ``_first_k``; the broadcast kernel runs the first per block and the
+  second once per batch).
+- Two batch kernels feed ``_per_query_topk``: ``_broadcast_pairs``
+  (queries collected behind one prologue and shipped as a broadcast
+  variable; one mapInPandas pass over the corpus) and ``_cogroup_pairs``
+  (both sides shuffled once on a group key). ``knn_join_arrow`` is
+  ``_broadcast_pairs`` with every corpus row in cluster 0 and every
+  query probing it; ``knn_join_ivf_arrow`` runs either kernel over the
+  index's clusters; ``negatives`` runs ``_cogroup_pairs`` with a label
+  mask.
 """
 
 from __future__ import annotations
@@ -26,7 +48,7 @@ import pandas as pd  # module-level: pandas_udf resolves string hints here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.distance import distance
+from ..functions.distance import METRICS, distance
 from ..functions.util import bind_once
 from ..functions.vector import vector_lit
 
@@ -109,7 +131,7 @@ def knn_arrow(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if metric not in ("euclidean", "cosine", "dotproduct", "manhattan"):
+    if metric not in METRICS:
         raise ValueError(f"unsupported metric: {metric!r}")
     if id_cols is None:
         id_cols = [c for c in df.columns if c != vec_col]
@@ -134,23 +156,9 @@ def knn_arrow(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
             pdf = pdf[ok.values]
             if not len(pdf):
                 continue
-            m = np.stack(pdf[vec_col].map(
-                lambda v: np.asarray(v, dtype=np.float64)).values)
-            if metric == "euclidean":
-                d = np.sqrt(((m - q) ** 2).sum(axis=1))
-            elif metric == "manhattan":
-                d = np.abs(m - q).sum(axis=1)
-            elif metric == "dotproduct":
-                d = -(m @ q)
-            else:  # cosine, reference branch semantics (distance.go:73-107)
-                nm = np.linalg.norm(m, axis=1)
-                nq = np.linalg.norm(q)
-                dot = m @ q
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.clip(dot / (nm * nq), -1.0, 1.0)
-                d = np.where((nm == 0) | (nq == 0), 1.0, 1.0 - sim)
             res = pdf[list(id_cols)].copy()
-            res[dist_col] = d
+            res[dist_col] = _scan_dists(q[None, :], _stack_vecs(pdf[vec_col]),
+                                        metric)[0]
             sort_cols = [dist_col] + ([tie_col] if tie_col else [])
             top = res.sort_values(sort_cols, kind="stable").head(k)
             yield pd.DataFrame(top)
@@ -257,6 +265,8 @@ def _per_query_topk(pairs: DataFrame, k: int, dist_col: str,
     |queries| x num_partitions x k rows instead of |queries| x N.
     struct(dist, id) sorts lexicographically, so ties at the k boundary
     break on ascending corpus id — a deterministic total order.
+    ``two_phase=False`` ranks with one window per query instead: the
+    Arrow tiers' pairs are already cut to a local top-k per batch.
     """
     def local_topk(df: DataFrame, keys: list[str]) -> DataFrame:
         agg = df.groupBy(*keys).agg(
@@ -283,13 +293,13 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = DEFAULT_K,
              metric: str = "euclidean",
              query_id_col: str = "query_id", query_vec_col: str = "query_vec",
              corpus_id_col: str = "vec_id", corpus_vec_col: str = "embedding",
-             dist_col: str = "distance",
-             two_phase: bool = True) -> DataFrame:
+             dist_col: str = "distance") -> DataFrame:
     """For every query row, its k nearest corpus rows (exact).
 
     Output: (query_id, vec_id, distance). The query side is broadcast
     (it is the small side by construction); each corpus partition emits
-    only its local top-k per query before the single shuffle.
+    only its local top-k per query before the single shuffle. A query
+    with a null vector scores null against every row and gets no rows.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -301,7 +311,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = DEFAULT_K,
         "__qid", "__cid",
         distance(metric, F.col("__cvec"), F.col("__qvec")).alias(dist_col)
     ).filter(F.col(dist_col).isNotNull())  # drop dim-mismatch scores
-    topk = _per_query_topk(pairs, k, dist_col, two_phase)
+    topk = _per_query_topk(pairs, k, dist_col)
     return topk.select(F.col("__qid").alias(query_id_col),
                        F.col("__cid").alias(corpus_id_col),
                        F.col(dist_col))
@@ -315,101 +325,39 @@ def knn_join_arrow(queries: DataFrame, corpus: DataFrame,
                    corpus_vec_col: str = "embedding",
                    dist_col: str = "distance") -> DataFrame:
     """Exact batch knn join, Arrow/BLAS tier — ``knn_join`` with the
-    scoring done as one matrix product per Arrow batch instead of the
+    scoring done as one matrix op per Arrow batch instead of the
     Catalyst per-element distance fold (which is interpreted for
     higher-order functions; at dim 384 the fold made a 20-query exact
     recall gate cost as much as building a 200k-node graph index:
-    48.7 s vs 5 s for this tier, same result). Bit-equal top-k to
+    48.7 s vs 5 s for this tier, same result). Equal top-k to
     ``knn_join`` including boundary ties (parity-tested): the
     per-batch local top-k and the global reduce both order by
     (distance, corpus id).
 
-    The query side is collected to one matrix — bounded by the same
+    An exact broadcast join is an ivf-broadcast join whose one cluster
+    holds every corpus row: this is ``knn_join_ivf_arrow``'s broadcast
+    kernel with every row in cluster 0 and every query probing it. The
+    query side is collected to one matrix — bounded by the same
     contract under which the Column tier broadcasts it (queries are
-    the small side). All queries must share one dimension; corpus
-    rows of any other length are excluded, the per-pair mismatch rule
-    specialized to a uniform query batch.
+    the small side). Queries with a null vector get no rows, as in
+    ``knn_join``; the others must share one dimension (``ValueError``
+    otherwise), and corpus rows of any other length are excluded, the
+    per-pair mismatch rule specialized to a uniform query batch.
     """
     import numpy as np
-    import pandas as pd
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if metric not in ("euclidean", "cosine", "dotproduct", "manhattan"):
+    if metric not in METRICS:
         raise ValueError(f"unsupported metric: {metric!r}")
-    rows = queries.select(query_id_col, query_vec_col).collect()
-    if not rows:
-        empty = corpus.sparkSession.createDataFrame(
-            [], f"{query_id_col} {dict(queries.dtypes)[query_id_col]}, "
-                f"{corpus_id_col} {dict(corpus.dtypes)[corpus_id_col]}, "
-                f"{dist_col} double")
-        return empty
-    dims = {len(r[1]) for r in rows}
-    if len(dims) != 1:
-        raise ValueError(f"queries must share one dimension, got {dims}")
-    d = dims.pop()
-    qids = [r[0] for r in rows]
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    qn = np.linalg.norm(Q, axis=1)
-    qid_t = dict(queries.dtypes)[query_id_col]
-    cid_t = dict(corpus.dtypes)[corpus_id_col]
-    out_ddl = f"__qid {qid_t}, __cid {cid_t}, {dist_col} double"
-
-    def score(batches):
-        for pdf in batches:
-            vecs = pdf[corpus_vec_col]
-            ok = vecs.map(lambda v: v is not None and len(v) == d)
-            pdf = pdf[ok.values]
-            if not len(pdf):
-                continue
-            M = np.stack(pdf[corpus_vec_col].map(
-                lambda v: np.asarray(v, dtype=np.float64)).values)
-            if metric == "euclidean":
-                # direct form per query (nq is small by contract), not
-                # the BLAS expansion: bit-identical to knn_arrow's
-                # single-query scoring, no cancellation drift
-                D = np.stack([np.sqrt(((M - q) ** 2).sum(axis=1))
-                              for q in Q], axis=1)
-            elif metric == "dotproduct":
-                D = -(M @ Q.T)
-            elif metric == "manhattan":
-                D = np.stack([np.abs(M - q).sum(axis=1) for q in Q], axis=1)
-            else:  # cosine, reference branch semantics
-                nm = np.linalg.norm(M, axis=1)
-                dot = M @ Q.T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = np.clip(dot / (nm[:, None] * qn[None, :]),
-                                  -1.0, 1.0)
-                D = np.where((nm[:, None] == 0) | (qn[None, :] == 0),
-                             1.0, 1.0 - sim)
-            cids = pdf[corpus_id_col].values
-            out_q, out_c, out_d = [], [], []
-            for j, qid in enumerate(qids):
-                col = D[:, j]
-                top = min(k, len(col))
-                # boundary ties break on corpus id, like the struct
-                # sort — so the batch-local cut must keep EVERY
-                # candidate tied at the k-th distance before the
-                # (distance, cid) order picks the winners; a bare
-                # argpartition[:top] keeps an arbitrary tied subset
-                # and can drop the smallest-cid tie (common with
-                # duplicate vectors in dedup-centric corpora)
-                if top == len(col):
-                    idx = np.arange(len(col))
-                else:
-                    part = np.argpartition(col, top - 1)
-                    kth = col[part[top - 1]]
-                    idx = np.nonzero(col <= kth)[0]
-                idx = idx[np.lexsort((cids[idx], col[idx]))][:top]
-                out_q += [qid] * top
-                out_c += list(cids[idx])
-                out_d += list(col[idx])
-            yield pd.DataFrame({"__qid": out_q, "__cid": out_c,
-                                dist_col: out_d})
-
-    scored = corpus.select(corpus_id_col, corpus_vec_col) \
-        .mapInPandas(score, out_ddl)
-    topk = _per_query_topk(scored, k, dist_col, two_phase=False)
+    q = queries.select(F.col(query_id_col).alias("__qid"),
+                       F.col(query_vec_col).alias("__qvec"))
+    rows = corpus.select(F.col(corpus_id_col).alias("__cid"),
+                         F.col(corpus_vec_col).alias("__cvec"),
+                         F.lit(0).alias("__cluster"))
+    pairs = _broadcast_pairs(q, rows, k, metric, "__cluster", dist_col,
+                             lambda Q: {0: np.arange(len(Q))})
+    topk = _per_query_topk(pairs, k, dist_col, two_phase=False)
     return topk.select(F.col("__qid").alias(query_id_col),
                        F.col("__cid").alias(corpus_id_col),
                        F.col(dist_col))
@@ -505,13 +453,14 @@ def _probe_np(Q, centroids, nprobe: int):
     the same arithmetic per tier and the same (distance, index) order
     — ``_centroid_d2`` + stable argsort above EXPR_MAX_CENTROIDS, the
     expression tier's left fold of squared differences (then sqrt) at
-    or below it. Query rows go in chunks of <=4e7 distance cells."""
+    or below it. Query rows go in chunks of <= MATRIX_CHUNK_CELLS
+    distance cells."""
     import numpy as np
     C = np.asarray(centroids, dtype=np.float64)
     cn = (C ** 2).sum(1)
     take = min(nprobe, len(C))
     out = np.empty((len(Q), take), dtype=np.int64)
-    step = max(1, int(4e7) // len(C))
+    step = max(1, MATRIX_CHUNK_CELLS // len(C))
     for s in range(0, len(Q), step):
         X = Q[s:s + step]
         if len(C) > EXPR_MAX_CENTROIDS:
@@ -525,9 +474,31 @@ def _probe_np(Q, centroids, nprobe: int):
     return out
 
 
+#: distance cells of one (queries, rows) matrix block in the scoring
+#: kernels: chunks stay <= 320 MB of float64.
+#: cap: a memory bound, not a tier pick — a skewed or under-partitioned
+#: group only adds matmul calls, and every cell is computed whole inside
+#: one chunk, so the answers do not depend on it.
+MATRIX_CHUNK_CELLS = 40_000_000
+
+#: cells of one (queries, rows, dim) difference tensor in the direct
+#: forms (``_diff_dists``), ~8 MB of float64. A 20 x 10,000 x 384
+#: euclidean block (NumPy only, 4-core host, best of 5) scores in
+#: 188-238 ms at this bound, 310-396 ms at 4e6 cells and 450-500 ms at
+#: 4e7: a chunk that stays near the caches wins. Bulk-shaped
+#: ivf-broadcast blocks (~14 rows x ~2 queries x dim 128) and one
+#: query against a 10,000-row batch of dim <= 100 fit in one chunk.
+#: cap: a memory bound, not a tier pick — each (query, row) cell is one
+#: last-axis sum computed whole inside one chunk, so results are
+#: bit-identical at any bound.
+DIFF_CHUNK_CELLS = 1_000_000
+
+
 def _np_dists(Q, C, metric: str):
     """(q, c) distance matrix, NumPy/BLAS — same metric semantics as
-    functions/distance.py (cosine zero-norm => 1.0, clamped sim)."""
+    functions/distance.py (cosine zero-norm => 1.0, clamped sim). The
+    only NumPy definition of the four metrics; euclidean is the BLAS
+    expansion (``_scan_dists`` swaps in the direct form)."""
     import numpy as np
     if metric == "euclidean":
         # ||q-c||^2 = ||q||^2 + ||c||^2 - 2 q.c: one BLAS matmul, no
@@ -538,12 +509,7 @@ def _np_dists(Q, C, metric: str):
             - 2.0 * (Q @ C.T)
         return np.sqrt(np.clip(sq, 0.0, None))
     if metric == "manhattan":
-        out = np.empty((len(Q), len(C)))
-        step = max(1, int(4e7 // (C.shape[0] * C.shape[1] + 1)))
-        for s in range(0, len(Q), step):
-            out[s:s + step] = np.abs(
-                Q[s:s + step, None, :] - C[None, :, :]).sum(-1)
-        return out
+        return _diff_dists(Q, C, metric)
     if metric == "dotproduct":
         return -(Q @ C.T)
     if metric == "cosine":
@@ -554,6 +520,203 @@ def _np_dists(Q, C, metric: str):
         return np.where((nq[:, None] == 0) | (nc[None, :] == 0), 1.0,
                         1.0 - sim)
     raise ValueError(f"unsupported metric: {metric!r}")
+
+
+def _diff_dists(Q, M, metric: str):
+    """(q, m) distances in the direct difference form: euclidean
+    sqrt(sum((q - m)^2)) or manhattan sum(|q - m|), over (queries,
+    rows, dim) tensors of at most ``DIFF_CHUNK_CELLS`` cells — query
+    chunks, and row chunks too once one query's tensor is past the
+    bound. Each cell is one last-axis sum, so the values are the same
+    as a per-query ``((M - q) ** 2).sum(1)``."""
+    import numpy as np
+    out = np.empty((len(Q), len(M)))
+    qstep = max(1, DIFF_CHUNK_CELLS // max(1, M.size))
+    mstep = max(1, DIFF_CHUNK_CELLS // max(1, M.shape[1]))
+    fold = np.square if metric == "euclidean" else np.abs
+    for s in range(0, len(Q), qstep):
+        for t in range(0, len(M), mstep):
+            diff = Q[s:s + qstep, None, :] - M[None, t:t + mstep, :]
+            # in place: a second tensor-sized buffer per chunk costs
+            # more than the arithmetic
+            cell = fold(diff, out=diff).sum(-1)
+            out[s:s + qstep, t:t + mstep] = \
+                np.sqrt(cell) if metric == "euclidean" else cell
+    return out
+
+
+def _scan_dists(Q, M, metric: str):
+    """The scan kernels' distances: the direct euclidean form (no
+    cancellation: duplicate vectors score exactly 0, as in the Column
+    tier's fold), ``_np_dists`` for the other metrics."""
+    if metric == "euclidean":
+        return _diff_dists(Q, M, metric)
+    return _np_dists(Q, M, metric)
+
+
+def _first_k(qq, cc, dd, k: int):
+    """Order (query, corpus id, distance) triples by (query, distance,
+    id) and keep each query's first ``k``."""
+    import numpy as np
+    o = np.lexsort((cc, dd, qq))
+    qq, cc, dd = qq[o], cc[o], dd[o]
+    pos = np.arange(len(qq))
+    first = np.maximum.accumulate(
+        np.where(np.r_[True, qq[1:] != qq[:-1]], pos, 0))
+    top = pos - first < k
+    return qq[top], cc[top], dd[top]
+
+
+def _topk_candidates(D, k: int):
+    """(row, column) indexes of each row's finite entries of ``D`` up
+    to its k-th smallest distance. Tie-safe: EVERY candidate tied at
+    the k-th distance is kept, so the (distance, id) order of
+    ``_first_k`` picks the winners — an ``argpartition[:k]`` would keep
+    an arbitrary tied subset and could drop the smallest-id tie (common
+    with duplicate vectors in dedup-centric corpora). Non-finite
+    distances are dropped (a masked candidate is +inf)."""
+    import numpy as np
+    keep = np.isfinite(D)
+    if D.shape[1] > k:
+        kth = np.partition(np.where(keep, D, np.inf), k - 1, axis=1)[:, k - 1]
+        keep &= D <= kth[:, None]
+    return np.nonzero(keep)
+
+
+def _topk_cut(D, k: int, qrows, cids):
+    """The per-query (distance, id) top-k of one scored block, as
+    (query, corpus id, distance) arrays in (query, distance, id) order:
+    row r of ``D`` scores query ``qrows[r]`` against corpus ids
+    ``cids``; non-finite distances are dropped."""
+    r, c = _topk_candidates(D, k)
+    return _first_k(qrows[r], cids[c], D[r, c], k)
+
+
+def _cogroup_pairs(q: DataFrame, corpus: DataFrame, key: str, k: int,
+                   metric: str, dist_col: str,
+                   label_mask: bool = False) -> DataFrame:
+    """(__qid, __cid, dist) per-group local top-k rows: ``q`` is
+    (__qid, __qvec, key) and ``corpus`` is (__cid, __cvec, key); both
+    shuffle ONCE on ``key`` and each group scores its queries against
+    its corpus rows as one matrix op (``_np_dists``, BLAS-expansion
+    euclidean), in query chunks of at most ``MATRIX_CHUNK_CELLS``
+    distances. With ``label_mask`` the sides also carry __qlbl /
+    __clbl, and same-label pairs score +inf INSIDE the matrix step —
+    the filter composes before the cut, which drops them."""
+    import numpy as np
+    import pandas as pd
+
+    def score(_, qpdf, cpdf):
+        if not len(qpdf) or not len(cpdf):
+            return pd.DataFrame({"__qid": [], "__cid": [], dist_col: []})
+        Q, C = _stack_vecs(qpdf["__qvec"]), _stack_vecs(cpdf["__cvec"])
+        cids = cpdf["__cid"].values
+        parts = []
+        step = max(1, MATRIX_CHUNK_CELLS // len(C))
+        for s in range(0, len(Q), step):
+            D = _np_dists(Q[s:s + step], C, metric)
+            if label_mask:
+                same = (qpdf["__qlbl"].values[s:s + step, None]
+                        == cpdf["__clbl"].values[None, :])
+                D = np.where(same, np.inf, D)
+            parts.append(_topk_cut(D, k, np.arange(s, s + len(D)), cids))
+        qq, cc, dd = (np.concatenate(x) for x in zip(*parts))
+        return pd.DataFrame({"__qid": qpdf["__qid"].values[qq],
+                             "__cid": cc, dist_col: dd})
+
+    qid_t = dict(q.dtypes)["__qid"]
+    cid_t = dict(corpus.dtypes)["__cid"]
+    return q.groupBy(key).cogroup(corpus.groupBy(key)).applyInPandas(
+        score, f"__qid {qid_t}, __cid {cid_t}, {dist_col} double")
+
+
+def _broadcast_pairs(q: DataFrame, corpus: DataFrame, k: int, metric: str,
+                     pcol: str, dist_col: str, probe) -> DataFrame:
+    """(__qid, __cid, dist) batch-local top-k rows of a broadcast-query
+    join: ``q`` is (__qid, __qvec), ``corpus`` is (__cid, __cvec,
+    cluster column ``pcol``), and ``probe(Q)`` maps the query matrix to
+    {cluster: ascending row indexes of the queries probing it}.
+
+    The query prologue collects the queries, drops those with a null
+    vector, requires one shared dimension and returns an empty frame
+    when no query is left. The query matrix then ships once as a
+    broadcast variable, and one mapInPandas pass scores each corpus
+    row's cluster only against the queries probing it (``_scan_dists``
+    in query chunks of at most ``MATRIX_CHUNK_CELLS`` distances) and
+    emits each query's batch-local top-k, so the one shuffle carries
+    <= queries x batches x k rows. Null and wrong-length corpus vectors
+    are excluded."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType([q.schema["__qid"], corpus.schema["__cid"],
+                         StructField(dist_col, DoubleType())])
+    rows = [r for r in q.collect() if r[1] is not None]
+    spark = q.sparkSession
+    if not rows:
+        return spark.createDataFrame([], schema)
+    dims = {len(r[1]) for r in rows}
+    if len(dims) != 1:
+        raise ValueError(f"queries must share one dimension, got {dims}")
+    d = dims.pop()
+    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    qids = np.empty(len(rows), dtype=object)
+    qids[:] = [r[0] for r in rows]
+    bc = spark.sparkContext.broadcast((Q, qids, probe(Q)))
+
+    def score(batches):
+        Q, qids, by_cluster = bc.value
+        probed = np.fromiter(by_cluster, dtype=np.int64)
+        for pdf in batches:
+            cl = pdf[pcol].to_numpy()
+            vecs = pdf["__cvec"].to_numpy()
+            keep = np.flatnonzero(np.isin(cl, probed))
+            keep = keep[np.array([vecs[i] is not None and len(vecs[i]) == d
+                                  for i in keep], dtype=bool)]
+            if not len(keep):
+                continue
+            keep = keep[np.argsort(cl[keep], kind="stable")]
+            cl = cl[keep].astype(np.int64)
+            M = np.stack([np.asarray(v, dtype=np.float64)
+                          for v in vecs[keep]])
+            cids = pdf["__cid"].to_numpy()[keep]
+            cuts = np.flatnonzero(np.diff(cl)) + 1
+            parts = []
+            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(cl)]):
+                qrows = by_cluster[int(cl[lo])]
+                step = max(1, MATRIX_CHUNK_CELLS // (hi - lo))
+                for s in range(0, len(qrows), step):
+                    sub = qrows[s:s + step]
+                    D = _scan_dists(Q[sub], M[lo:hi], metric)
+                    r, c = _topk_candidates(D, k)
+                    parts.append((sub[r], cids[lo + c], D[r, c]))
+            # one (distance, id) cut over the whole batch: a query
+            # probing several of its clusters has candidates in each
+            qq, cc, dd = _first_k(*(np.concatenate(x) for x in zip(*parts)),
+                                  k)
+            yield pd.DataFrame({"__qid": qids[qq], "__cid": cc,
+                                dist_col: dd})
+
+    return corpus.mapInPandas(score, schema)
+
+
+def _probe_groups(Q, centroids, nprobe: int):
+    """``probe`` of ``_broadcast_pairs`` for an IVF index: checks the
+    query dimension against the index and maps each probed cluster to
+    the ascending rows of the queries probing it, picked in
+    ``probe_clusters_expr``'s order (``_probe_np``)."""
+    import numpy as np
+    d, index_dim = Q.shape[1], np.shape(centroids)[1]
+    if d != index_dim:
+        raise ValueError(f"query dimension {d} != index dimension "
+                         f"{index_dim}")
+    probes = _probe_np(Q, centroids, nprobe)
+    flat_c = probes.ravel()
+    o = np.argsort(flat_c, kind="stable")
+    clusters, starts = np.unique(flat_c[o], return_index=True)
+    flat_q = np.repeat(np.arange(len(Q)), probes.shape[1])[o]
+    return dict(zip(clusters.tolist(), np.split(flat_q, starts[1:])))
 
 
 def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
@@ -568,9 +731,8 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
     tested on every metric), without its per-pair interpreted fold.
 
     ``broadcast_queries=False`` (all-pairs / corpus-sized queries):
-    both sides shuffle ONCE on cluster id (the same co-partitioning as
-    ``knn_join_ivf(broadcast_queries=False)``), then a
-    cogroup-applyInPandas scores each cluster's queries against its
+    both sides shuffle ONCE on cluster id, then a cogroup-applyInPandas
+    (``_cogroup_pairs``) scores each cluster's queries against its
     corpus rows as one (q, c) matrix op and emits only the per-query
     local top-k; the global merge reduces queries x nprobe x k rows.
     Measured 28 s vs ~2 s for the Column tier at sf0.1 all-pairs.
@@ -578,20 +740,17 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
     ``broadcast_queries=True`` (the chooser's ``ivf-broadcast`` tier —
     the query side is broadcast-sized by that contract): the queries
     are collected, each query's ``nprobe`` clusters are picked
-    driver-side in ``probe_clusters_expr``'s order, and the query
-    matrix ships once as a broadcast variable. One mapInPandas pass
-    over the live index table then scores each row's stored cluster
-    only against the queries probing it — the direct euclidean form
-    (no cancellation: duplicate vectors score exactly 0), ``_np_dists``
-    for the other metrics, blocks chunked to <=4e7 cells like the
-    cogroup kernel — and emits each query's batch-local top-k, so the
-    one shuffle carries <= queries x batches x k rows. Null and
-    wrong-length corpus vectors are excluded; queries with a null
-    vector are dropped; all queries must share the index's dimension
-    (``ValueError`` otherwise, as in ``knn_join_arrow``). The kernel
-    is one Python pass per task, with no probe UDF and no broadcast
-    hash join; only an index whose clusters are not yet materialized
-    (a fresh build) adds its assign pass to the same stage.
+    driver-side in ``probe_clusters_expr``'s order, and
+    ``_broadcast_pairs`` scores the live index table in one
+    mapInPandas pass — each row's stored cluster only against the
+    queries probing it, with the direct euclidean form (no
+    cancellation: duplicate vectors score exactly 0). Queries with a
+    null vector are dropped; all queries must share the index's
+    dimension (``ValueError`` otherwise, as in ``knn_join_arrow``).
+    The kernel is one Python pass per task, with no probe UDF and no
+    broadcast hash join; only an index whose clusters are not yet
+    materialized (a fresh build) adds its assign pass to the same
+    stage.
 
     Column broadcast join (``knn_join_ivf``) vs this mode, sf0.1
     embeddings (2,000 x 64), euclidean, k=10, nprobe ~ 20 % of nlist
@@ -616,7 +775,7 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    if metric not in ("euclidean", "cosine", "dotproduct", "manhattan"):
+    if metric not in METRICS:
         raise ValueError(f"unsupported metric: {metric!r}")
     pcol = index.PARTITION_COL
     corpus = index._live(index.table).select(
@@ -624,161 +783,53 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
         F.col(index.vec_col).alias("__cvec"), pcol)
     q = queries.select(F.col(query_id_col).alias("__qid"),
                        F.col(query_vec_col).alias("__qvec"))
-    pairs_of = _ivf_broadcast_pairs if broadcast_queries \
-        else _ivf_cogroup_pairs
-    pairs = pairs_of(q, corpus, index.centroids, k, nprobe, metric, pcol,
-                     dist_col)
+    if broadcast_queries:
+        pairs = _broadcast_pairs(
+            q, corpus, k, metric, pcol, dist_col,
+            lambda Q: _probe_groups(Q, index.centroids, nprobe))
+    else:
+        q = q.withColumn(pcol, F.explode(probe_clusters_expr(
+            index.centroids, F.col("__qvec"), nprobe)))
+        pairs = _cogroup_pairs(q, corpus, pcol, k, metric, dist_col)
     topk = _per_query_topk(pairs, k, dist_col, two_phase=False)
     return topk.select(F.col("__qid").alias(query_id_col),
                        F.col("__cid").alias(index.id_col),
                        F.col(dist_col))
 
 
-def _ivf_cogroup_pairs(q: DataFrame, corpus: DataFrame, centroids,
-                       k: int, nprobe: int, metric: str, pcol: str,
-                       dist_col: str) -> DataFrame:
-    """(__qid, __cid, dist) per-cluster local top-k rows of the
-    ``broadcast_queries=False`` mode of ``knn_join_ivf_arrow``: ``q``
-    is (__qid, __qvec), ``corpus`` is (__cid, __cvec, cluster column)."""
-    import numpy as np
-    import pandas as pd
-
-    q = q.withColumn(pcol, F.explode(probe_clusters_expr(
-        centroids, F.col("__qvec"), nprobe)))
-
-    def score(key, qpdf, cpdf):
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame({"__qid": [], "__cid": [], dist_col: []})
-        Q = np.stack(qpdf["__qvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        C = np.stack(cpdf["__cvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        cids = cpdf["__cid"].values
-        qids = qpdf["__qid"].values
-        # local top-k per query, ties -> ascending corpus id (the same
-        # total order as the struct-sort merge and the SQL oracle).
-        # The query side scores in chunks bounding the D matrix to
-        # ~4e7 cells (~320 MB f64): a skewed/under-partitioned cluster
-        # degrades to more matmul calls, never to an OOM.
-        out_q, out_c, out_d = [], [], []
-        step = max(1, int(4e7) // max(1, len(C)))
-        for s in range(0, len(Q), step):
-            D = _np_dists(Q[s:s + step], C, metric)
-            for r in range(D.shape[0]):
-                idx = np.lexsort((cids, D[r]))[:k]
-                out_q.extend([qids[s + r]] * len(idx))
-                out_c.extend(cids[idx])
-                out_d.extend(D[r, idx])
-        return pd.DataFrame({"__qid": out_q, "__cid": out_c,
-                             dist_col: out_d})
-
-    qid_t = dict(q.dtypes)["__qid"]
-    cid_t = dict(corpus.dtypes)["__cid"]
-    return q.groupBy(pcol).cogroup(corpus.groupBy(pcol)).applyInPandas(
-        score, f"__qid {qid_t}, __cid {cid_t}, {dist_col} double")
-
-
-def _ivf_broadcast_pairs(q: DataFrame, corpus: DataFrame, centroids,
-                         k: int, nprobe: int, metric: str, pcol: str,
-                         dist_col: str) -> DataFrame:
-    """(__qid, __cid, dist) batch-local top-k rows of the
-    ``broadcast_queries=True`` mode of ``knn_join_ivf_arrow``: ``q`` is
-    (__qid, __qvec), ``corpus`` is (__cid, __cvec, cluster column)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([q.schema["__qid"], corpus.schema["__cid"],
-                         StructField(dist_col, DoubleType())])
-    rows = [r for r in q.collect() if r[1] is not None]
-    spark = q.sparkSession
-    if not rows:
-        return spark.createDataFrame([], schema)
-    dims = {len(r[1]) for r in rows}
-    if len(dims) != 1:
-        raise ValueError(f"queries must share one dimension, got {dims}")
-    d, index_dim = dims.pop(), np.shape(centroids)[1]
-    if d != index_dim:
-        raise ValueError(f"query dimension {d} != index dimension "
-                         f"{index_dim}")
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    qids = np.empty(len(rows), dtype=object)
-    qids[:] = [r[0] for r in rows]
-    # cluster -> ascending row indexes of the queries probing it
-    probes = _probe_np(Q, centroids, nprobe)
-    flat_c = probes.ravel()
-    o = np.argsort(flat_c, kind="stable")
-    clusters, starts = np.unique(flat_c[o], return_index=True)
-    flat_q = np.repeat(np.arange(len(Q)), probes.shape[1])[o]
-    by_cluster = dict(zip(clusters.tolist(), np.split(flat_q, starts[1:])))
-    bc = spark.sparkContext.broadcast((Q, qids, by_cluster))
-    # cells per query row of a distance block: the direct euclidean
-    # form materializes the (q, c, dim) difference tensor
-    width = d if metric == "euclidean" else 1
-
-    def block_topk(Qb, M, cids, qrows):
-        """Score one cluster's rows against the queries probing it and
-        keep, per query, every candidate up to its k-th distance (ties
-        included, so the (distance, id) cut below stays exact)."""
-        if metric == "euclidean":
-            D = np.sqrt(((Qb[:, None, :] - M[None, :, :]) ** 2).sum(-1))
-        else:
-            D = _np_dists(Qb, M, metric)
-        if D.shape[1] > k:
-            kth = np.partition(D, k - 1, axis=1)[:, k - 1]
-            r, c = np.nonzero(D <= kth[:, None])
-        else:
-            r, c = np.divmod(np.arange(D.size), D.shape[1])
-        return qrows[r], cids[c], D[r, c]
-
-    def score(batches):
-        Q, qids, by_cluster = bc.value
-        probed = np.fromiter(by_cluster, dtype=np.int64)
-        for pdf in batches:
-            cl = pdf[pcol].to_numpy()
-            vecs = pdf["__cvec"].to_numpy()
-            keep = np.flatnonzero(np.isin(cl, probed))
-            keep = keep[np.array([vecs[i] is not None and len(vecs[i]) == d
-                                  for i in keep], dtype=bool)]
-            if not len(keep):
-                continue
-            keep = keep[np.argsort(cl[keep], kind="stable")]
-            cl = cl[keep].astype(np.int64)
-            M = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in vecs[keep]])
-            cids = pdf["__cid"].to_numpy()[keep]
-            cuts = np.flatnonzero(np.diff(cl)) + 1
-            parts = []
-            for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(cl)]):
-                qrows = by_cluster[int(cl[lo])]
-                step = max(1, int(4e7) // ((hi - lo) * width))
-                for s in range(0, len(qrows), step):
-                    sub = qrows[s:s + step]
-                    parts.append(block_topk(Q[sub], M[lo:hi],
-                                            cids[lo:hi], sub))
-            qq, cc, dd = (np.concatenate(x) for x in zip(*parts))
-            # per-query top-k of this batch in (distance, corpus id)
-            # order: sort by (query, distance, id), keep each query's
-            # first k
-            o = np.lexsort((cc, dd, qq))
-            qq, cc, dd = qq[o], cc[o], dd[o]
-            pos = np.arange(len(qq))
-            first = np.maximum.accumulate(
-                np.where(np.r_[True, qq[1:] != qq[:-1]], pos, 0))
-            top = pos - first < k
-            yield pd.DataFrame({"__qid": qids[qq[top]], "__cid": cc[top],
-                                dist_col: dd[top]})
-
-    return corpus.mapInPandas(score, schema)
+def _ivf_column_pairs(queries: DataFrame, index, nprobe: int, metric: str,
+                      query_id_col: str, query_vec_col: str, dist_col: str,
+                      broadcast: bool) -> DataFrame:
+    """Scored (__qid, __cid, dist) pairs of the Column IVF join: each
+    query row explodes to its ``nprobe`` probe clusters (a pure Column
+    expression), equi-joins the live index table on the cluster id and
+    scores each pair with the Column ``distance``; null (dim-mismatch)
+    scores are dropped. Shared by the batch ``knn_join_ivf``
+    (``broadcast=True``) and the streaming ``score_query_stream``,
+    whose query side is a stream."""
+    pcol = index.PARTITION_COL
+    probes = probe_clusters_expr(index.centroids,
+                                 F.col(query_vec_col), nprobe)
+    q = queries.select(
+        F.col(query_id_col).alias("__qid"),
+        F.col(query_vec_col).alias("__qvec"),
+        F.explode(probes).alias(pcol))
+    if broadcast:
+        q = F.broadcast(q)
+    corpus = index._live(index.table).select(
+        F.col(index.id_col).alias("__cid"),
+        F.col(index.vec_col).alias("__cvec"), pcol)
+    return corpus.join(q, pcol).select(
+        "__qid", "__cid",
+        distance(metric, F.col("__cvec"), F.col("__qvec")).alias(dist_col)
+    ).filter(F.col(dist_col).isNotNull())
 
 
 def knn_join_ivf(queries: DataFrame, index, k: int = DEFAULT_K,
                  nprobe: int = 3, metric: str = "euclidean",
                  query_id_col: str = "query_id",
                  query_vec_col: str = "query_vec",
-                 dist_col: str = "distance",
-                 two_phase: bool = True,
-                 broadcast_queries: bool = True) -> DataFrame:
+                 dist_col: str = "distance") -> DataFrame:
     """IVF-accelerated similarity join: each query scores only the rows
     of its ``nprobe`` nearest clusters.
 
@@ -792,7 +843,10 @@ def knn_join_ivf(queries: DataFrame, index, k: int = DEFAULT_K,
     index, and the join prunes the candidate set to ~nprobe/n_centroids
     of the corpus per query before any distance is computed. With the
     index table saved partitioned by cluster, the probe filter is real
-    partition pruning at the source.
+    partition pruning at the source (small query batches broadcast and
+    get dynamic partition pruning). A corpus-sized query side belongs
+    on ``knn_join_ivf_arrow``'s cogroup mode, which shuffles both sides
+    on the cluster id instead.
 
     ``index`` is an :class:`~..operators.ann.IvfIndex` (tombstones are
     respected). Probe selection orders by (centroid distance, centroid
@@ -808,27 +862,9 @@ def knn_join_ivf(queries: DataFrame, index, k: int = DEFAULT_K,
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    probes = probe_clusters_expr(index.centroids,
-                                 F.col(query_vec_col), nprobe)
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_vec_col).alias("__qvec"),
-        F.explode(probes).alias(index.PARTITION_COL))
-    # small query batches broadcast (and get dynamic partition pruning
-    # on a saved layout); a query side too big to broadcast — e.g.
-    # all-pairs near-neighbor where queries ARE a corpus — shuffles
-    # both sides by cluster id instead, so each cluster's candidates
-    # co-locate and the pairwise work stays bounded per cluster
-    q = F.broadcast(q) if broadcast_queries else q
-    corpus = index._live(index.table)
-    pairs = corpus.select(
-        F.col(index.id_col).alias("__cid"),
-        F.col(index.vec_col).alias("__cvec"), index.PARTITION_COL
-    ).join(q, index.PARTITION_COL).select(
-        "__qid", "__cid",
-        distance(metric, F.col("__cvec"), F.col("__qvec")).alias(dist_col)
-    ).filter(F.col(dist_col).isNotNull())
-    topk = _per_query_topk(pairs, k, dist_col, two_phase)
+    pairs = _ivf_column_pairs(queries, index, nprobe, metric, query_id_col,
+                              query_vec_col, dist_col, broadcast=True)
+    topk = _per_query_topk(pairs, k, dist_col)
     return topk.select(F.col("__qid").alias(query_id_col),
                        F.col("__cid").alias(index.id_col),
                        F.col(dist_col))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import _per_query_topk
+from .knn import _cogroup_pairs, _per_query_topk, probe_clusters_expr
 
 
 def in_batch_negatives(df: DataFrame, key: str, k: int = 4,
@@ -105,11 +105,6 @@ def hard_negative_join_ivf(df: DataFrame, index, k: int = 4,
     not the full probed clusters — acceptable for contrastive mining,
     where candidate diversity matters more than exact rank. ``None``
     keeps the exact-within-probes semantics."""
-    import numpy as np
-    import pandas as pd
-
-    from .knn import probe_clusters_expr
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if nprobe < 1:
@@ -134,40 +129,8 @@ def hard_negative_join_ivf(df: DataFrame, index, k: int = 4,
         corpus = (corpus.withColumn("__r", F.row_number().over(w))
                   .filter(F.col("__r") <= cluster_cap).drop("__r"))
 
-    def score(key, qpdf, cpdf):
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame({"__qid": [], "__cid": [], dist_col: []})
-        from .knn import _np_dists
-        Q = np.stack(qpdf["__qvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        C = np.stack(cpdf["__cvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        cids = cpdf["__cid"].values
-        qids = qpdf["__qid"].values
-        qlbl = qpdf["__qlbl"].values
-        clbl = cpdf["__clbl"].values
-        out_q, out_c, out_d = [], [], []
-        # chunk the query side (same D-matrix memory bound as
-        # knn_join_ivf_arrow): the label mask still applies INSIDE the
-        # matrix step, before the local top-k
-        step = max(1, int(4e7) // max(1, len(C)))
-        for s in range(0, len(Q), step):
-            D = _np_dists(Q[s:s + step], C, metric)
-            same = qlbl[s:s + step, None] == clbl[None, :]
-            D = np.where(same, np.inf, D)
-            for r in range(D.shape[0]):
-                order = np.lexsort((cids, D[r]))[:k]
-                order = order[np.isfinite(D[r, order])]
-                out_q.extend([qids[s + r]] * len(order))
-                out_c.extend(cids[order])
-                out_d.extend(D[r, order])
-        return pd.DataFrame({"__qid": out_q, "__cid": out_c,
-                             dist_col: out_d})
-
-    qid_t = dict(q.dtypes)["__qid"]
-    cid_t = dict(corpus.dtypes)["__cid"]
-    pairs = q.groupBy(pcol).cogroup(corpus.groupBy(pcol)).applyInPandas(
-        score, f"__qid {qid_t}, __cid {cid_t}, {dist_col} double")
+    pairs = _cogroup_pairs(q, corpus, pcol, k, metric, dist_col,
+                           label_mask=True)
     topk = _per_query_topk(pairs, k, dist_col, two_phase=False)
     return (topk.withColumnRenamed("__qid", "query_id")
             .withColumnRenamed("__cid", index.id_col))
@@ -196,11 +159,6 @@ def hard_negative_join(df: DataFrame, k: int = 4,
     anchors-x-block pair scores as one matrix op with the same-label
     mask applied before the local top-k. Measured 8x over the
     interpreted-fold crossJoin at |anchors|=50, |corpus|=20k."""
-    import numpy as np
-    import pandas as pd
-
-    from .knn import _np_dists
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if blocks < 1:
@@ -215,34 +173,8 @@ def hard_negative_join(df: DataFrame, k: int = 4,
         F.col(label_col).alias("__clbl"),
         F.pmod(F.hash(F.col(id_col)), F.lit(blocks)).alias("__blk"))
 
-    def score(key, qpdf, cpdf):
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame({"__qid": [], "__cid": [], dist_col: []})
-        Q = np.stack(qpdf["__qvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        C = np.stack(cpdf["__cvec"].map(
-            lambda v: np.asarray(v, dtype=np.float64)).values)
-        D = _np_dists(Q, C, metric)
-        same = (qpdf["__qlbl"].values[:, None]
-                == cpdf["__clbl"].values[None, :])
-        D = np.where(same, np.inf, D)
-        cids = cpdf["__cid"].values
-        qids = qpdf["__qid"].values
-        out_q, out_c, out_d = [], [], []
-        for r in range(D.shape[0]):
-            order = np.lexsort((cids, D[r]))[:k]
-            order = order[np.isfinite(D[r, order])]
-            out_q.extend([qids[r]] * len(order))
-            out_c.extend(cids[order])
-            out_d.extend(D[r, order])
-        return pd.DataFrame({"__qid": out_q, "__cid": out_c,
-                             dist_col: out_d})
-
-    qid_t = dict(q.dtypes)["__qid"]
-    cid_t = dict(corpus.dtypes)["__cid"]
-    pairs = q.groupBy("__blk").cogroup(corpus.groupBy("__blk")) \
-        .applyInPandas(score,
-                       f"__qid {qid_t}, __cid {cid_t}, {dist_col} double")
+    pairs = _cogroup_pairs(q, corpus, "__blk", k, metric, dist_col,
+                           label_mask=True)
     return (_per_query_topk(pairs, k, dist_col, two_phase=False)
             .withColumnRenamed("__qid", "query_id")
             .withColumnRenamed("__cid", id_col))

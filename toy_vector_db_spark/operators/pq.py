@@ -643,8 +643,7 @@ def knn_join_ivfpq(queries: DataFrame, index: IvfPqIndex,
                    k: int = DEFAULT_K, nprobe: int = 3, rerank: int = 0,
                    query_id_col: str = "query_id",
                    query_vec_col: str = "query_vec",
-                   dist_col: str = "distance",
-                   two_phase: bool = True) -> DataFrame:
+                   dist_col: str = "distance") -> DataFrame:
     """Batch similarity join over the compressed index: IVF cluster
     pruning + per-query ADC scoring — the billion-scale batch-search
     layout (faiss IVFx,PQy batch mode) as a DataFrame join.
@@ -691,8 +690,7 @@ def knn_join_ivfpq(queries: DataFrame, index: IvfPqIndex,
         "__qid", "__cid",
         index.codec.adc_from_lut_col(F.col("__lut")).alias(dist_col)
     ).filter(F.col(dist_col).isNotNull())
-    topk = _per_query_topk(pairs, rerank * k if rerank else k,
-                           dist_col, two_phase)
+    topk = _per_query_topk(pairs, rerank * k if rerank else k, dist_col)
     out = topk.select(F.col("__qid").alias(query_id_col),
                       F.col("__cid").alias(index.id_col), F.col(dist_col))
     if not rerank:

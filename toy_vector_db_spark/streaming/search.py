@@ -36,8 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.distance import distance
-from ..operators.knn import DEFAULT_K, _per_query_topk, probe_clusters_expr
+from ..operators.knn import DEFAULT_K, _ivf_column_pairs, _per_query_topk
 
 
 def score_query_stream(index, query_stream: DataFrame,
@@ -46,25 +45,13 @@ def score_query_stream(index, query_stream: DataFrame,
                        query_vec_col: str = "query_vec",
                        dist_col: str = "distance") -> DataFrame:
     """Probe-explode + stream-static cluster equi-join + distance
-    scoring, all expressed on the (possibly streaming) query side.
+    scoring, all expressed on the (possibly streaming) query side — the
+    batch ``knn_join_ivf``'s pair builder without its query broadcast.
     Returns scored (__qid, __cid, distance) pairs — unbounded, one row
     per (query, candidate)."""
-    probes = probe_clusters_expr(index.centroids,
-                                 F.col(query_vec_col), nprobe)
-    q = query_stream.select(
-        F.col(query_id_col).alias("__qid"),
-        F.col(query_vec_col).alias("__qvec"),
-        F.explode(probes).alias(index.PARTITION_COL))
-    corpus = index._live(index.table)
-    return q.join(
-        corpus.select(F.col(index.id_col).alias("__cid"),
-                      F.col(index.vec_col).alias("__cvec"),
-                      index.PARTITION_COL),
-        index.PARTITION_COL
-    ).select(
-        "__qid", "__cid",
-        distance(metric, F.col("__cvec"), F.col("__qvec")).alias(dist_col)
-    ).filter(F.col(dist_col).isNotNull())
+    return _ivf_column_pairs(query_stream, index, nprobe, metric,
+                             query_id_col, query_vec_col, dist_col,
+                             broadcast=False)
 
 
 def start_streaming_search(index, query_stream: DataFrame, out_path: str,

@@ -3220,8 +3220,8 @@ def knn_join_ivfpq_rerank_batch(spark: SparkSession,
 # shuffle ONCE on cluster id and each cluster scores its queries
 # against its corpus rows as one BLAS matrix op
 # (knn_join_ivf_arrow, cogroup-applyInPandas; the Column-expression
-# shuffle path knn_join_ivf(broadcast_queries=False) computes the same
-# candidates — equivalence-tested in test_knn.py — but its per-pair
+# knn_join_ivf computes the same candidates — parity-tested in
+# test_knn.py — but a Column shuffle equi-join with its per-pair
 # interpreted fold measured 28 s vs ~2 s here at sf0.1). Every corpus
 # row gets its 3 nearest (self included, rank 1 at distance 0 — kept:
 # it proves the join saw every row). Full value oracle: the batch
