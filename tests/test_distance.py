@@ -61,6 +61,16 @@ def test_dim_mismatch_default_null(spark):
     assert got is None
 
 
+def test_cosine_null_on_mismatch_or_null_vector(spark):
+    # greatest() skips nulls: an unguarded clamp scores these 2.0
+    assert _eval(spark, distance("cosine", vector_lit([1, 0]),
+                                 vector_lit([1, 0, 0]))) is None
+    assert _eval(spark, distance("cosine", F.lit(None).cast("array<float>"),
+                                 vector_lit([1, 0]))) is None
+    assert _eval(spark, distance("cosine", vector_lit([0, 0]),
+                                 vector_lit([1, 0]))) == 1.0
+
+
 def test_normalize(spark):
     # 3-4-5 triangle (reference vector_test.go:122-146)
     got = _eval(spark, normalize(vector_lit([3, 4])))

@@ -251,9 +251,7 @@ def test_knn_join_arrow_boundary_ties_in_one_batch(spark):
 
 def test_knn_join_arrow_null_query_vector_matches_column_tier(spark):
     """A query with a null vector beside valid ones gets no rows, as in
-    the Column knn_join; the valid queries' answers are unchanged.
-    (Cosine is left out: the Column cosine scores a null vector 2.0
-    rather than null, so that tier answers the null query.)"""
+    the Column knn_join; the valid queries' answers are unchanged."""
     from toy_vector_db_spark.operators.knn import knn_join_arrow
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 4).select(
@@ -263,7 +261,7 @@ def test_knn_join_arrow_null_query_vector_matches_column_tier(spark):
                               "query_id long, query_vec array<float>"))
     norm = lambda d: sorted((r["query_id"], r["vec_id"],
                              round(r["distance"], 6)) for r in d.collect())
-    for metric in ("euclidean", "dotproduct", "manhattan"):
+    for metric in ("euclidean", "cosine", "dotproduct", "manhattan"):
         want = norm(knn_join(queries, emb, k=3, metric=metric))
         assert want and 7777 not in {t[0] for t in want}
         assert norm(knn_join_arrow(queries, emb, k=3, metric=metric)) \

@@ -57,11 +57,15 @@ def euclidean(a: Column, b: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """1 - cosine_similarity, with the reference's edge branches:
     either vector zero-norm => distance 1.0 (distance.go:89-91);
-    similarity clamped to [-1, 1] before subtraction (distance.go:97-103)."""
-    na, nb = l2_norm(a), l2_norm(b)
-    sim = dot(a, b) / (na * nb)
-    clamped = F.least(F.greatest(sim, F.lit(-1.0)), F.lit(1.0))
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(1.0)).otherwise(1.0 - clamped)
+    similarity clamped to [-1, 1] before subtraction (distance.go:97-103).
+    A null vector or a dimension mismatch is null, as in the other
+    metrics (``greatest`` skips nulls, so the clamp alone would score
+    it 2.0)."""
+    na, nb, ab = l2_norm(a), l2_norm(b), dot(a, b)
+    clamped = F.least(F.greatest(ab / (na * nb), F.lit(-1.0)), F.lit(1.0))
+    return (F.when(ab.isNull(), F.lit(None))
+            .when((na == 0.0) | (nb == 0.0), F.lit(1.0))
+            .otherwise(1.0 - clamped))
 
 
 def dotproduct(a: Column, b: Column) -> Column:

@@ -174,6 +174,15 @@ def knn_arrow(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
 # expression fold wins for narrow vectors (per-element codegen is cheap,
 # no Python round-trip); the BLAS matrix-vector path wins from roughly
 # dim 32 up (2.6x on dim-64 cosine). Tunable per call.
+# Re-measured with and without the per-task zip re-read (pyworker.py):
+# cosine top-10 over 20,000 cached random rows, 4 partitions, collect,
+# best of 5, 4-core host, seconds:
+#   dim              8     16     32     64    128
+#   column before 0.33   0.26   0.35   0.38   0.55
+#   arrow before  0.39   0.37   0.34   0.37   0.40
+#   column after  0.31   0.25   0.31   0.46   0.80
+#   arrow after   0.19   0.17   0.17   0.17   0.20
+# Without the re-read Arrow wins from dim 8; the constant is unchanged.
 ARROW_TIER_MIN_DIM = 32
 
 
@@ -383,6 +392,14 @@ def knn_join_arrow(queries: DataFrame, corpus: DataFrame,
 #: tiers are value-identical — first-minimum argmin / stable-argsort
 #: tie-breaks, parity-tested in test_ann.py, and the 18 ANN oracle
 #: queries were re-proven after this change).
+#: Re-measured after the per-task zip re-read left the Python worker
+#: (pyworker.py), same probe, 4-core host, assign pass (pyspark.daemon
+#: -> pyworker daemon; expr does not run Python and does not move):
+#:   nlist      8     16     32     64    128    179    256    565
+#:   expr    0.34   0.34   0.63   1.15   2.10   2.59   3.74   9.12
+#:   arrow   0.27   0.27   0.27   0.30   0.24   0.26   0.28   0.36  (before)
+#:   arrow   0.13   0.12   0.12   0.09   0.09   0.09   0.11   0.13  (after)
+#: Arrow now wins at nlist 8 too; the constant is left as it was.
 #: cap: a TIER-CROSSOVER (same answers both sides), not a work bound —
 #: past it the Arrow tier takes over, so nothing degenerates at scale.
 EXPR_MAX_CENTROIDS = 16
@@ -769,7 +786,20 @@ def knn_join_ivf_arrow(queries: DataFrame, index, k: int = DEFAULT_K,
        1000  this         0.50  0.48  0.52  0.60  0.70  0.73  0.85
 
     The Column tier wins no cell, so there is no crossover knob: the
-    chooser sends every broadcast-sized IVF join here.
+    chooser sends every broadcast-sized IVF join here. Re-measured
+    before / after the per-task zip re-read left the Python worker
+    (pyworker.py), same probe, this mode only (the Column tier runs no
+    Python and again won no cell, 0.40-12.7 s):
+
+      batch            nlist 16    32    64   128   179   256   565
+          1  before       0.54  0.40  0.42  0.41  0.48  0.43  0.45
+          1  after        0.39  0.30  0.23  0.25  0.25  0.20  0.24
+         10  before       0.39  0.43  0.36  0.32  0.42  0.39  0.44
+         10  after        0.23  0.20  0.22  0.21  0.20  0.20  0.21
+        100  before       0.57  0.75  0.66  0.61  0.57  0.42  0.46
+        100  after        0.27  0.21  0.25  0.22  0.22  0.24  0.28
+       1000  before       0.93  0.75  0.65  0.86  0.85  0.77  0.89
+       1000  after        0.54  0.35  0.43  0.46  0.53  0.56  0.67
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

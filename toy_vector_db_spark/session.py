@@ -27,6 +27,9 @@ DEFAULT_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # PySpark's daemon, minus the per-task zip-directory re-read (the
+    # ~200 ms Python-worker floor; see pyworker.py and DEPLOYMENT.md).
+    "spark.python.daemon.module": "toy_vector_db_spark.pyworker",
 }
 
 
