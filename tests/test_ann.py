@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark.functions.vector import vector_lit
 from toy_vector_db_spark.operators.ann import IvfIndex, LshIndex, recall_at_k
 from toy_vector_db_spark.operators.knn import knn, lookup_vector
 
@@ -202,48 +203,110 @@ def test_index_delete_accepts_dataframe(spark, emb):
     assert live.isdisjoint({0, 1, 2, 3, 4})
 
 
-def test_assign_and_probe_tiers_agree(spark, emb):
-    """The Arrow/BLAS assign+probe tier (> EXPR_MAX_CENTROIDS) must
-    produce the SAME cluster assignment and probe lists as the
-    bit-exact fold-expression tier — the sqrt(N) sizing rule is only
-    sound if crossing the tier threshold can't change answers."""
-    from toy_vector_db_spark.operators.knn import (EXPR_MAX_CENTROIDS,
-                                                   probe_clusters_expr)
-    sub = emb.limit(200)
-    nc = EXPR_MAX_CENTROIDS + 8  # forces the Arrow tier
-    idx = IvfIndex.build_deterministic(sub, n_centroids=nc)
-    # expression tier, forced by slicing under the threshold is WRONG
-    # (different centroid set) — instead rebuild the fold expression
-    # for the same centroids by calling the expr branch directly
-    from pyspark.sql import functions as F
-    v = F.col("embedding").cast("array<double>")
-    dists = F.array(*[
-        F.sqrt(F.aggregate(
-            F.zip_with(v, F.lit([float(x) for x in c]),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda s, x: s + x))
-        for c in idx.centroids])
-    expr_assign = (F.array_position(dists, F.array_min(dists)) - 1) \
-        .cast("int")
-    got = (sub.select("vec_id",
-                      IvfIndex._assign_expr(idx.centroids,
-                                            "embedding").alias("a"),
-                      expr_assign.alias("b"))
-           .filter(F.col("a") != F.col("b")).count())
-    assert got == 0
-    # probe lists: arrow stable-argsort == struct-sort (d, i) order
-    cdist = F.array(*[
-        F.struct(
-            F.sqrt(F.aggregate(
-                F.zip_with(v, F.lit([float(x) for x in c]),
-                           lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda s, x: s + x)).alias("d"),
-            F.lit(i).alias("i"))
-        for i, c in enumerate(idx.centroids)])
-    expr_probe = F.transform(F.slice(F.sort_array(cdist), 1, 3),
-                             lambda s: s["i"])
-    bad = (sub.select(
-        probe_clusters_expr(idx.centroids, F.col("embedding"), 3).alias("a"),
-        expr_probe.alias("b"))
-        .filter(F.col("a") != F.col("b")).count())
-    assert bad == 0
+def _fold_reference(centroids, v):
+    """The Column fold every IVF assign and probe used to run: per
+    centroid sqrt(aggregate(zip_with((x - c)^2), 0.0, s + x)), then the
+    first minimum (assign) and the struct sort (d, i) (probes)."""
+    dists = [F.sqrt(F.aggregate(
+        F.zip_with(v, vector_lit(c),
+                   lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda s, x: s + x)) for c in centroids]
+    assign = (F.array_position(F.array(*dists), F.array_min(F.array(*dists)))
+              - 1).cast("int")
+    cdist = F.array(*[F.struct(d.alias("d"), F.lit(i).alias("i"))
+                      for i, d in enumerate(dists)])
+    probes = F.transform(F.slice(F.sort_array(cdist), 1, 5),
+                         lambda s: s["i"])
+    return assign, probes
+
+
+def test_assign_and_probe_tiers_agree(spark):
+    """The one nearest-centroid rule against the Column fold it
+    replaced, on rows whose norms spread over 0.01-100 (where
+    cancellation would show): 0 assign and 0 nprobe-5 probe differences
+    at nlist 8 and 16 (the in-order form) and 24 (the BLAS form). The
+    driver-side probes (``IvfIndex.probe_clusters``,
+    ``IvfPqIndex._probe``) match ``probe_clusters_expr`` row for row."""
+    import numpy as np
+
+    from toy_vector_db_spark.operators.knn import probe_clusters_expr
+    from toy_vector_db_spark.operators.pq import IvfPqIndex
+
+    rng = np.random.default_rng(11)
+    X = rng.standard_normal((4000, 128))
+    X *= (np.logspace(-2, 2, len(X)) / np.linalg.norm(X, axis=1))[:, None]
+    X = X[rng.permutation(len(X))]
+    df = spark.createDataFrame(
+        [(i, x) for i, x in enumerate(X.tolist())],
+        "vec_id int, embedding array<double>").cache()
+    v = F.col("embedding")
+    for nlist in (8, 16, 24):
+        C = X[:nlist]
+        ref_assign, ref_probes = _fold_reference(C, v)
+        got = df.select(
+            "vec_id",
+            IvfIndex._assign_expr(C, "embedding").alias("a"),
+            ref_assign.alias("ra"),
+            probe_clusters_expr(C, v, 5).alias("p"),
+            ref_probes.alias("rp")).collect()
+        assert sum(r["a"] != r["ra"] for r in got) == 0, nlist
+        assert sum(r["p"] != r["rp"] for r in got) == 0, nlist
+        ivf = IvfIndex(C, None, "vec_id", "embedding")
+        ivfpq = IvfPqIndex(C, None, None, "vec_id", "embedding")
+        for r in got:
+            q = X[r["vec_id"]]
+            assert ivf.probe_clusters(q, 5) == r["p"], (nlist, r["vec_id"])
+            assert ivfpq._probe(q, 5) == r["p"], (nlist, r["vec_id"])
+    df.unpersist()
+
+
+def test_null_or_wrong_length_vector_gets_no_cluster(spark):
+    """A null vector, or one of another dimension, is assigned no
+    cluster and probes none, on either arithmetic form."""
+    import numpy as np
+
+    from toy_vector_db_spark.operators.knn import probe_clusters_expr
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [1.0, 0.0, 0.0])],
+        "vec_id int, embedding array<double>")
+    for nlist in (2, 24):
+        C = np.arange(2.0 * nlist).reshape(nlist, 2)
+        got = df.orderBy("vec_id").select(
+            IvfIndex._assign_expr(C, "embedding").alias("a"),
+            probe_clusters_expr(C, F.col("embedding"), 2).alias("p")
+        ).collect()
+        assert [(r["a"], r["p"]) for r in got] == \
+            [(0, [0, 1]), (None, None), (None, None)], nlist
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_maintained_index_assigns_each_delta_once(spark, emb, qvec,
+                                                  monkeypatch):
+    """Plan shape of the maintained IVF index: the dup-check job of
+    ``add`` never runs the assign UDF (only ids are read, so the
+    column is pruned), and a search over the base plus n deltas holds
+    exactly n + 1 assign passes — one per table, not one for the probe
+    filter and another for the projection."""
+    idx = IvfIndex.build_deterministic(emb.filter(F.col("vec_id") >= 100),
+                                       n_centroids=16)
+    deltas = [emb.filter(F.col("vec_id") < 50),
+              emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))]
+    plans = []
+    count = type(emb).count
+
+    def spy(self):
+        plans.append(_plan(self))
+        return count(self)
+
+    monkeypatch.setattr(type(emb), "count", spy)
+    idx = idx.add(deltas[0])
+    monkeypatch.undo()
+    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
+    idx = idx.add(deltas[1], check_dups=False)
+    res = idx.search(qvec, k=10, metric="cosine", nprobe=3)
+    assert _plan(res).count("ArrowEvalPython") == len(deltas) + 1
+    assert len(res.collect()) == 10

@@ -18,7 +18,7 @@ SF = "/root/testdata/sf0.001"
 
 def test_small_corpus_routes_exact():
     assert choose_search_tier(10_000, 64, 10).tier == "flat-arrow"
-    assert choose_search_tier(10_000, 8, 10).tier == "flat-column"
+    assert choose_search_tier(10_000, 8, 10).tier == "flat-arrow"
 
 
 def test_exact_recall_forces_flat_even_at_scale():

@@ -458,6 +458,17 @@ def test_cosine_blocked_tiers_agree(spark):
     assert {(a, b) for a, b, _ in thr} == {(1, 2), (5, 6)}
 
 
+def test_cosine_blocked_empty_frame_has_no_pairs(spark):
+    """An empty corpus has no pairs on either scoring path — there is
+    no dimension to read, and none is needed."""
+    from toy_vector_db_spark.operators.dedup import cosine_near_dup_blocked
+
+    df = spark.createDataFrame(
+        [], "vec_id: long, blk: string, embedding: array<float>")
+    for arrow in (None, False):
+        assert cosine_near_dup_blocked(df, "blk", arrow=arrow).collect() == []
+
+
 def test_cosine_blocked_refuses_quadratic_blocks(spark):
     """The quadratic shape is unreachable without explicit opt-in: a
     block past the cap raises (pointing at the learned-key path), the

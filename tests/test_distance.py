@@ -80,6 +80,26 @@ def test_normalize(spark):
     assert got == [0.0, 0.0, 0.0]
 
 
+def test_vector_lit_bit_equal_to_lit(spark):
+    """``vector_lit`` (one parsed SQL literal) yields the same array<double>
+    values, bit for bit, as ``F.lit(list)`` (one py4j call per element):
+    signed zero, a subnormal, the double extremes, NaN and the
+    infinities; the empty vector keeps its type; a matrix nests."""
+    import struct
+
+    vals = [-0.0, 5e-324, 1.7976931348623157e308, -1.7976931348623157e308,
+            float("nan"), float("inf"), float("-inf"), 0.1, -1e-5]
+    row = spark.range(1).select(
+        vector_lit(vals).alias("a"), F.lit(vals).alias("b"),
+        vector_lit([]).alias("e"),
+        vector_lit([[1.5, -2.0], [0.0, 3.25]]).alias("m")).first()
+    assert [struct.pack("<d", x) for x in row["a"]] == \
+        [struct.pack("<d", x) for x in row["b"]]
+    assert row["e"] == [] and row["m"] == [[1.5, -2.0], [0.0, 3.25]]
+    schema = spark.range(1).select(vector_lit([]).alias("e")).schema
+    assert schema["e"].dataType.simpleString() == "array<double>"
+
+
 def test_zero_vector(spark):
     assert _eval(spark, zero_vector(4)) == [0.0] * 4
 

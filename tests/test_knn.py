@@ -147,31 +147,6 @@ def test_knn_arrow_matches_hof_tier(spark):
             assert ra["distance"] == pytest.approx(rb["distance"], abs=1e-9)
 
 
-def test_knn_auto_tier_selection(spark):
-    """knn_auto routes by query dimension: >= ARROW_TIER_MIN_DIM goes
-    to the Arrow/BLAS tier (plan contains a MapInPandas/ArrowEvalPython
-    node), below stays pure-Column (no Python node in the plan). Both
-    tiers are oracle-checked to agree; this pins the dispatch itself."""
-    from toy_vector_db_spark.operators.knn import ARROW_TIER_MIN_DIM, knn_auto
-    from toy_vector_db_spark.workload import _t
-
-    e = _t(spark, "/root/testdata/sf0.001", "embeddings")
-    dim = len(e.select("embedding").first()[0])
-    assert dim >= ARROW_TIER_MIN_DIM  # testdata is dim 64
-
-    wide = knn_auto(e, [0.1] * dim, k=3, id_cols=["vec_id"])
-    wide_plan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in wide_plan or "ArrowEval" in wide_plan
-
-    narrow_df = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
-        "vec_id STRING, embedding ARRAY<DOUBLE>")
-    narrow = knn_auto(narrow_df, [1.0, 0.0], k=1)
-    narrow_plan = narrow._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in narrow_plan and "ArrowEval" not in narrow_plan
-    assert narrow.first()["vec_id"] == "a"
-
-
 def test_knn_join_ivf_arrow_matches_column_tier(spark):
     """The BLAS cogroup tier (knn_join_ivf_arrow) must return the
     identical all-pairs answer as the Column-expression join — same

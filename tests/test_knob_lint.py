@@ -328,3 +328,57 @@ def test_auto_tier_lint_catches_a_local_crossover():
             misses
     finally:
         probe.unlink()
+
+
+def _is_list_arg(node) -> bool:
+    """A list display or comprehension, ``list(...)`` or ``.tolist()``."""
+    if isinstance(node, (ast.List, ast.ListComp)):
+        return True
+    return (isinstance(node, ast.Call)
+            and _ref_name(node.func) in ("list", "tolist"))
+
+
+def _list_lit_findings():
+    """``F.lit(<list>)`` outside ``functions/vector.py``: PySpark builds
+    it as one ``lit`` py4j call per element (~100 ms for one 128-dim
+    vector); ``vector_lit`` parses the same literal in one call."""
+    for f in sorted(PKG.rglob("*.py")):
+        if f.relative_to(PKG).as_posix() == "functions/vector.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "lit" and node.args
+                    and _is_list_arg(node.args[0])):
+                yield (f"{f.relative_to(PKG.parent)}:{node.lineno} "
+                       "list argument to lit()")
+
+
+def test_no_list_literal_outside_vector_lit():
+    misses = list(_list_lit_findings())
+    assert not misses, (
+        "F.lit(list) costs one py4j call per element:\n  "
+        + "\n  ".join(misses)
+        + "\nBuild array literals with functions.vector.vector_lit.")
+
+
+def test_list_lit_lint_catches_a_planted_site():
+    """Guard the guard: list displays, comprehensions, list() and
+    .tolist() arguments fire; scalars and vector_lit do not."""
+    probe = PKG / "_lint_lit_probe_tmp.py"
+    probe.write_text(
+        "from pyspark.sql import functions as F\n"
+        "from .functions.vector import vector_lit\n"
+        "def f(q, m):\n"
+        "    a = F.lit([1.0, 2.0])\n"
+        "    b = F.lit([float(x) for x in q])\n"
+        "    c = F.lit(list(q))\n"
+        "    d = F.lit(m.tolist())\n"
+        "    return a, b, c, d, F.lit(0.0), F.lit(q[0]), vector_lit(q)\n")
+    try:
+        misses = [m for m in _list_lit_findings()
+                  if "_lint_lit_probe_tmp" in m]
+        assert [m.split(":")[1].split()[0] for m in misses] == \
+            ["4", "5", "6", "7"], misses
+    finally:
+        probe.unlink()

@@ -234,10 +234,10 @@ def test_ivfpq_prune_then_maponly_topk(spark):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
     # cluster pruning: Catalyst inlines __cluster into a Filter over the
-    # assignment expression, pushed into the scan's DataFilters; on the
-    # saved layout it becomes PartitionFilters (asserted in test_pq.py)
-    assert "Filter cast((array_position" in plan
-    assert "DataFilters: [cast((array_position" in plan
+    # assign UDF's output, below the ADC scoring; on the saved layout it
+    # becomes PartitionFilters (asserted in test_pq.py)
+    m = re.search(r"Filter element_at\(pythonUDF\d+#\d+, 1,.*\) IN \(", plan)
+    assert m and m.start() < plan.index("ArrowEvalPython"), plan
 
 
 def test_bucketed_join_skips_shuffle(spark, tmp_path):

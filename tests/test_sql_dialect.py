@@ -44,6 +44,15 @@ def test_nearest_default_limit_10(engine):
     assert len(rows) == 5  # all rows; default limit 10 > 5
 
 
+def test_nearest_non_finite_query_vector(engine):
+    """NaN and infinite query components render as SQL doubles (there is
+    no ``nanD`` literal): the statement plans and every row scores."""
+    for vec in ("[nan, 1.0, 0.0]", "[inf, 0.0, -inf]"):
+        rows = engine.sql(
+            f"SELECT id, distance FROM vectors NEAREST TO {vec}").collect()
+        assert len(rows) == 5, vec
+
+
 def test_nearest_by_id_excludes_self(engine):
     rows = engine.sql(
         "SELECT id, distance FROM vectors NEAREST TO 'vec1' LIMIT 3").collect()

@@ -1,16 +1,13 @@
-"""Tier-crossover probes over the sf embeddings, two modes.
+"""Tier and form crossover probes over the sf embeddings, two modes.
 
-``assign`` (default) — A/B the IVF expression-vs-Arrow tier crossover
-(r13, VERDICT r12 #2). The r12 expression folding (one transform
-lambda over a nested-array literal instead of n_centroids fold copies)
-changed the cost balance the EXPR_MAX_CENTROIDS=32 crossover was tuned
-under (r7). This probe times the two tiers of `IvfIndex._assign_expr`
-and `knn.probe_clusters_expr` — the per-row hot loops of every
-IVF/IVF-PQ build and batch join — at a sweep of centroid counts,
-forced through each tier by monkeypatching the constant. Both tiers
-are value-identical by contract (first-minimum argmin / stable argsort
-tie-breaks; parity-tested), so each cell is best-of-``runs`` of a full
-noop-sink pass.
+``assign`` (default) — the two arithmetic forms of the one
+nearest-centroid rule (`knn._probe_np`): the in-order accumulation
+(`knn._inorder_dists`, bit-identical to the SQL fold) against the BLAS
+expansion (`knn._blas_d2`), over every embedding row, at a sweep of
+centroid counts. NumPy only, no Spark: each cell is best-of-``runs``
+ms of one assign pass (nearest centroid) and one probe pass (3 nearest
+in (distance, index) order), which regenerates the table next to
+`knn.INORDER_MAX_CENTROIDS`.
 
 ``join`` — the chooser's ivf-broadcast route: the Column broadcast
 hash join (`knn.knn_join_ivf`) against the one-pass Arrow kernel
@@ -96,55 +93,34 @@ def join_probe(sf_dir: str, runs: int) -> None:
 
 def assign_probe(sf_dir: str, runs: int) -> None:
     import numpy as np
+    import pyarrow.parquet as pq
 
-    import importlib
-    # operators/__init__ re-exports the knn FUNCTION under the same
-    # name, shadowing the submodule on attribute access
-    knn_mod = importlib.import_module("toy_vector_db_spark.operators.knn")
-    from toy_vector_db_spark.operators.ann import IvfIndex, det_sample
-    from toy_vector_db_spark.session import get_spark
+    from toy_vector_db_spark.operators.knn import _blas_d2, _inorder_dists
 
-    spark = get_spark("tier-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    e.count()  # warm footers/JVM
-    n_rows = e.count()
-    sample = det_sample(e, max(NLISTS), "vec_id", "embedding")
-    print(f"rows={n_rows} dim={sample.shape[1]}")
+    X = np.array(pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
+                               columns=["embedding"])[0].to_pylist())
+    print(f"rows={len(X)} dim={X.shape[1]}")
 
-    def t_noop(df) -> float:
-        best = float("inf")
+    def best_ms(fn) -> float:
+        out = float("inf")
         for _ in range(runs):
             t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
+            fn()
+            out = min(out, time.perf_counter() - t0)
+        return out * 1e3
 
-    from pyspark.sql import functions as F
-    for nlist in NLISTS:
-        if nlist > len(sample):
-            continue
-        cents = np.asarray(sample)[:nlist]
-        row = [f"nlist={nlist:4d}"]
-        for tier, cap in (("expr", 10**9), ("arrow", 0)):
-            prev = knn_mod.EXPR_MAX_CENTROIDS
-            knn_mod.EXPR_MAX_CENTROIDS = cap
-            try:
-                spark.sparkContext.setJobDescription(
-                    f"assign nlist={nlist} tier={tier}")
-                assign = e.withColumn(
-                    "__cluster", IvfIndex._assign_expr(cents, "embedding"))
-                ta = t_noop(assign.select("vec_id", "__cluster"))
-                spark.sparkContext.setJobDescription(
-                    f"probe nlist={nlist} tier={tier}")
-                probes = knn_mod.probe_clusters_expr(
-                    cents, F.col("embedding"), 3)
-                tp = t_noop(e.select("vec_id", probes.alias("__p")))
-            finally:
-                knn_mod.EXPR_MAX_CENTROIDS = prev
-                spark.sparkContext.setJobDescription(None)
-            row.append(f"{tier}: assign {ta:6.2f}s probe {tp:6.2f}s")
-        print(" | ".join(row), flush=True)
+    print("form     pass   " + " ".join(f"{n:>6d}" for n in NLISTS))
+    for name, form in (("inorder", _inorder_dists), ("blas", _blas_d2)):
+        cells = {"assign": [], "probe": []}
+        for nlist in NLISTS:
+            C = X[:nlist]
+            cells["assign"].append(best_ms(
+                lambda: np.argmin(form(X, C), axis=1)))
+            cells["probe"].append(best_ms(lambda: np.argsort(
+                form(X, C), axis=1, kind="stable")[:, :3]))
+        for pass_, ts in cells.items():
+            print(f"{name:7s}  {pass_:6s} "
+                  + " ".join(f"{t:6.1f}" for t in ts), flush=True)
 
 
 if __name__ == "__main__":

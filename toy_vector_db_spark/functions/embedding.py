@@ -191,15 +191,15 @@ def search_text(corpus: DataFrame, text: str, k: int = 10,
     may be an unmaterialized embedding projection: knn binds it once per
     row, so the embedding chain is never re-inlined per metric term.
 
-    ``id_cols``: project to these columns and let ``knn_auto`` pick the
-    scoring tier (Arrow/BLAS for wide embeddings — the fast path; the
-    result carries only id_cols + distance). Default keeps every corpus
-    column and the pure-Column tier."""
-    from ..operators.knn import knn, knn_auto
+    ``id_cols``: project to these columns and score on the Arrow/BLAS
+    tier (``knn_arrow``, the fast path; the result carries only id_cols
+    + distance). Default keeps every corpus column and the pure-Column
+    tier."""
+    from ..operators.knn import knn, knn_arrow
     qvec = [float(x) for x in embed_one(text)]
     if id_cols is not None:
-        return knn_auto(corpus.select(*id_cols, vec_col), qvec, k=k,
-                        metric=metric, vec_col=vec_col,
-                        id_cols=list(id_cols), tie_col=tie_col)
+        return knn_arrow(corpus.select(*id_cols, vec_col), qvec, k=k,
+                         metric=metric, vec_col=vec_col,
+                         id_cols=list(id_cols), tie_col=tie_col)
     return knn(corpus, qvec, k=k, metric=metric, vec_col=vec_col,
                tie_col=tie_col)

@@ -8,27 +8,47 @@ Reference: /root/reference/pkg/core/vector/vector.go
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .distance import l2_norm
 
-__all__ = ["vector_lit", "normalize", "zero_vector", "random_vector",
-           "mean_vectors"]
+__all__ = ["vector_lit", "vector_sql", "normalize", "zero_vector",
+           "random_vector", "mean_vectors"]
 
 
-def vector_lit(values: Sequence[float]) -> Column:
-    """Array<double> literal for a query vector. One array Literal
-    node (r12) instead of a CreateArray of dim scalar literals — the
-    folded value is identical (Catalyst constant-folded the old form
-    to exactly this), the analyzer just no longer walks dim nodes per
-    query plan."""
-    vals = [float(v) for v in values]
-    if not vals:  # preserve the old empty-vector type (array<double>)
-        return F.array().cast("array<double>")
-    return F.lit(vals)
+def vector_sql(values) -> str:
+    """Spark-SQL text of an ``array<double>`` literal; a nested sequence
+    (a matrix) renders as an array of arrays. Each value is its
+    shortest round-trip ``repr`` with a ``D`` suffix, so the parsed
+    double is bit-equal to the Python float (-0.0, subnormals and
+    +-1.797e308 included); NaN and +-inf, which have no numeric
+    literal, render as ``CAST('NaN' AS DOUBLE)`` and friends. The empty
+    vector keeps the ``array<double>`` type."""
+    a = np.asarray(values, dtype=np.float64)
+    if a.ndim > 1:
+        return "array(" + ", ".join(vector_sql(r) for r in a) + ")"
+    if not a.size:
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    return "array(" + ", ".join(map(_double_sql, a.tolist())) + ")"
+
+
+def _double_sql(v: float) -> str:
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return ("CAST('NaN' AS DOUBLE)" if v != v else
+            f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)")
+
+
+def vector_lit(values) -> Column:
+    """``array<double>`` literal Column for a query vector (or, nested,
+    a matrix) — ``vector_sql`` parsed once. ``F.lit(list)`` builds the
+    same CreateArray one py4j call per element, ~100 ms for one 128-dim
+    vector; the parser takes ~1 ms."""
+    return F.expr(vector_sql(values))
 
 
 def normalize(a: Column) -> Column:

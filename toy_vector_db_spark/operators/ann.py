@@ -32,7 +32,6 @@ import os
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf resolves string hints here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -179,13 +178,13 @@ def _sig_expr(vec_col: str, planes: np.ndarray):
     same oracle), ~n_planes-fold smaller expression tree. The bit
     weights sum in a LONG accumulator (the old int + chain overflowed
     past n_planes 30 in principle; same values for every real size)."""
-    pows = F.lit([1 << i for i in range(len(planes))])
-    mat = F.lit([[float(x) for x in p] for p in planes])
+    from ..functions.vector import vector_lit
+    one = F.lit(1).cast("long")
     v = F.col(vec_col).cast("array<double>")
-    bits = F.transform(mat, lambda p, i: F.when(
+    bits = F.transform(vector_lit(planes), lambda p, i: F.when(
         F.aggregate(F.zip_with(v, p, lambda x, y: x * y),
                     F.lit(0.0), lambda s, x: s + x) > 0,
-        F.element_at(pows, i + 1)).otherwise(F.lit(0).cast("long")))
+        F.call_function("shiftleft", one, i)).otherwise(F.lit(0).cast("long")))
     return F.aggregate(bits, F.lit(0).cast("long"), lambda s, x: s + x)
 
 
@@ -383,44 +382,19 @@ class IvfIndex(_MaintainableIndex):
     @staticmethod
     def _assign_expr(centroids: np.ndarray, vec_col: str):
         """Nearest-centroid id as a Column (ties -> the lowest centroid
-        index, matching SQL list_position-of-min). Two tiers, same
-        semantics: a pure fold expression while the centroid count fits
-        whole-stage codegen, an Arrow-batched BLAS argmin above it
-        (sqrt(N)-sized builds; np.argmin also returns the FIRST minimum,
-        so duplicate-centroid ties resolve identically)."""
-        from .knn import (EXPR_MAX_CENTROIDS, _centroid_d2, _stack_vecs)
-        v = F.col(vec_col).cast("array<double>")
-        if len(centroids) > EXPR_MAX_CENTROIDS:
-            import pandas as pd
-            C = np.asarray(centroids, dtype=np.float64)
-            cn = (C ** 2).sum(1)
-
-            @F.pandas_udf("int")
-            def _assign(batch: pd.Series) -> pd.Series:
-                if not len(batch):
-                    return pd.Series([], dtype="int32")
-                X = _stack_vecs(batch)
-                d2 = _centroid_d2(X, C, cn)
-                return pd.Series(np.argmin(d2, axis=1).astype(np.int32))
-
-            return _assign(v)
-        # one transform lambda over the centroid matrix as a nested-
-        # array literal instead of n_centroids copies of the fold
-        # (r12): identical per-entry arithmetic and enumeration order
-        # (bit-identical assignment, same oracle), ~n_centroids-fold
-        # smaller expression tree -> cheaper analysis/codegen per plan
-        cents = F.lit([[float(x) for x in c] for c in centroids])
-        dists = F.transform(cents, lambda c: F.sqrt(F.aggregate(
-            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda s, x: s + x)))
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+        index, matching SQL list_position-of-min): the first probe of
+        ``knn.probe_clusters_expr``. Null or wrong-length vectors get a
+        null cluster."""
+        from .knn import probe_clusters_expr
+        probes = probe_clusters_expr(centroids, F.col(vec_col), 1)
+        return F.element_at(probes, 1)
 
     def probe_clusters(self, qvec: Sequence[float], nprobe: int = 3) -> list[int]:
-        """The ``nprobe`` centroids nearest the query (ties -> lowest
-        centroid index; stable sort mirrors the oracle's total order)."""
+        """The ``nprobe`` centroids nearest the query, in
+        ``probe_clusters_expr``'s order (``knn._probe_np``)."""
+        from .knn import _probe_np
         q = np.asarray(qvec, dtype=np.float64)
-        dists = np.linalg.norm(self.centroids - q, axis=1)
-        return [int(c) for c in np.argsort(dists, kind="stable")[:nprobe]]
+        return _probe_np(q[None], self.centroids, nprobe)[0].tolist()
 
     def candidates(self, qvec: Sequence[float], nprobe: int = 3) -> DataFrame:
         """Rows of the ``nprobe`` clusters nearest the query (partition
@@ -437,8 +411,9 @@ class IvfIndex(_MaintainableIndex):
     def _dist_to_own_centroid(self):
         """Column: euclidean distance from a member row to the centroid
         of its assigned cluster."""
+        from ..functions.vector import vector_lit
         v = F.col(self.vec_col).cast("array<double>")
-        cents = F.lit([[float(x) for x in c] for c in self.centroids])
+        cents = vector_lit(self.centroids)
         # fold only the OWN centroid's entry (element_at before the
         # fold, r12): one distance per row instead of n_centroids —
         # same arithmetic on the same entry, bit-identical result

@@ -14,8 +14,8 @@ re-expressed for our tiers:
 
 - exact (flat) whenever the corpus is small enough that a scan is
   cheaper than an index build/probe cycle, or the caller demands
-  recall ~1.0.  Column-expression tier for narrow vectors, Arrow/BLAS
-  tier from ARROW_TIER_MIN_DIM up (measured crossover, knn.py:164).
+  recall ~1.0: the Arrow/BLAS scan (``knn.knn_arrow``), which beats
+  the Column-expression fold from dim 8 up.
 - angular metrics (cosine / dotproduct) route to hyperplane LSH —
   random-hyperplane signatures approximate ANGLE, so they are the
   natural bucketing for those metrics; probe width from the recall
@@ -229,7 +229,7 @@ def text_tier(df: DataFrame, tier: str = "auto") -> str:
 @dataclass(frozen=True)
 class SearchPlan:
     """A chosen tier plus the parameters to run it with."""
-    tier: str                       # flat-column | flat-arrow | lsh | ivf | ivfpq
+    tier: str                       # flat-arrow | lsh | ivf | ivfpq
     params: dict = field(default_factory=dict)
     reason: str = ""
 
@@ -246,14 +246,11 @@ def choose_search_tier(n_rows: int, dim: int, k: int,
     if not 0.0 < recall_target <= 1.0:
         raise ValueError(f"recall_target must be in (0,1], got {recall_target}")
 
-    from .knn import ARROW_TIER_MIN_DIM
-
     raw_bytes = n_rows * dim * 4  # float32 payload
     over_budget = (memory_budget_bytes is not None
                    and raw_bytes > memory_budget_bytes)
 
     if n_rows <= exact_max_rows or recall_target >= EXACT_RECALL:
-        tier = "flat-arrow" if dim >= ARROW_TIER_MIN_DIM else "flat-column"
         why = ("corpus small enough for an exact scan"
                if n_rows <= exact_max_rows else
                f"recall_target {recall_target} demands the exact answer")
@@ -262,7 +259,7 @@ def choose_search_tier(n_rows: int, dim: int, k: int,
             # caller's stated memory constraint silently hides OOM risk
             why += (f"; NOTE: exact scan reads {raw_bytes >> 20} MiB, "
                     f"over the {memory_budget_bytes >> 20} MiB budget")
-        return SearchPlan(tier, {"k": k, "metric": metric}, why)
+        return SearchPlan("flat-arrow", {"k": k, "metric": metric}, why)
 
     nlist = ivf_nlist(n_rows)
     nprobe = max(1, math.ceil(nlist * (0.02 + 0.2 * recall_target)))
@@ -423,10 +420,6 @@ def search_auto(df: DataFrame, query_vec: Sequence[float], k: int = 10,
     n = rows(df)
     plan = choose_search_tier(n, len(qvec), k, metric, recall_target,
                               memory_budget_bytes, exact_max_rows)
-    if plan.tier == "flat-column":
-        from .knn import knn
-        return plan, knn(df, qvec, k=k, metric=metric, vec_col=vec_col,
-                         tie_col=tie_col)
     if plan.tier == "flat-arrow":
         from .knn import knn_arrow
         return plan, knn_arrow(df, qvec, k=k, metric=metric, vec_col=vec_col,

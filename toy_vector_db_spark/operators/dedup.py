@@ -850,33 +850,26 @@ def cosine_near_dup_blocked(df: DataFrame, block_col: str,
     which keeps the same plan shape.
     Output: (id_a, id_b, cosine_sim >= threshold).
 
-    Two scoring tiers, same answers (both oracle-checked via
-    workload.dedup_cosine_blocked):
-
-    - Column tier: self-join + one zip_with dot fold per pair, with
-      per-ROW norms precomputed before the join (the naive per-pair
-      cosine would re-fold both norms for every pair — 3x the work).
-    - Arrow tier (``arrow=True``, auto at dim >= ARROW_TIER_MIN_DIM):
-      applyInPandas per block, one chunked BLAS matmul for the whole
-      block's similarity matrix. Pairwise folds are Catalyst's worst
-      case (element-at-a-time lambda eval x n^2 pairs); the matmul is
-      the same flops at memory bandwidth. Measured 50x at dim 64 on
-      the 10x derived set. A block must fit in one Arrow group —
-      that bound is the block-key design contract anyway (IVF bucket
-      sized to executor memory); the sim matrix itself is chunked to
-      1024 rows so peak memory is 1024 x block, not block^2.
+    Scoring is applyInPandas per block, one chunked BLAS matmul for
+    the whole block's similarity matrix (oracle-checked via
+    workload.dedup_cosine_blocked). Pairwise folds are Catalyst's
+    worst case (element-at-a-time lambda eval x n^2 pairs); the matmul
+    is the same flops at memory bandwidth — measured 50x at dim 64 on
+    the 10x derived set. A block must fit in one Arrow group — that
+    bound is the block-key design contract anyway (IVF bucket sized to
+    executor memory); the sim matrix itself is chunked to 1024 rows so
+    peak memory is 1024 x block, not block^2. ``arrow=False`` runs the
+    Column self-join instead (one zip_with dot fold per pair, per-row
+    norms precomputed), the parity reference for the BLAS scoring.
     """
     from .chooser import check_quadratic_block
-    from .knn import ARROW_TIER_MIN_DIM
 
     if not allow_quadratic:
         largest = (df.groupBy(block_col).count()
                    .agg(F.max("count")).first()[0]) or 0
         check_quadratic_block(int(largest), "cosine_near_dup_blocked",
                               max_block_rows, hint=guard_hint)
-    if arrow is None:
-        arrow = _dim_of(df, vec_col) >= ARROW_TIER_MIN_DIM
-    if arrow:
+    if arrow is not False:
         return _cosine_blocked_arrow(df, block_col, id_col, vec_col,
                                      threshold)
     # Column tier: precompute norms once per row (not once per pair).

@@ -52,6 +52,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from .ann import IvfIndex, _MaintainableIndex
 
 DEFAULT_M = 8          # out-degree per node (reference M=16 default; 8
@@ -362,7 +363,7 @@ class KnnGraphIndex(_MaintainableIndex):
             return live.withColumn("distance",
                                    F.lit(None).cast("double")).limit(0)
         top_ids = [i for _, i, _ in top]
-        qlit = F.lit([float(x) for x in qvec]).cast("array<double>")
+        qlit = vector_lit(qvec)
         from ..functions.distance import distance
         res = live.filter(F.col(self.id_col).isin(top_ids)) \
             .withColumn("distance",

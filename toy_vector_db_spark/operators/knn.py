@@ -114,8 +114,15 @@ def knn_arrow(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
     """Exact top-k via Arrow-batched NumPy scoring.
 
     The pure-Column ``knn`` keeps everything in the JVM, but Catalyst
-    evaluates higher-order distance folds element-at-a-time; for wide
-    embeddings the BLAS path wins by an order of magnitude. Plan shape:
+    evaluates higher-order distance folds element-at-a-time. Cosine
+    top-10 over 20,000 cached random rows, 4 partitions, collect, best
+    of 5, 4-core host, seconds:
+
+      dim         8     16     32     64    128
+      column   0.31   0.25   0.31   0.46   0.80
+      arrow    0.19   0.17   0.17   0.17   0.20
+
+    so this is the exact single-query tier at every dimension. Plan shape:
     mapInPandas scores a batch (one matrix-vector product) and emits
     only that batch's local top-k, then TakeOrderedAndProject merges —
     the executors return k rows per batch, never the scored corpus.
@@ -168,41 +175,6 @@ def knn_arrow(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
     if tie_col is not None:
         order.append(F.col(tie_col).asc())
     return scored.orderBy(*order).limit(k)
-
-
-# Measured crossover (BASELINE.md "Arrow exact tier"): the Column-
-# expression fold wins for narrow vectors (per-element codegen is cheap,
-# no Python round-trip); the BLAS matrix-vector path wins from roughly
-# dim 32 up (2.6x on dim-64 cosine). Tunable per call.
-# Re-measured with and without the per-task zip re-read (pyworker.py):
-# cosine top-10 over 20,000 cached random rows, 4 partitions, collect,
-# best of 5, 4-core host, seconds:
-#   dim              8     16     32     64    128
-#   column before 0.33   0.26   0.35   0.38   0.55
-#   arrow before  0.39   0.37   0.34   0.37   0.40
-#   column after  0.31   0.25   0.31   0.46   0.80
-#   arrow after   0.19   0.17   0.17   0.17   0.20
-# Without the re-read Arrow wins from dim 8; the constant is unchanged.
-ARROW_TIER_MIN_DIM = 32
-
-
-def knn_auto(df: DataFrame, query_vec: Sequence[float], k: int = DEFAULT_K,
-             metric: str = "euclidean", vec_col: str = "embedding",
-             id_cols: Sequence[str] | None = None,
-             exclude_id=None, id_col: str | None = None,
-             dist_col: str = "distance",
-             tie_col: str | None = None) -> DataFrame:
-    """Exact top-k with explicit tier selection: dispatches to the
-    Arrow/BLAS tier (``knn_arrow``) when the query dimension is >=
-    ``ARROW_TIER_MIN_DIM``, else the pure Column-expression tier
-    (``knn``). Both tiers return identical answers (both are
-    oracle-checked); the crossover trades JVM codegen against NumPy
-    batch scoring."""
-    if len(list(query_vec)) >= ARROW_TIER_MIN_DIM:
-        return knn_arrow(df, query_vec, k, metric, vec_col, id_cols,
-                         exclude_id, id_col, dist_col, tie_col)
-    return knn(df, query_vec, k, metric, vec_col,
-               exclude_id, id_col, dist_col, tie_col)
 
 
 def range_search(df: DataFrame, query_vec: Sequence[float] | Column,
@@ -372,45 +344,46 @@ def knn_join_arrow(queries: DataFrame, corpus: DataFrame,
                        F.col(dist_col))
 
 
-#: per-centroid Column expressions stop being the right tier past this
-#: many centroids: each row pays an O(nlist*dim) interpreted-HOF walk
-#: (transform/aggregate lambdas never enter whole-stage codegen).
-#: Above it, one Arrow-batched BLAS matmul against the
-#: (broadcast-sized) centroid matrix does the same work vectorized.
-#: r13 re-measure (VERDICT r12 #2 — the r12 expression folding changed
-#: the balance this was tuned under; tools/tier_probe.py, sf0.1
-#: embeddings 2000 rows x dim 64, best-of-3 noop):
-#:   nlist      8     16     32     64    128    179    256    565
-#:   expr    0.27   0.28   0.50   0.86   1.38   1.89   2.84   5.90
-#:   arrow   0.27   0.25   0.24   0.18   0.17   0.19   0.20   0.18
-#: (assign pass; the probe pass tracks it within 10%). The tiers TIE
-#: at 8 and the Arrow tier wins from 16 up — the folding cut plan
-#: analysis cost ~2x but the per-row interpreted walk still scales
-#: linearly with nlist, so the crossover drops 32 -> 16. Every
-#: fixed-nlist oracle query (nlist=8) stays on the bit-exact fold
-#: path; sqrt(N)-sized builds take the BLAS tier as before (both
-#: tiers are value-identical — first-minimum argmin / stable-argsort
-#: tie-breaks, parity-tested in test_ann.py, and the 18 ANN oracle
-#: queries were re-proven after this change).
-#: Re-measured after the per-task zip re-read left the Python worker
-#: (pyworker.py), same probe, 4-core host, assign pass (pyspark.daemon
-#: -> pyworker daemon; expr does not run Python and does not move):
-#:   nlist      8     16     32     64    128    179    256    565
-#:   expr    0.34   0.34   0.63   1.15   2.10   2.59   3.74   9.12
-#:   arrow   0.27   0.27   0.27   0.30   0.24   0.26   0.28   0.36  (before)
-#:   arrow   0.13   0.12   0.12   0.09   0.09   0.09   0.11   0.13  (after)
-#: Arrow now wins at nlist 8 too; the constant is left as it was.
-#: cap: a TIER-CROSSOVER (same answers both sides), not a work bound —
-#: past it the Arrow tier takes over, so nothing degenerates at scale.
-EXPR_MAX_CENTROIDS = 16
+#: The nearest-centroid rule has two arithmetic forms (``_probe_np``).
+#: At or below this many centroids it sums squared differences over
+#: the dim axis in order, then takes the sqrt: bit for bit the SQL fold
+#: that the deterministic-IVF oracle replays (every oracle index is
+#: nlist 8) and that assigned saved indexes of up to 16 centroids, so
+#: their later adds and probes agree with the stored clusters. Above
+#: it, the BLAS expansion (one matmul per batch). The two can order a
+#: float near-tie differently, so the form is pinned by nlist, never by
+#: batch shape. Both break ties on the lowest centroid index.
+#: ``python tools/tier_probe.py assign <sf0.1 dir> 5`` (2,000 x 64
+#: embeddings, NumPy only, best of 5, 4-core host), ms per pass:
+#:   nlist             8     16     32     64    128    179    256    565
+#:   inorder assign  5.8    9.6   20.3   40.9   88.4  110.5  162.7  600.3
+#:   inorder probe   5.4   11.4   25.2   48.0  101.0  121.0  188.4  655.6
+#:   blas    assign  0.4    0.4    0.6    1.1    2.2    2.7    3.6   11.8
+#:   blas    probe   0.6    1.0    2.1    4.6   12.2   18.8   26.6   79.4
+#: The in-order form is linear in nlist and the slower one everywhere;
+#: this constant bounds it where bit identity with the fold matters.
+#: cap: picks an arithmetic form, not a work bound — past it the BLAS
+#: form takes over, so nothing degenerates at scale.
+INORDER_MAX_CENTROIDS = 16
 
 
-def _centroid_d2(X, C, cn):
-    """Squared euclidean row-x-centroid distances, BLAS expansion form
-    (||x||^2 + ||c||^2 - 2 x.c). Cancellation can leave tiny negatives
-    — harmless for the argmin/argsort consumers here."""
+def _inorder_dists(X, C):
+    """Row-x-centroid euclidean distances, squared differences summed
+    over the dim axis in order, then sqrt."""
     import numpy as np
-    return (X ** 2).sum(1)[:, None] + cn[None, :] - 2.0 * (X @ C.T)
+    d = np.zeros((len(X), len(C)))
+    for j in range(C.shape[1]):
+        t = X[:, j, None] - C[None, :, j]
+        d += t * t
+    return np.sqrt(d)
+
+
+def _blas_d2(X, C):
+    """Squared row-x-centroid distances, BLAS expansion form
+    (||x||^2 + ||c||^2 - 2 x.c). Cancellation can leave tiny negatives,
+    harmless to the order consumers."""
+    return (X ** 2).sum(1)[:, None] + (C ** 2).sum(1)[None, :] \
+        - 2.0 * (X @ C.T)
 
 
 def _stack_vecs(batch):
@@ -419,76 +392,52 @@ def _stack_vecs(batch):
         lambda v: np.asarray(v, dtype=np.float64)).values)
 
 
-def probe_clusters_expr(centroids, qvec_col: Column, nprobe: int) -> Column:
-    """Each row's ``nprobe`` nearest centroid indexes as an
-    ``array<int>`` Column — the distributed analogue of
-    ``IvfIndex.probe_clusters``. Orders by (centroid distance,
-    centroid index): struct sort gives the same total order as the
-    deterministic-IVF oracle's ``ORDER BY d, i``. The centroid matrix
-    is broadcast-sized by construction — inlined as literals on the
-    expression tier, shipped once in the UDF closure on the Arrow tier
-    (> EXPR_MAX_CENTROIDS, where a stable argsort over one BLAS matmul
-    replaces nlist generated-code branches; ties still break by
-    centroid index)."""
-    import numpy as np
-    qv = qvec_col.cast("array<double>")
-    if len(centroids) > EXPR_MAX_CENTROIDS:
-        import pandas as pd
-        C = np.asarray(centroids, dtype=np.float64)
-        cn = (C ** 2).sum(1)
-        take = min(nprobe, len(centroids))
-
-        @F.pandas_udf("array<int>")
-        def _probe(batch: pd.Series) -> pd.Series:
-            if not len(batch):
-                return pd.Series([], dtype=object)
-            X = _stack_vecs(batch)
-            d2 = _centroid_d2(X, C, cn)
-            # stable argsort == ORDER BY (d, centroid index)
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :take]
-            return pd.Series(list(idx.astype(np.int32)))
-
-        return _probe(qv)
-    # one transform lambda (with the element index as the tie-break
-    # field) over the centroid matrix as a nested-array literal
-    # instead of n_centroids struct copies (r12): same per-entry
-    # arithmetic, same (d, i) total order — bit-identical probes,
-    # ~n_centroids-fold smaller expression tree
-    cents = F.lit([[float(x) for x in c] for c in centroids])
-    cdist = F.transform(cents, lambda c, i: F.struct(
-        F.sqrt(F.aggregate(
-            F.zip_with(qv, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda s, x: s + x)).alias("d"),
-        i.alias("i")))
-    return F.transform(F.slice(F.sort_array(cdist), 1, nprobe),
-                       lambda s: s["i"])
-
-
 def _probe_np(Q, centroids, nprobe: int):
-    """Driver-side twin of ``probe_clusters_expr`` for a collected
-    query matrix: each row's ``nprobe`` nearest centroid indexes, with
-    the same arithmetic per tier and the same (distance, index) order
-    — ``_centroid_d2`` + stable argsort above EXPR_MAX_CENTROIDS, the
-    expression tier's left fold of squared differences (then sqrt) at
-    or below it. Query rows go in chunks of <= MATRIX_CHUNK_CELLS
-    distance cells."""
+    """The one nearest-centroid rule: each row of ``Q``'s ``nprobe``
+    nearest centroid indexes in (distance, centroid index) order — the
+    deterministic-IVF oracle's ``ORDER BY d, i``. The form is
+    ``_inorder_dists`` up to ``INORDER_MAX_CENTROIDS`` centroids,
+    ``_blas_d2`` above. Query rows go in chunks of <=
+    ``MATRIX_CHUNK_CELLS`` distance cells."""
     import numpy as np
     C = np.asarray(centroids, dtype=np.float64)
-    cn = (C ** 2).sum(1)
+    form = _inorder_dists if len(C) <= INORDER_MAX_CENTROIDS else _blas_d2
     take = min(nprobe, len(C))
     out = np.empty((len(Q), take), dtype=np.int64)
     step = max(1, MATRIX_CHUNK_CELLS // len(C))
     for s in range(0, len(Q), step):
-        X = Q[s:s + step]
-        if len(C) > EXPR_MAX_CENTROIDS:
-            d = _centroid_d2(X, C, cn)
+        d = form(Q[s:s + step], C)
+        if take == 1 and not np.isnan(d).any():
+            # the first minimum is the stable argsort's first entry
+            out[s:s + step, 0] = np.argmin(d, axis=1)
         else:
-            d = np.zeros((len(X), len(C)))
-            for j in range(C.shape[1]):
-                d = d + (X[:, None, j] - C[None, :, j]) ** 2
-            d = np.sqrt(d)
-        out[s:s + step] = np.argsort(d, axis=1, kind="stable")[:, :take]
+            out[s:s + step] = np.argsort(d, axis=1, kind="stable")[:, :take]
     return out
+
+
+def probe_clusters_expr(centroids, qvec_col: Column, nprobe: int) -> Column:
+    """Each row's ``nprobe`` nearest centroid indexes as an
+    ``array<int>`` Column — the distributed analogue of
+    ``IvfIndex.probe_clusters``: ``_probe_np`` as a pandas UDF, in the
+    same (centroid distance, centroid index) order. A null query
+    vector, or one whose length is not the centroids', gets null. The
+    centroid matrix is broadcast-sized by construction and ships in
+    the closure."""
+    import numpy as np
+    C = np.asarray(centroids, dtype=np.float64)
+
+    @F.pandas_udf("array<int>")
+    def probe(batch: pd.Series) -> pd.Series:
+        ok = batch.map(lambda v: v is not None
+                       and len(v) == C.shape[1]).to_numpy(bool)
+        out = [None] * len(batch)
+        if ok.any():
+            idx = _probe_np(_stack_vecs(batch[ok]), C, nprobe)
+            for i, r in zip(np.flatnonzero(ok), idx.astype(np.int32)):
+                out[i] = r
+        return pd.Series(out, dtype=object)
+
+    return probe(qvec_col.cast("array<double>"))
 
 
 #: distance cells of one (queries, rows) matrix block in the scoring
@@ -831,10 +780,10 @@ def _ivf_column_pairs(queries: DataFrame, index, nprobe: int, metric: str,
                       query_id_col: str, query_vec_col: str, dist_col: str,
                       broadcast: bool) -> DataFrame:
     """Scored (__qid, __cid, dist) pairs of the Column IVF join: each
-    query row explodes to its ``nprobe`` probe clusters (a pure Column
-    expression), equi-joins the live index table on the cluster id and
-    scores each pair with the Column ``distance``; null (dim-mismatch)
-    scores are dropped. Shared by the batch ``knn_join_ivf``
+    query row explodes to its ``nprobe`` probe clusters
+    (``probe_clusters_expr``), equi-joins the live index table on the
+    cluster id and scores each pair with the Column ``distance``; null
+    (dim-mismatch) scores are dropped. Shared by the batch ``knn_join_ivf``
     (``broadcast=True``) and the streaming ``score_query_stream``,
     whose query side is a stream."""
     pcol = index.PARTITION_COL
@@ -868,8 +817,8 @@ def knn_join_ivf(queries: DataFrame, index, k: int = DEFAULT_K,
     bottleneck: |corpus| x |queries| distance evaluations. This variant
     turns the crossJoin into a broadcast hash EQUI-join on the cluster
     id: queries explode to (query, probe_cluster) rows driver-free (the
-    centroid table is broadcast-sized, probe selection is a pure Column
-    expression), the corpus side keeps its IVF assignment from the
+    centroid table is broadcast-sized, probe selection is one pandas
+    UDF pass), the corpus side keeps its IVF assignment from the
     index, and the join prunes the candidate set to ~nprobe/n_centroids
     of the corpus per query before any distance is computed. With the
     index table saved partitioned by cluster, the probe filter is real

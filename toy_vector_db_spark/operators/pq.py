@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from .ann import IvfIndex, _MaintainableIndex
 from .chooser import rows as _rows
+from ..functions.vector import vector_lit
 from .knn import DEFAULT_K
 
 
@@ -129,11 +130,10 @@ class PqCodec:
         codes = []
         for j in range(self.m):
             sub = F.slice(v, j * self.dsub + 1, self.dsub)
-            books_j = F.lit([[float(x) for x in c]
-                             for c in self.codebooks[j]])
-            dists = F.transform(books_j, lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda s, x: s + x))
+            dists = F.transform(
+                vector_lit(self.codebooks[j]), lambda c: F.aggregate(
+                    F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0), lambda s, x: s + x))
             codes.append((F.array_position(dists, F.array_min(dists)) - 1)
                          .cast("int"))
         return F.array(*codes)
@@ -168,9 +168,9 @@ class PqCodec:
         matching functions/distance.py)."""
         total = F.lit(0.0)
         for j in range(self.m):
-            lut_j = F.lit([float(x) for x in lut[j]])
             total = total + F.element_at(
-                lut_j, F.element_at(F.col(code_col), j + 1) + 1)
+                vector_lit(lut[j]),
+                F.element_at(F.col(code_col), j + 1) + 1)
         return F.sqrt(total) if metric == "euclidean" else -total
 
     def adc_expr(self, qvec: Sequence[float], code_col: str = "__code",
@@ -189,11 +189,10 @@ class PqCodec:
         rows = []
         for j in range(self.m):
             sub = F.slice(qv, j * self.dsub + 1, self.dsub)
-            books_j = F.lit([[float(x) for x in c]
-                             for c in self.codebooks[j]])
-            rows.append(F.transform(books_j, lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda s, x: s + x)))
+            rows.append(F.transform(
+                vector_lit(self.codebooks[j]), lambda c: F.aggregate(
+                    F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0), lambda s, x: s + x)))
         return F.array(*rows)
 
     def adc_from_lut_col(self, lut_col, code_col: str = "__code"):
@@ -415,9 +414,7 @@ class PqIndex(_MaintainableIndex):
                                 F.col(self.id_col).asc())
                  .limit(rerank * k).drop(dist_col))
         exact = short.withColumn(
-            dist_col, distance(metric, F.col(self.vec_col),
-                               F.lit([float(x) for x in qvec])
-                               .cast("array<double>")))
+            dist_col, distance(metric, F.col(self.vec_col), vector_lit(qvec)))
         return (exact.orderBy(F.col(dist_col).asc_nulls_last(),
                               F.col(self.id_col).asc())
                 .limit(k).drop("__code"))
@@ -544,8 +541,8 @@ class IvfPqIndex(_MaintainableIndex):
     def _residual_expr(self, vec_col: str):
         """v - centroid[cluster] as a pure Column expression (the
         centroid matrix is broadcast-sized by construction)."""
-        cents = F.lit([[float(x) for x in c] for c in self.centroids])
-        cent = F.element_at(cents, F.col("__cluster") + 1)
+        cent = F.element_at(vector_lit(self.centroids),
+                            F.col("__cluster") + 1)
         return F.zip_with(F.col(vec_col).cast("array<double>"), cent,
                           lambda x, y: x - y)
 
@@ -559,10 +556,10 @@ class IvfPqIndex(_MaintainableIndex):
     def _probe(self, qvec: Sequence[float], nprobe: int,
                metric: str = "euclidean") -> list[int]:
         q = np.asarray(list(qvec), dtype=np.float64)
-        if metric == "dotproduct":
-            dists = -(self.centroids @ q)  # best cluster = max IP
-        else:
-            dists = np.linalg.norm(self.centroids - q, axis=1)
+        if metric != "dotproduct":
+            from .knn import _probe_np
+            return _probe_np(q[None], self.centroids, nprobe)[0].tolist()
+        dists = -(self.centroids @ q)  # best cluster = max IP
         return [int(c) for c in np.argsort(dists, kind="stable")[:nprobe]]
 
     def candidates(self, qvec: Sequence[float], nprobe: int = 3) -> DataFrame:
@@ -608,9 +605,7 @@ class IvfPqIndex(_MaintainableIndex):
             return top.drop("__code", "__cluster")
         from ..functions.distance import distance
         exact = top.drop(dist_col).withColumn(
-            dist_col, distance(metric, F.col(self.vec_col),
-                               F.lit([float(x) for x in qvec])
-                               .cast("array<double>")))
+            dist_col, distance(metric, F.col(self.vec_col), vector_lit(qvec)))
         return (exact.orderBy(F.col(dist_col).asc_nulls_last(),
                               F.col(self.id_col).asc())
                 .limit(k).drop("__code", "__cluster"))
@@ -675,9 +670,9 @@ def knn_join_ivfpq(queries: DataFrame, index: IvfPqIndex,
                        F.col(query_vec_col).alias("__qvec"),
                        F.explode(probes).alias("__cluster"))
     if index.residual:
-        cents = F.lit([[float(x) for x in c] for c in index.centroids])
         qeff = F.zip_with(F.col("__qvec").cast("array<double>"),
-                          F.element_at(cents, F.col("__cluster") + 1),
+                          F.element_at(vector_lit(index.centroids),
+                                       F.col("__cluster") + 1),
                           lambda x, y: x - y)
     else:
         qeff = F.col("__qvec")

@@ -29,6 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from .knn import DEFAULT_K
 
 
@@ -59,8 +60,8 @@ class Sq8Codec:
         the byte range is what matters for encoded size). Pure Column
         expression — map-only, codegen."""
         v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-        mins = F.lit(self.mins)
-        scales = F.lit(self.scales)
+        mins = vector_lit(self.mins)
+        scales = vector_lit(self.scales)
 
         def code(x: Column, i: Column) -> Column:
             mn = F.element_at(mins, i + 1)
@@ -84,8 +85,8 @@ class Sq8Codec:
         q = [float(x) for x in qvec]
         if len(q) != self.dim:
             raise ValueError(f"query dim {len(q)} != codec dim {self.dim}")
-        qadj = F.lit([qi - mi for qi, mi in zip(q, self.mins)])
-        scales = F.lit(self.scales)
+        qadj = vector_lit([qi - mi for qi, mi in zip(q, self.mins)])
+        scales = vector_lit(self.scales)
 
         def term(c: Column, i: Column) -> Column:
             d = F.element_at(qadj, i + 1) \

@@ -29,6 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from ..schema import DOCUMENTS_SCHEMA, VECTORS_SCHEMA
 
 # Per-collection document sidecar table (reference embeds write a full
@@ -359,8 +360,7 @@ class CollectionCatalog:
             return 0
         out = cur
         if "embedding" in sets:
-            vec = F.array(*[F.lit(float(x)) for x in sets["embedding"]]) \
-                .cast("array<float>")
+            vec = vector_lit(sets["embedding"]).cast("array<float>")
             out = out.withColumn("embedding",
                                  F.when(cond, vec).otherwise(F.col("embedding")))
         if "metadata" in sets:

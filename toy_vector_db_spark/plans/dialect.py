@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.distance import METRICS
+from ..functions.vector import vector_sql
 from .catalog import CollectionCatalog
 
 DEFAULT_KNN_LIMIT = 10
@@ -327,7 +328,7 @@ class SqlEngine:
             vec = _parse_vector_literal(qtext)
             if not vec:
                 raise ValueError("empty vector literal in NEAREST TO")
-            vec_sql = "array(" + ", ".join(f"{v!r}D" for v in vec) + ")"
+            vec_sql = vector_sql(vec)
         elif qtext.startswith("'"):
             # id reference: look up the stored vector, exclude the self-match
             # (executor.go:281-297, :363-366)
@@ -336,8 +337,7 @@ class SqlEngine:
                 f"SELECT embedding FROM {table} WHERE id = {qtext}").first()
             if row is None:
                 raise KeyError(f"vector not found: id={exclude_id!r}")
-            vec_sql = ("array(" + ", ".join(f"{float(v)!r}D" for v in row[0])
-                       + ")")
+            vec_sql = vector_sql(row[0])
         else:
             # subquery form: the reference parses but cannot execute this
             # (parser.go:228-239); we can — it must yield one vector.
@@ -345,8 +345,7 @@ class SqlEngine:
             row = self.spark.sql(self._rewrite_meta(sub)).first()
             if row is None:
                 raise KeyError(f"subquery returned no vector: {sub!r}")
-            vec_sql = ("array(" + ", ".join(f"{float(v)!r}D" for v in row[0])
-                       + ")")
+            vec_sql = vector_sql(row[0])
 
         dist = _dist_sql(metric, vec_sql)
         # dimension guard, folded INTO the distance expression (like

@@ -9,8 +9,8 @@ frozen index — the online-serving half of the batch `knn_join_ivf`.
 Shape:
 
 - The map side runs ON the stream: each query row explodes to its
-  ``nprobe`` probe clusters via the same pure Column expression as the
-  batch join (``probe_clusters_expr``), then a STREAM-STATIC equi-join
+  ``nprobe`` probe clusters via the same pandas UDF as the batch join
+  (``probe_clusters_expr``), then a STREAM-STATIC equi-join
   on the cluster id against the index table scores candidates —
   incremental, stateless, no watermark needed (stream-static joins
   carry no state store).

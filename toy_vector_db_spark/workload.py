@@ -161,17 +161,15 @@ def _make_knn_arrow(metric: str) -> WorkloadFn:
     """The Arrow-batched NumPy exact tier (operators/knn.knn_arrow)
     against the SAME oracle as the Column-expression tier: identical
     answers from a BLAS matrix-vector scoring path (mapInPandas with
-    per-batch local top-k, then TakeOrderedAndProject merge). Routed
-    through knn_auto so the dim>=ARROW_TIER_MIN_DIM tier-selection knob
-    is itself oracle-checked (testdata is dim 64 -> Arrow tier)."""
+    per-batch local top-k, then TakeOrderedAndProject merge)."""
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .operators.knn import knn_auto
+        from .operators.knn import knn_arrow
         emb = _t(spark, sf_dir, "embeddings")
         qvec = lookup_vector(emb, "vec_id", QUERY_VEC_ID)
-        res = knn_auto(emb, qvec, k=KNN_K, metric=metric,
-                       id_cols=["vec_id", "label"],
-                       exclude_id=QUERY_VEC_ID, id_col="vec_id",
-                       tie_col="vec_id")
+        res = knn_arrow(emb, qvec, k=KNN_K, metric=metric,
+                        id_cols=["vec_id", "label"],
+                        exclude_id=QUERY_VEC_ID, id_col="vec_id",
+                        tie_col="vec_id")
         return res.select("vec_id", "label",
                           F.round("distance", 4).alias("distance"))
     return fn
