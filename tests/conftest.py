@@ -18,3 +18,19 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted through a job
+    group once the listener bus has delivered every job event."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

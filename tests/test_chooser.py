@@ -5,6 +5,7 @@ whose answers must match the exact tier."""
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs as _jobs
 from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators.chooser import (
@@ -176,20 +177,6 @@ def test_search_auto_lsh_route_returns_neighbors(spark, emb):
 EMB = f"{SF}/embeddings.parquet"
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn launched), counted through a job
-    group once the listener bus has delivered every job event."""
-    import uuid
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")

@@ -279,3 +279,21 @@ def test_sql_version_as_of(spark, tmp_path):
     assert [r["id"] for r in res] == ["a"]
     with pytest.raises(ValueError, match="requires a collection"):
         eng.sql("SELECT id FROM not_a_coll VERSION AS OF 1")
+
+
+def test_delete_keeps_rows_where_condition_is_null(spark, tmp_path):
+    """A row where the WHERE is NULL (missing metadata key, NULL
+    metadata, dialect-inserted row) does not match: DELETE keeps it,
+    as the reference does, and the reported count agrees."""
+    from toy_vector_db_spark.plans.dialect import SqlEngine
+    cat = CollectionCatalog(spark, str(tmp_path / "dnull"))
+    cat.insert("c", [("a", [1.0], {"category": "x"}),
+                     ("b", [2.0], {"category": "y"}),
+                     ("n", [3.0], None),
+                     ("m", [4.0], {"tag": "t"})])
+    eng = SqlEngine(spark, cat)
+    eng.execute("INSERT INTO c (id, vector) VALUES ('i', [5.0])")
+    r = eng.execute("DELETE FROM c WHERE metadata.category = 'x'")
+    assert r.message == "Deleted 1 row(s)"
+    assert sorted(row["id"] for row in cat.read("c").collect()) == \
+        ["b", "i", "m", "n"]

@@ -3,18 +3,42 @@
 Reference storage is one ``.vec`` file per vector with write-through
 CRUD (/root/reference/pkg/storage/storage.go:133-292) and a single
 implicit collection (executor.go:601-602). Here a collection is a
-versioned Parquet directory:
+versioned Parquet directory whose versions are file manifests:
 
-    <root>/<name>/v00000/part-*.parquet
-    <root>/<name>/v00001/...
-    <root>/<name>/_current          <- pointer file (atomic rename)
+    <root>/<name>/v00000/_manifest.json       <- []  (CREATE writes no data)
+    <root>/<name>/v00001/part-*.parquet       <- the rows v1 wrote
+    <root>/<name>/v00001/_manifest.json       <- ["v00001/part-…"]
+    <root>/<name>/v00002/part-*.parquet       <- the rows v2 wrote
+    <root>/<name>/v00002/_manifest.json       <- ["v00001/part-…", "v00002/part-…"]
+    <root>/<name>/_current                    <- pointer file (atomic rename)
 
-Each mutation writes a NEW version directory then flips the pointer —
-Spark cannot overwrite a path it is reading, and versioning gives
-readers snapshot isolation for free. This is a deliberately minimal
-transaction-log pattern; on a production cluster you'd swap in Delta
-Lake/Iceberg (same read-modify-write semantics, richer log) — the
-SqlEngine above is storage-agnostic either way.
+The manifest contract (the minimal part of Delta Lake's log of file
+actions):
+- ``v{N}/`` holds only the files commit N wrote, and its
+  ``_manifest.json`` lists every live data file of version N by path
+  relative to the collection. Files of earlier versions are carried
+  into it by reference, never copied.
+- A commit writes its files and its manifest, then flips ``_current``
+  (the commit point). A crash before the flip leaves the previous
+  version current; the next commit overwrites the orphan directory.
+- INSERT and ``insert_df`` write only their new rows. DELETE, UPDATE
+  and the document upsert rewrite only the files that hold a matching
+  row. OPTIMIZE rewrites the whole snapshot into new files.
+- GC drops a version's manifest and deletes only the files that no
+  retained manifest lists; a dropped version's directory stays while
+  it still holds files a retained version reads.
+- A version directory without a manifest (written before manifests)
+  reads as all of its ``part-*.parquet`` files; the first commit over
+  such a catalog writes those manifests.
+
+Reads are a bare ``spark.read.schema(S).parquet(*files)``, so sizing
+through ``chooser.rows`` reads only footers. Spark lists more than 32
+(``parallelPartitionDiscovery.threshold``) explicit files in a job,
+which is one more reason to OPTIMIZE a collection that accretes many
+small commits. Versioning gives readers snapshot isolation for free.
+On a production cluster you'd swap in Delta Lake/Iceberg (same
+semantics, richer log) — the SqlEngine above is storage-agnostic
+either way.
 
 Every collection is also registered as a temp view, so spark.sql and
 the dialect see it as a table.
@@ -22,20 +46,29 @@ the dialect see it as a table.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
+import uuid
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.vector import vector_lit
+from ..operators.chooser import rows as footer_rows
 from ..schema import DOCUMENTS_SCHEMA, VECTORS_SCHEMA
 
 # Per-collection document sidecar table (reference embeds write a full
 # Document JSON next to the vector, cmd_embed.go:100-112). Stored as a
 # second versioned-parquet table named <collection>__docs.
 DOCS_SUFFIX = "__docs"
+
+MANIFEST = "_manifest.json"
 
 
 class CollectionCatalog:
@@ -68,6 +101,22 @@ class CollectionCatalog:
         v = self._version(name) if version is None else version
         return os.path.join(self._dir(name), f"v{v:05d}")
 
+    def _manifest(self, name: str, version: int) -> str:
+        return os.path.join(self._data_path(name, version), MANIFEST)
+
+    def _files(self, name: str, version: int | None = None) -> list[str]:
+        """Live data files of a version (the current one by default),
+        relative to the collection directory."""
+        v = self._version(name) if version is None else version
+        try:
+            with open(self._manifest(name, v)) as f:
+                return json.load(f)
+        except FileNotFoundError:   # written before manifests
+            vdir = os.path.basename(self._data_path(name, v))
+            return sorted(f"{vdir}/{f}" for f in os.listdir(
+                self._data_path(name, v))
+                if f.startswith("part-") and f.endswith(".parquet"))
+
     def exists(self, name: str) -> bool:
         return os.path.exists(self._pointer(name))
 
@@ -83,34 +132,49 @@ class CollectionCatalog:
     def _schema_for(self, name: str):
         return DOCUMENTS_SCHEMA if name.endswith(DOCS_SUFFIX) else VECTORS_SCHEMA
 
+    def _scan(self, name: str, files: list[str]) -> DataFrame:
+        """The rows of ``files``: a bare parquet scan with the schema
+        passed (no job; an empty list is an empty scan)."""
+        return self.spark.read.schema(self._schema_for(name)).parquet(
+            *[os.path.join(self._dir(name), f) for f in files])
+
     def read(self, name: str) -> DataFrame:
         if not self.exists(name):
             raise KeyError(f"collection not found: {name!r}")
-        return self.spark.read.schema(self._schema_for(name)).parquet(
-            self._data_path(name))
+        return self._scan(name, self._files(name))
+
+    def _version_dirs(self, name: str) -> list[int]:
+        """Version directories up to the current one, oldest first (a
+        higher one is an uncommitted write the next commit replaces)."""
+        cur = self._version(name)
+        return sorted(int(e[1:]) for e in os.listdir(self._dir(name))
+                      if e.startswith("v") and e[1:].isdigit()
+                      and int(e[1:]) <= cur)
 
     def versions(self, name: str) -> list[int]:
-        """Version numbers still on disk, oldest first (the newest
-        ``keep_versions`` survive GC)."""
+        """Version numbers still readable, oldest first (the newest
+        ``keep_versions`` survive GC): those with a manifest, or every
+        directory of a catalog written before manifests."""
         if not self.exists(name):
             raise KeyError(f"collection not found: {name!r}")
-        base = self._dir(name)
-        return sorted(int(e[1:]) for e in os.listdir(base)
-                      if e.startswith("v") and e[1:].isdigit())
+        dirs = self._version_dirs(name)
+        if not os.path.exists(self._manifest(name, self._version(name))):
+            return dirs
+        return [v for v in dirs if os.path.exists(self._manifest(name, v))]
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot read (time travel): the table exactly as committed
         at ``version``. This is what the versioned layout buys — every
-        mutation wrote a NEW directory and flipped the pointer, so any
-        retained version is a consistent, immutable snapshot (the same
+        mutation committed a NEW manifest over immutable files and
+        flipped the pointer, so any retained version is a consistent,
+        immutable snapshot (the same
         read semantics Delta/Iceberg time travel exposes; swap them in
         for a longer history than ``keep_versions``)."""
         if version not in self.versions(name):
             raise KeyError(
                 f"version {version} of {name!r} not on disk "
                 f"(retained: {self.versions(name)})")
-        return self.spark.read.schema(self._schema_for(name)).parquet(
-            self._data_path(name, version))
+        return self._scan(name, self._files(name, version))
 
     def read_docs(self, name: str) -> DataFrame:
         """The document sidecar table of a collection (DOCUMENTS_SCHEMA:
@@ -123,31 +187,85 @@ class CollectionCatalog:
 
     # -- write ------------------------------------------------------------
 
-    def _commit(self, name: str, df: DataFrame) -> None:
+    def _commit(self, name: str, data: DataFrame | pa.Table | None = None,
+                carry: list[str] = ()) -> int:
+        """Commit the next version: ``carry`` (live files of earlier
+        versions, by reference) plus ``data`` written into the new
+        version directory — a DataFrame through Spark, a pyarrow Table
+        on the driver. Returns the row count of the written files, read
+        from their footers; files with no rows are not kept."""
         v = self._version(name) + 1
+        if v and not os.path.exists(self._manifest(name, v - 1)):
+            for u in self.versions(name):   # written before manifests
+                files = self._files(name, u)
+                with open(self._manifest(name, u), "w") as f:
+                    json.dump(files, f)
         path = self._data_path(name, v)
-        df.write.mode("overwrite").parquet(path)
+        shutil.rmtree(path, ignore_errors=True)   # an uncommitted write
+        if isinstance(data, DataFrame):
+            data.write.parquet(path)
+        else:
+            os.makedirs(path)
+            if data is not None:
+                pq.write_table(data, os.path.join(
+                    path, f"part-00000-{uuid.uuid4()}.parquet"))
+        files, n = list(carry), 0
+        for f in sorted(os.listdir(path)):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                rows = pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                if rows:
+                    files.append(f"{os.path.basename(path)}/{f}")
+                    n += rows
+                else:
+                    os.remove(os.path.join(path, f))
+        with open(self._manifest(name, v), "w") as f:
+            json.dump(files, f)
         tmp = self._pointer(name) + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
         os.replace(tmp, self._pointer(name))  # atomic pointer flip
         self._register(name)
-        self._gc(name, v)
+        self._gc(name, {u for u in self.versions(name)
+                        if u > v - self.keep_versions})
+        return n
 
-    def _gc(self, name: str, current: int) -> None:
-        base = self._dir(name)
-        for entry in os.listdir(base):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) <= current - self.keep_versions:
-                    shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+    def _gc(self, name: str, keep: set[int]) -> None:
+        """Drop every version outside ``keep``: its manifest and each
+        file of its directory that no kept manifest lists."""
+        live = {f for v in keep for f in self._files(name, v)}
+        for v in self._version_dirs(name):
+            if v in keep:
+                continue
+            vdir = self._data_path(name, v)
+            for f in os.listdir(vdir):
+                if f"{os.path.basename(vdir)}/{f}" not in live:
+                    os.remove(os.path.join(vdir, f))
+            if not os.listdir(vdir):
+                os.rmdir(vdir)
+
+    def _touched(self, name: str, files: list[str],
+                 match) -> dict[str, int]:
+        """Matching rows per live file, for ``match`` (a filter or
+        semi-join of the scan of ``files``): one match job grouped by
+        file gives both the affected count and the files to rewrite.
+        The file path is taken at the scan (``_metadata.file_path``,
+        unlike input_file_name() it survives a join and keeps the
+        filter pushed into the scan)."""
+        scan = self._scan(name, files).select(
+            "*", F.col("_metadata.file_path").alias("_file"))
+        hits = match(scan).groupBy("_file").count().collect()
+        # a file URI's last two segments are its manifest entry
+        return {"/".join(unquote(urlparse(u).path).rsplit("/", 2)[-2:]): c
+                for u, c in hits}
 
     # -- maintenance -------------------------------------------------------
 
     def history(self, name: str) -> list[dict]:
         """Snapshot history of the retained versions (DESCRIBE HISTORY
         analogue), oldest first: version, committed_at (directory
-        mtime, UTC epoch seconds), n_files, is_current. Reads only
-        directory metadata — no data scan."""
+        mtime, UTC epoch seconds), n_files (the version's manifest
+        entries), is_current. Reads only manifests and directory
+        metadata — no data scan."""
         if not self.exists(name):
             raise KeyError(f"no such collection: {name!r}")
         cur = self._version(name)
@@ -157,9 +275,7 @@ class CollectionCatalog:
             out.append({
                 "version": v,
                 "committed_at": os.path.getmtime(path),
-                "n_files": sum(1 for f in os.listdir(path)
-                               if f.startswith("part-")
-                               and f.endswith(".parquet")),
+                "n_files": len(self._files(name, v)),
                 "is_current": v == cur,
             })
         return out
@@ -168,20 +284,15 @@ class CollectionCatalog:
         """Delete all but the newest ``retain_versions`` snapshots NOW
         (VACUUM analogue; _gc applies the standing ``keep_versions``
         policy on every commit — this is the explicit, tighter sweep).
-        The current version is always retained. Returns the removed
-        version numbers."""
+        The current version is always retained; files a retained
+        version still reads stay. Returns the removed version numbers."""
         if retain_versions < 1:
             raise ValueError(
                 f"retain_versions must be >= 1, got {retain_versions}")
         versions = self.versions(name)
-        cur = self._version(name)
-        keep = set(versions[-retain_versions:]) | {cur}
-        removed = []
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(self._data_path(name, v), ignore_errors=True)
-                removed.append(v)
-        return removed
+        keep = set(versions[-retain_versions:]) | {self._version(name)}
+        self._gc(name, keep)
+        return [v for v in versions if v not in keep]
 
     def compact(self, name: str, target_files: int = 1,
                 sort_by: list[str] | None = None,
@@ -228,9 +339,7 @@ class CollectionCatalog:
         return before, self._file_count(name)
 
     def _file_count(self, name: str) -> int:
-        path = self._data_path(name)
-        return sum(1 for f in os.listdir(path)
-                   if f.startswith("part-") and f.endswith(".parquet"))
+        return len(self._files(name))
 
     # -- DDL ---------------------------------------------------------------
 
@@ -248,13 +357,13 @@ class CollectionCatalog:
         if dimension is not None:
             with open(os.path.join(self._dir(name), "_dimension"), "w") as f:
                 f.write(str(dimension))
-        self._commit(name, self.spark.createDataFrame([], VECTORS_SCHEMA))
+        self._commit(name)
 
     def drop(self, name: str) -> int:
         """DROP COLLECTION -> count of removed vectors (the reference
         deletes every vector from its single store, executor.go:616-652).
         The document sidecar, if any, goes with it."""
-        n = self.read(name).count() if self.exists(name) else 0
+        n = footer_rows(self.read(name)) if self.exists(name) else 0
         self.spark.catalog.dropTempView(name)
         shutil.rmtree(self._dir(name), ignore_errors=True)
         shutil.rmtree(self._dir(name + DOCS_SUFFIX), ignore_errors=True)
@@ -264,19 +373,23 @@ class CollectionCatalog:
 
     def insert(self, name: str, rows: list[tuple]) -> int:
         """Append rows (id, embedding, metadata); duplicate id errors like
-        the reference (executor.go:476-480). The dup probe is a point
-        lookup pushed to the parquet scan, not a full join."""
+        the reference (executor.go:476-480). The dup probe is an
+        ``id IN (…)`` filter pushed to the parquet scan (one job); the
+        rows are written on the driver as one new file."""
         if not self.exists(name):
             self.create(name, if_not_exists=True)
-        new = self.spark.createDataFrame(
-            [(i, [float(x) for x in (e or [])], m) for i, e, m in rows],
-            VECTORS_SCHEMA)
-        cur = self.read(name)
-        dup = cur.join(F.broadcast(new.select("id")), "id", "left_semi").limit(1)
-        hit = dup.select("id").first()
-        if hit is not None:
-            raise ValueError(f"duplicate id: {hit[0]!r}")
-        self._commit(name, cur.unionByName(new))
+        ids = [r[0] for r in rows]
+        if None in ids:
+            raise ValueError("id must not be NULL")
+        files = self._files(name)
+        hit = self._scan(name, files).where(F.col("id").isin(ids)) \
+            .select("id").collect()
+        if hit:
+            raise ValueError(f"duplicate id: {hit[0][0]!r}")
+        self._commit(name, pa.Table.from_pylist(
+            [{"id": i, "embedding": [float(x) for x in (e or [])],
+              "metadata": m} for i, e, m in rows],
+            schema=to_arrow_schema(VECTORS_SCHEMA)), files)
         return len(rows)
 
     def insert_df(self, name: str, df: DataFrame) -> int:
@@ -299,33 +412,35 @@ class CollectionCatalog:
         hit = dup.first()
         if hit is not None:
             raise ValueError(f"duplicate id: {hit[0]!r}")
-        n = new.count()
-        self._commit(name, cur.unionByName(new))
-        return n
+        return self._commit(name, new, self._files(name))
 
     def upsert_docs(self, name: str, docs: DataFrame) -> int:
         """Write-through the document sidecar (embed persists the FULL
         Document — content + vector + metadata + timestamps — next to
         the vector row, reference cmd_embed.go:100-112). Upsert by
         doc_id: the reference overwrites the per-doc JSON file; here the
-        matching rows are replaced. Missing DOCUMENTS_SCHEMA columns
-        are filled with NULL."""
+        files holding a matching row are rewritten without it, beside
+        the new rows. Missing DOCUMENTS_SCHEMA columns are filled with
+        NULL. Returns the number of documents written."""
         dname = name + DOCS_SUFFIX
         cols = set(docs.columns)
         new = docs.select(*[
             (F.col(f.name) if f.name in cols else F.lit(None))
             .cast(f.dataType).alias(f.name)
             for f in DOCUMENTS_SCHEMA.fields])
-        n = new.count()
-        if self.exists(dname):
-            cur = self.read(dname)
-            out = cur.join(new.select("doc_id"), "doc_id", "left_anti") \
-                .unionByName(new)
-        else:
+        keys = new.select("doc_id")
+        if not self.exists(dname):
             os.makedirs(self._dir(dname), exist_ok=True)
-            out = new
-        self._commit(dname, out)
-        return n
+            return self._commit(dname, new)
+        files = self._files(dname)
+        hits = self._touched(dname, files,
+                             lambda df: df.join(keys, "doc_id", "left_semi"))
+        touched = self._scan(dname, list(hits))
+        written = self._commit(
+            dname, touched.join(keys, "doc_id", "left_anti").unionByName(new),
+            [f for f in files if f not in hits])
+        # written = the touched files' rows that survived + the new rows
+        return written - (footer_rows(touched) - sum(hits.values()))
 
     def export_docs_json(self, name: str, path: str) -> int:
         """Export the document sidecar as JSON — format parity with the
@@ -340,25 +455,35 @@ class CollectionCatalog:
         docs.write.mode("overwrite").json(path)
         return docs.count()
 
+    def _rewrite(self, name: str, match: Column, rewrite) -> int:
+        """Commit ``rewrite`` of the files holding a row where ``match``
+        is true; the other files carry over by reference. Returns the
+        matched count; nothing matched commits nothing."""
+        files = self._files(name)
+        hits = self._touched(name, files, lambda df: df.where(match))
+        if hits:
+            self._commit(name, rewrite(self._scan(name, list(hits))),
+                         [f for f in files if f not in hits])
+        return sum(hits.values())
+
     def delete(self, name: str, condition: str) -> int:
         """DELETE WHERE <condition> (SQL-string predicate); returns the
-        deleted count (executor.go:519-576)."""
-        cur = self.read(name)
-        matched = cur.filter(condition).count()
-        if matched:
-            self._commit(name, cur.filter(f"NOT ({condition})"))
-        return matched
+        deleted count (executor.go:519-576). A row where the condition
+        is NULL (a missing metadata key) does not match and stays, as
+        in the reference."""
+        match = F.coalesce(F.expr(condition), F.lit(False))
+        return self._rewrite(name, match, lambda df: df.where(~match))
 
     def update(self, name: str, sets: dict, condition: str | None) -> int:
         """UPDATE SET ... [WHERE ...] — the reference parses this but has
         no executor arm (executor.go:87-100, ErrUnsupportedOperation);
         fully implemented here as a conditional column rewrite."""
-        cur = self.read(name)
         cond = F.expr(condition) if condition else F.lit(True)
-        matched = cur.filter(cond).count()
-        if not matched:
-            return 0
-        out = cur
+        return self._rewrite(name, F.coalesce(cond, F.lit(False)),
+                             lambda df: self._set(df, sets, cond))
+
+    @staticmethod
+    def _set(out: DataFrame, sets: dict, cond: Column) -> DataFrame:
         if "embedding" in sets:
             vec = vector_lit(sets["embedding"]).cast("array<float>")
             out = out.withColumn("embedding",
@@ -373,8 +498,7 @@ class CollectionCatalog:
                 patch)
             out = out.withColumn("metadata",
                                  F.when(cond, merged).otherwise(F.col("metadata")))
-        self._commit(name, out)
-        return matched
+        return out
 
     def set_metadata(self, name: str, vec_id: str, key: str, value: str) -> int:
         """CLI set-metadata (reference main.go:252-282)."""
