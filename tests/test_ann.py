@@ -3,12 +3,16 @@ not hash-stable, so recall is the contract — the HNSW analogue)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from toy_vector_db_spark.functions.vector import vector_lit
 from toy_vector_db_spark.operators.ann import IvfIndex, LshIndex, recall_at_k
 from toy_vector_db_spark.operators.knn import knn, lookup_vector
+from toy_vector_db_spark.operators.pq import IvfPqIndex, PqIndex
 
 SF = "/root/testdata/sf0.001"
 
@@ -284,29 +288,135 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_maintained_index_assigns_each_delta_once(spark, emb, qvec,
-                                                  monkeypatch):
-    """Plan shape of the maintained IVF index: the dup-check job of
-    ``add`` never runs the assign UDF (only ids are read, so the
-    column is pruned), and a search over the base plus n deltas holds
-    exactly n + 1 assign passes — one per table, not one for the probe
-    filter and another for the projection."""
-    idx = IvfIndex.build_deterministic(emb.filter(F.col("vec_id") >= 100),
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString().splitlines())
+
+
+def _slice(emb, lo, hi):
+    return emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+
+
+def test_maintained_index_plan_stays_flat(spark, emb, qvec):
+    """Each mutation materializes its own segment once, so the table's
+    plan, the search plan and the search's job count do not grow with
+    the number of mutations: 40 adds without a compact, then 20
+    add / delete / compact cycles. After the first mutation no search
+    runs the assign UDF again."""
+    idx = IvfIndex.build_deterministic(_slice(emb, 180, 10**9),
                                        n_centroids=16)
-    deltas = [emb.filter(F.col("vec_id") < 50),
-              emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100))]
-    plans = []
-    count = type(emb).count
+    assert "ArrowEvalPython" in _plan(idx.search(qvec, k=10, nprobe=3))
 
-    def spy(self):
-        plans.append(_plan(self))
-        return count(self)
+    def search_jobs(i):
+        res = i.search(qvec, k=10, metric="cosine", nprobe=3)
+        assert "ArrowEvalPython" not in _plan(res)
+        rows, jobs = count_jobs(spark, res.collect)
+        assert len(rows) == 10
+        return jobs
 
-    monkeypatch.setattr(type(emb), "count", spy)
-    idx = idx.add(deltas[0])
-    monkeypatch.undo()
-    assert len(plans) == 1 and "ArrowEvalPython" not in plans[0]
-    idx = idx.add(deltas[1], check_dups=False)
-    res = idx.search(qvec, k=10, metric="cosine", nprobe=3)
-    assert _plan(res).count("ArrowEvalPython") == len(deltas) + 1
-    assert len(res.collect()) == 10
+    idx = idx.add(_slice(emb, 0, 3))
+    lines, jobs = _plan_lines(idx.table), search_jobs(idx)
+    for n in range(1, 40):
+        idx = idx.add(_slice(emb, 3 * n, 3 * n + 3), check_dups=n % 2 == 0)
+        assert _plan_lines(idx.table) == lines
+    assert search_jobs(idx) == jobs
+    for n in range(40, 60):
+        idx = idx.add(_slice(emb, 3 * n, 3 * n + 3))
+        idx = idx.delete([3 * n])
+        if n == 40:   # with a tombstone
+            assert search_jobs(idx) == jobs
+        idx = idx.compact()
+        assert _plan_lines(idx.table) == lines
+    assert search_jobs(idx) == jobs
+    assert idx.size() == emb.count() - 20
+
+
+_KINDS = {
+    "lsh": lambda emb: LshIndex.build(emb, n_planes=6),
+    "ivf": lambda emb: IvfIndex.build_deterministic(emb, n_centroids=8),
+    "pq": lambda emb: PqIndex.build(emb, m=4, ks=8),
+    "ivfpq": lambda emb: IvfPqIndex.build_deterministic(emb, n_centroids=8),
+}
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_add_rejects_a_delta_that_repeats_an_id(spark, emb, kind):
+    """The reference's Add rejects the second copy of an id, whether
+    the index holds it or the same delta does."""
+    idx = _KINDS[kind](_slice(emb, 0, 20))
+    with pytest.raises(ValueError, match="already exists"):
+        idx.add(_fresh_rows(spark, emb, [900001, 900001]))
+    assert idx.size() == 20 and sorted(idx.get_ids()) == list(range(20))
+    with pytest.raises(ValueError, match="already exists"):
+        idx.add(_fresh_rows(spark, emb, [900001, 900001]), check_dups=True)
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_maintenance_job_budgets(spark, emb, kind):
+    """``delete(list)`` runs no job; ``add`` a write and a check job;
+    ``compact`` runs no Spark job, with or without tombstones; the
+    table stays footer-sized by ``chooser.rows``."""
+    from toy_vector_db_spark.operators.chooser import rows
+    idx = _KINDS[kind](emb).add(_fresh_rows(spark, emb, [900001]))
+    n = idx.size()
+    assert count_jobs(spark, lambda: rows(idx.table)) == (n, 0)
+    same, jobs = count_jobs(spark, idx.compact)
+    assert same is idx and jobs == 0
+    idx, jobs = count_jobs(spark, lambda: idx.delete([1, 2]))
+    assert jobs == 0 and idx.size() == n - 2
+    delta = _fresh_rows(spark, emb, [900002, 900003])
+    idx, jobs = count_jobs(spark, lambda: idx.add(delta))
+    assert jobs <= 2 and idx.size() == n
+    idx, jobs = count_jobs(spark, idx.compact)
+    assert jobs == 0 and idx._deleted is None and idx.size() == n
+    assert {1, 2}.isdisjoint(idx.get_ids())
+    assert count_jobs(spark, lambda: rows(idx.table)) == (n, 0)
+
+
+def _tree_bytes(path):
+    out = {}
+    for d, _, fs in os.walk(path):
+        for f in fs:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), path)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivfpq"])
+def test_handles_are_snapshots(spark, emb, qvec, kind, tmp_path):
+    """After add / delete / compact / resurrection on a newer handle an
+    older handle's size and search are unchanged, and a loaded index's
+    save directory is left byte for byte as saved."""
+    path = str(tmp_path / kind)
+    built = _KINDS[kind](emb)
+    built.save(path)
+    saved = _tree_bytes(path)
+    old = type(built).load(spark, path)
+    n = old.size()
+
+    def top(i):
+        return [r["vec_id"] for r in
+                i.search(qvec, k=5, metric="euclidean").collect()]
+
+    want = top(old)
+    new = old.add(_fresh_rows(spark, emb, [900001, 900002]))
+    mid = new.delete([7, 900001])
+    new = mid.compact().add(_fresh_rows(spark, emb, [900001]))
+    new = new.add(emb.filter(F.col("vec_id") == 7))   # resurrect 7
+    new = new.delete(emb.select("vec_id").filter(F.col("vec_id") < 3))
+    assert new.size() == n + 2 - 3
+    assert mid.size() == n and 7 not in top(mid)
+    assert old.size() == n and top(old) == want
+    assert sorted(new.get_ids()) == sorted(
+        set(range(3, n)) | {900001, 900002})
+    assert _tree_bytes(path) == saved
+
+
+def test_in_filter_quotes_string_ids(spark):
+    """Tombstones and the add check filter through one SQL ``IN`` string:
+    quotes and backslashes in ids stay literal."""
+    from toy_vector_db_spark.operators.ann import _in
+    ids = ["a'b", "c\\d", "e", "it's\\'"]
+    df = spark.createDataFrame([(i,) for i in ids + ["x"]], "id string")
+    assert sorted(r[0] for r in df.filter(_in("id", ids[:2] + ids[3:]))
+                  .collect()) == sorted(ids[:2] + ids[3:])
+    assert df.filter(_in("id", [])).count() == 0

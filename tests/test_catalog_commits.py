@@ -12,6 +12,7 @@ import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark.operators.chooser import rows
 from toy_vector_db_spark.plans.catalog import DOCS_SUFFIX, CollectionCatalog
 from toy_vector_db_spark.plans.dialect import SqlEngine
 from toy_vector_db_spark.schema import VECTORS_SCHEMA
@@ -223,3 +224,16 @@ def test_dml_job_budgets(spark, tmp_path):
         assert cat._version("c") == v
     assert count_jobs(spark, lambda: rows(cat.read("c"))) == (20, 0)
     assert count_jobs(spark, lambda: cat.drop("c")) == (20, 0)
+
+
+def test_read_over_many_files_runs_no_job(spark, tmp_path):
+    """A read passes every manifest file to Spark. Past 32 paths Spark
+    used to list them in a job; ``session.DEFAULT_CONF`` raises that
+    threshold, so a read of 40 files still runs none."""
+    cat = CollectionCatalog(spark, str(tmp_path / "c"))
+    cat.create("c")
+    cat.insert_df("c", _frame(spark, [f"r{i}" for i in range(400)], parts=40))
+    assert len(cat._files("c")) == 40
+    df, jobs = count_jobs(spark, lambda: cat.read("c"))
+    assert jobs == 0
+    assert count_jobs(spark, lambda: rows(df)) == (400, 0)

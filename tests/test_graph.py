@@ -4,6 +4,7 @@ exact tier, bounded degree, maintenance semantics, persistence."""
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators.graph import KnnGraphIndex
@@ -143,6 +144,25 @@ def test_readd_with_new_vector_drops_stale_edges(spark, emb, idx):
     # a search near the OLD location must not surface 8 at rank 0
     got = [r["vec_id"] for r in re_idx.search(old_vec, k=3).collect()]
     assert got[0] != 8
+
+
+def test_tombstones_cost_a_search_no_job(spark, emb, idx):
+    """Tombstones are a driver-side set, so a search over a graph with
+    one (far from the query, off its walk) runs the same hops and
+    Spark jobs as over the graph without it."""
+    import numpy as np
+    q = _qvec(emb, 3)
+    rows = emb.select("vec_id", "embedding").collect()
+    far = max(rows, key=lambda r: float(np.linalg.norm(
+        np.asarray(r[1]) - np.asarray(q))))[0]
+    pruned = idx.delete([far])
+    counted = []
+    for g in (idx, pruned):
+        g.search(q, k=5).collect()   # entry points cached
+        got, jobs = count_jobs(spark, lambda: g.search(q, k=5).collect())
+        counted.append(([r["vec_id"] for r in got], jobs,
+                        g.last_hops, g.last_jobs))
+    assert counted[0] == counted[1]
 
 
 def test_compact_drops_dead_edges(emb, idx):

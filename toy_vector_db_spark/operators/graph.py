@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import vector_lit
-from .ann import IvfIndex, _MaintainableIndex
+from .ann import IvfIndex, _in, _MaintainableIndex
 
 DEFAULT_M = 8          # out-degree per node (reference M=16 default; 8
                        # suffices for the recall gates on dim-64 data)
@@ -323,10 +323,7 @@ class KnnGraphIndex(_MaintainableIndex):
     def _deleted_ids(self) -> set:
         """Tombstones as a driver set for the walk (bounded: tombstone
         debt is delete volume, not corpus size — compact() folds it)."""
-        d = getattr(self, "_deleted", None)
-        if d is None:
-            return set()
-        return {r[0] for r in d.collect()}
+        return set(self._deleted or ())
 
     def search(self, qvec: Sequence[float], k: int = 10,
                ef: int = DEFAULT_EF, max_hops: int = 6) -> DataFrame:
@@ -552,6 +549,12 @@ class KnnGraphIndex(_MaintainableIndex):
 
     def delete(self, ids):
         out = super().delete(ids)
+        if isinstance(ids, DataFrame):
+            # the rows are removed, not tombstoned: unlink them here
+            d = ids.select(F.col(ids.columns[0]).alias("src"))
+            out.edges = (self.edges.join(d, "src", "left_anti")
+                         .join(d.withColumnRenamed("src", "dst"), "dst",
+                               "left_anti"))
         out._entries = None  # an entry point may now be tombstoned
         out._coarse = None   # ditto for coarse seeds (shared via copy)
         return out
@@ -560,12 +563,11 @@ class KnnGraphIndex(_MaintainableIndex):
         """Fold tombstones into table AND edges (the rebuild the
         reference never does — its deleted nodes keep their links
         forever, hnsw.go:391-412)."""
+        dead = self._deleted
+        if not dead:
+            return self
         out = super().compact()
-        live_ids = out.table.select(F.col(self.id_col).alias("src"))
-        out.edges = (self.edges
-                     .join(live_ids, "src", "semi")
-                     .join(live_ids.withColumnRenamed("src", "dst"),
-                           "dst", "semi"))
+        out.edges = self.edges.filter(~_in("src", dead) & ~_in("dst", dead))
         out._entries = None
         return out
 

@@ -32,10 +32,8 @@ actions):
   such a catalog writes those manifests.
 
 Reads are a bare ``spark.read.schema(S).parquet(*files)``, so sizing
-through ``chooser.rows`` reads only footers. Spark lists more than 32
-(``parallelPartitionDiscovery.threshold``) explicit files in a job,
-which is one more reason to OPTIMIZE a collection that accretes many
-small commits. Versioning gives readers snapshot isolation for free.
+through ``chooser.rows`` reads only footers. Versioning gives readers
+snapshot isolation for free.
 On a production cluster you'd swap in Delta Lake/Iceberg (same
 semantics, richer log) — the SqlEngine above is storage-agnostic
 either way.

@@ -18,9 +18,10 @@ parquet layout:
   not the batch-saved one: a batch read of a directory containing a
   file-sink ``_spark_metadata`` log trusts the log and silently
   ignores every file not written by the stream — it would hide the
-  bootstrap rows. ``load_fresh`` unions the two layouts; both carry
-  the same partition columns, so bucket/cluster probes keep pruning
-  at the source on each side of the union.
+  bootstrap rows. ``load_fresh`` adds the sink's committed files to
+  the loaded index as a segment; both layouts carry the same partition
+  columns, so bucket/cluster probes keep pruning at the source on each
+  side.
 
 Typical shape::
 
@@ -86,6 +87,8 @@ def load_fresh(index_cls, spark, path: str):
     idx = index_cls.load(spark, path)
     sdir = os.path.join(path, index_cls.TABLE_DIR + "_stream")
     if os.path.isdir(os.path.join(sdir, "_spark_metadata")):
-        streamed = spark.read.parquet(sdir).select(*idx.table.columns)
-        return idx._with_table(idx.table.unionByName(streamed), None)
+        from ..operators.ann import _local
+        streamed = spark.read.schema(idx.table.schema).parquet(sdir)
+        return idx._with_files(
+            idx._files() + [_local(u) for u in streamed.inputFiles()], None)
     return idx
