@@ -420,3 +420,27 @@ def test_in_filter_quotes_string_ids(spark):
     assert sorted(r[0] for r in df.filter(_in("id", ids[:2] + ids[3:]))
                   .collect()) == sorted(ids[:2] + ids[3:])
     assert df.filter(_in("id", [])).count() == 0
+
+
+def test_compacted_segment_stays_spark_sized(spark):
+    """A segment ``compact()`` rewrites on the driver stays within 2 % of
+    its Spark-written source in bytes per row (pyarrow's default
+    dictionary encoding of the vector column made it ~40 % larger)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+    rng = np.random.default_rng(3)
+    df = spark.createDataFrame(
+        [(i, rng.standard_normal(64).astype(np.float32).tolist())
+         for i in range(4000)],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>").coalesce(1)
+    idx = IvfIndex.build_deterministic(df, n_centroids=4)
+    base = idx._with_files(idx._files(), None)
+    after = base.delete([5, 1234, 3999]).compact()
+    src = set(base._files()) - set(after._files())
+    new = set(after._files()) - set(base._files())
+    assert len(src) == len(new) == 1
+
+    def per_row(f):
+        return os.path.getsize(f) / pq.ParquetFile(f).metadata.num_rows
+    a, b = per_row(src.pop()), per_row(new.pop())
+    assert abs(b - a) / a <= 0.02, (a, b)

@@ -212,10 +212,10 @@ def test_dml_job_budgets(spark, tmp_path):
     assert res.affected == 1 and jobs <= 2
     res, jobs = count_jobs(spark, lambda: eng.execute(
         "DELETE FROM c WHERE id = 'r1'"))
-    assert res.affected == 1 and jobs == 3
+    assert res.affected == 1 and jobs == 1
     res, jobs = count_jobs(spark, lambda: eng.execute(
         "UPDATE c SET metadata.tag = 't' WHERE id = 'r2'"))
-    assert res.affected == 1 and jobs == 3
+    assert res.affected == 1 and jobs == 1
     v = cat._version("c")
     for stmt in ("DELETE FROM c WHERE id = 'nope'",
                  "UPDATE c SET metadata.tag = 't' WHERE id = 'nope'"):

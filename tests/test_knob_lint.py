@@ -382,3 +382,82 @@ def test_list_lit_lint_catches_a_planted_site():
             ["4", "5", "6", "7"], misses
     finally:
         probe.unlink()
+
+
+#: pyarrow.parquet names that write a file
+PQ_WRITERS = {"write_table", "ParquetWriter"}
+
+
+def _dotted(node) -> str:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return f"{_dotted(node.value)}.{node.attr}"
+    return ""
+
+
+def _parquet_write_findings():
+    """``pq.write_table`` / ``pq.ParquetWriter`` outside
+    ``sources/pqwriter.py``: pyarrow's defaults dictionary-encode float
+    vector columns (files ~40 % larger, ~5x slower to write)."""
+    for f in sorted(PKG.rglob("*.py")):
+        if f.relative_to(PKG).as_posix() == "sources/pqwriter.py":
+            continue
+        tree = ast.parse(f.read_text())
+        mods, names = set(), set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    if a.name == "pyarrow.parquet":
+                        mods.add(a.asname or a.name)
+                    elif a.name == "pyarrow":
+                        mods.add(f"{a.asname or a.name}.parquet")
+            elif isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if n.module == "pyarrow" and a.name == "parquet":
+                        mods.add(a.asname or a.name)
+                    elif (n.module == "pyarrow.parquet"
+                          and a.name in PQ_WRITERS):
+                        names.add(a.asname or a.name)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if ((isinstance(fn, ast.Name) and fn.id in names)
+                    or (isinstance(fn, ast.Attribute)
+                        and fn.attr in PQ_WRITERS
+                        and _dotted(fn.value) in mods)):
+                yield (f"{f.relative_to(PKG.parent)}:{node.lineno} "
+                       "pyarrow parquet write outside sources/pqwriter.py")
+
+
+def test_parquet_writes_go_through_the_writer_helper():
+    misses = list(_parquet_write_findings())
+    assert not misses, (
+        "driver-side parquet writes must use sources.pqwriter:\n  "
+        + "\n  ".join(misses))
+
+
+def test_parquet_write_lint_catches_a_planted_call():
+    """Guard the guard: module, alias and imported-name calls fire; a
+    ParquetWriter instance's write_table and the helper do not."""
+    probe = PKG / "_lint_pq_probe_tmp.py"
+    probe.write_text(
+        "import pyarrow as pa\n"
+        "import pyarrow.parquet as pq\n"
+        "from pyarrow.parquet import write_table as wt\n"
+        "from .sources.pqwriter import write_parquet\n"
+        "def f(t, p):\n"
+        "    pq.write_table(t, p)\n"
+        "    with pq.ParquetWriter(p, t.schema) as w:\n"
+        "        w.write_table(t)\n"
+        "    wt(t, p)\n"
+        "    pa.parquet.write_table(t, p)\n"
+        "    write_parquet(t, p)\n")
+    try:
+        misses = [m for m in _parquet_write_findings()
+                  if "_lint_pq_probe_tmp" in m]
+        assert sorted(int(m.split(":")[1].split()[0]) for m in misses) \
+            == [6, 7, 9, 10], misses
+    finally:
+        probe.unlink()

@@ -51,6 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import session_scratch_dir
+from ..sources.pqwriter import parquet_writer
 from .chooser import rows as _rows
 from .knn import knn
 
@@ -214,7 +215,7 @@ class _MaintainableIndex:
                 if first is None:
                     continue
                 dst = os.path.join(out, f"part-{len(written):05d}.parquet")
-                with pq.ParquetWriter(dst, first.schema.remove_metadata()) as w:
+                with parquet_writer(dst, first.schema.remove_metadata()) as w:
                     w.write_table(first)
                     for t in groups:
                         w.write_table(t)

@@ -24,6 +24,10 @@ actions):
 - INSERT and ``insert_df`` write only their new rows. DELETE, UPDATE
   and the document upsert rewrite only the files that hold a matching
   row. OPTIMIZE rewrites the whole snapshot into new files.
+- DELETE and UPDATE on a collection below
+  ``chooser.DRIVER_REWRITE_MAX_ROWS`` rows run one match job and
+  rewrite the touched files on the driver with pyarrow, row group by
+  row group; larger ones, and the document upsert, write through Spark.
 - GC drops a version's manifest and deletes only the files that no
   retained manifest lists; a dropped version's directory stays while
   it still holds files a retained version reads.
@@ -51,6 +55,7 @@ import tempfile
 import uuid
 from urllib.parse import unquote, urlparse
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -58,8 +63,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.vector import vector_lit
+from ..operators.chooser import rewrite_on_driver
 from ..operators.chooser import rows as footer_rows
 from ..schema import DOCUMENTS_SCHEMA, VECTORS_SCHEMA
+from ..sources.pqwriter import parquet_writer, write_parquet
 
 # Per-collection document sidecar table (reference embeds write a full
 # Document JSON next to the vector, cmd_embed.go:100-112). Stored as a
@@ -67,6 +74,48 @@ from ..schema import DOCUMENTS_SCHEMA, VECTORS_SCHEMA
 DOCS_SUFFIX = "__docs"
 
 MANIFEST = "_manifest.json"
+
+
+def _entry(uri: str) -> str:
+    """The manifest entry of a data file URI: its last two segments."""
+    return "/".join(unquote(urlparse(uri).path).rsplit("/", 2)[-2:])
+
+
+def _part(i: int) -> str:
+    """The name of the ``i``-th data file a driver-side commit writes."""
+    return f"part-{i:05d}-{uuid.uuid4()}.parquet"
+
+
+def _rewrite_file(src: str, dst: str, rows: np.ndarray,
+                  new: pa.Table | None) -> None:
+    """Copy ``src`` to ``dst`` one row group at a time, without the rows
+    at the sorted positions ``rows`` (``new`` None) or with the columns
+    of ``new`` (one row per position) in place at them."""
+    with pq.ParquetFile(src) as f, \
+            parquet_writer(dst, f.schema_arrow.remove_metadata()) as w:
+        start = 0
+        for g in range(f.num_row_groups):
+            t = f.read_row_group(g)
+            lo, hi = np.searchsorted(rows, (start, start + t.num_rows))
+            at = rows[lo:hi] - start
+            start += t.num_rows
+            if hi > lo and new is None:
+                keep = np.ones(t.num_rows, bool)
+                keep[at] = False
+                t = t.filter(pa.array(keep))
+            elif hi > lo:
+                # the replacements appended after the row group's values
+                pick = np.arange(t.num_rows)
+                pick[at] = t.num_rows + np.arange(hi - lo)
+                for c in new.column_names:
+                    field = t.schema.field(c)
+                    values = pa.chunked_array(
+                        t[c].chunks + new[c].slice(lo, hi - lo)
+                        .cast(field.type).chunks, field.type)
+                    t = t.set_column(t.schema.get_field_index(c), field,
+                                     values.take(pick))
+            if t.num_rows:
+                w.write_table(t)
 
 
 class CollectionCatalog:
@@ -185,13 +234,13 @@ class CollectionCatalog:
 
     # -- write ------------------------------------------------------------
 
-    def _commit(self, name: str, data: DataFrame | pa.Table | None = None,
-                carry: list[str] = ()) -> int:
+    def _commit(self, name: str, data=None, carry: list[str] = ()) -> int:
         """Commit the next version: ``carry`` (live files of earlier
         versions, by reference) plus ``data`` written into the new
-        version directory — a DataFrame through Spark, a pyarrow Table
-        on the driver. Returns the row count of the written files, read
-        from their footers; files with no rows are not kept."""
+        version directory — a DataFrame through Spark, or a function
+        that writes its files into the directory it is given, on the
+        driver. Returns the row count of the written files, read from
+        their footers; files with no rows are not kept."""
         v = self._version(name) + 1
         if v and not os.path.exists(self._manifest(name, v - 1)):
             for u in self.versions(name):   # written before manifests
@@ -205,8 +254,7 @@ class CollectionCatalog:
         else:
             os.makedirs(path)
             if data is not None:
-                pq.write_table(data, os.path.join(
-                    path, f"part-00000-{uuid.uuid4()}.parquet"))
+                data(path)
         files, n = list(carry), 0
         for f in sorted(os.listdir(path)):
             if f.startswith("part-") and f.endswith(".parquet"):
@@ -252,9 +300,7 @@ class CollectionCatalog:
         scan = self._scan(name, files).select(
             "*", F.col("_metadata.file_path").alias("_file"))
         hits = match(scan).groupBy("_file").count().collect()
-        # a file URI's last two segments are its manifest entry
-        return {"/".join(unquote(urlparse(u).path).rsplit("/", 2)[-2:]): c
-                for u, c in hits}
+        return {_entry(u): c for u, c in hits}
 
     # -- maintenance -------------------------------------------------------
 
@@ -384,10 +430,12 @@ class CollectionCatalog:
             .select("id").collect()
         if hit:
             raise ValueError(f"duplicate id: {hit[0][0]!r}")
-        self._commit(name, pa.Table.from_pylist(
+        table = pa.Table.from_pylist(
             [{"id": i, "embedding": [float(x) for x in (e or [])],
               "metadata": m} for i, e, m in rows],
-            schema=to_arrow_schema(VECTORS_SCHEMA)), files)
+            schema=to_arrow_schema(VECTORS_SCHEMA))
+        self._commit(name, lambda path: write_parquet(
+            table, os.path.join(path, _part(0))), files)
         return len(rows)
 
     def insert_df(self, name: str, df: DataFrame) -> int:
@@ -453,32 +501,83 @@ class CollectionCatalog:
         docs.write.mode("overwrite").json(path)
         return docs.count()
 
-    def _rewrite(self, name: str, match: Column, rewrite) -> int:
-        """Commit ``rewrite`` of the files holding a row where ``match``
-        is true; the other files carry over by reference. Returns the
-        matched count; nothing matched commits nothing."""
+    def _rewrite(self, name: str, match: Column,
+                 sets: dict | None = None) -> int:
+        """Commit a copy-on-write of the files holding a row where
+        ``match`` is true: without those rows (``sets`` None, DELETE) or
+        with ``sets`` applied to them (UPDATE). The other files carry
+        over by reference and each rewritten file keeps its row order.
+        Returns the matched count; nothing matched commits nothing.
+
+        A collection of at most ``chooser.DRIVER_REWRITE_MAX_ROWS``
+        footer rows is rewritten on the driver: one job collects the
+        matched rows' ``_metadata.file_path`` and ``row_index`` (and,
+        for UPDATE, their SET columns from ``_set``) as Arrow, and
+        each touched file is streamed through pyarrow one row group at
+        a time into the new version, dropping or replacing those
+        positions. A larger one runs the grouped match (``_touched``)
+        and rewrites the touched files with a Spark write job. So does
+        a document table, whose INT96 timestamps a pyarrow round trip
+        would write back as INT64 nanoseconds."""
         files = self._files(name)
-        hits = self._touched(name, files, lambda df: df.where(match))
-        if hits:
-            self._commit(name, rewrite(self._scan(name, list(hits))),
-                         [f for f in files if f not in hits])
-        return sum(hits.values())
+        if not files:
+            return 0
+        scan = self._scan(name, files)
+        if name.endswith(DOCS_SUFFIX) or not rewrite_on_driver(scan):
+            hits = self._touched(name, files, lambda df: df.where(match))
+            if hits:
+                old = self._scan(name, list(hits))
+                self._commit(name, old.where(~match) if sets is None
+                             else self._set(old, sets, match),
+                             [f for f in files if f not in hits])
+            return sum(hits.values())
+        hit = scan.where(match)
+        cols = []
+        if sets is not None:
+            # the SET values are computed after the match, which reads
+            # the columns as they were
+            hit = self._set(hit, sets, F.lit(True))
+            cols = [c for c in ("embedding", "metadata") if c in sets]
+        got = hit.select(F.col("_metadata.file_path").alias("_file"),
+                         F.col("_metadata.row_index").alias("_row"),
+                         *cols).toArrow()
+        if not got.num_rows:
+            return 0
+        by_file = got.column("_file").combine_chunks().dictionary_encode()
+        which = by_file.indices.to_numpy()
+        at = got.column("_row").to_numpy()
+        touched = {}
+        for k, uri in enumerate(by_file.dictionary.to_pylist()):
+            sel = np.flatnonzero(which == k)
+            sel = sel[np.argsort(at[sel])]
+            touched[_entry(uri)] = (at[sel], got.select(cols).take(sel)
+                                    if sets is not None else None)
+
+        def write(path):
+            for i, (f, (rows, new)) in enumerate(touched.items()):
+                _rewrite_file(os.path.join(self._dir(name), f),
+                              os.path.join(path, _part(i)), rows, new)
+
+        self._commit(name, write, [f for f in files if f not in touched])
+        return got.num_rows
 
     def delete(self, name: str, condition: str) -> int:
         """DELETE WHERE <condition> (SQL-string predicate); returns the
         deleted count (executor.go:519-576). A row where the condition
         is NULL (a missing metadata key) does not match and stays, as
-        in the reference."""
-        match = F.coalesce(F.expr(condition), F.lit(False))
-        return self._rewrite(name, match, lambda df: df.where(~match))
+        in the reference. The files holding a match are rewritten
+        without it (``_rewrite``; one job on the driver path)."""
+        return self._rewrite(
+            name, F.coalesce(F.expr(condition), F.lit(False)))
 
     def update(self, name: str, sets: dict, condition: str | None) -> int:
         """UPDATE SET ... [WHERE ...] — the reference parses this but has
         no executor arm (executor.go:87-100, ErrUnsupportedOperation);
-        fully implemented here as a conditional column rewrite."""
+        fully implemented here as a conditional column rewrite of the
+        files holding a match (``_rewrite``; one job on the driver
+        path). A row where the condition is NULL is left as it is."""
         cond = F.expr(condition) if condition else F.lit(True)
-        return self._rewrite(name, F.coalesce(cond, F.lit(False)),
-                             lambda df: self._set(df, sets, cond))
+        return self._rewrite(name, F.coalesce(cond, F.lit(False)), sets)
 
     @staticmethod
     def _set(out: DataFrame, sets: dict, cond: Column) -> DataFrame:
