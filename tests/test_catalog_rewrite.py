@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 from conftest import count_jobs
 
 from toy_vector_db_spark.operators import chooser
-from toy_vector_db_spark.plans.catalog import CollectionCatalog
+from toy_vector_db_spark.plans.catalog import DOCS_SUFFIX, CollectionCatalog
 from toy_vector_db_spark.plans.dialect import SqlEngine
 
 PATHS = {"driver": 10**12, "spark": 0}
@@ -144,3 +144,37 @@ def test_rewrite_over_a_catalog_without_manifests(spark, tmp_path,
         assert [r[0] for r in _snap(old.read_version("c", v))] == ["a", "b"]
         assert old.update("c", {"metadata": {"k": "2"}}, "id = 'b'") == 1
         assert _snap(old.read("c")) == [("b", (2.0,), (("k", "2"),))]
+
+
+def test_docs_table_rewrite_keeps_its_int96_timestamps(spark, tmp_path,
+                                                       monkeypatch):
+    """A document table's created_at / updated_at are INT96, which a
+    pyarrow round trip would write back as INT64 nanoseconds, so its
+    DELETE writes through Spark even where the crossover picks the
+    driver."""
+    monkeypatch.setattr(chooser, "DRIVER_REWRITE_MAX_ROWS", 10**12)
+    cat = CollectionCatalog(spark, str(tmp_path / "docs"))
+    cat.upsert_docs("c", spark.sql(
+        "SELECT concat('d', id) AS doc_id, 'x' AS content, "
+        "current_timestamp() AS created_at, "
+        "current_timestamp() AS updated_at FROM range(4)").coalesce(1))
+    name = "c" + DOCS_SUFFIX
+
+    def stamps():
+        out = set()
+        for f in cat._files(name):
+            md = pq.ParquetFile(os.path.join(cat._dir(name), f)).metadata
+            out |= {(c.name, c.physical_type) for c in map(
+                md.schema.column, range(md.num_columns))
+                if c.name.endswith("_at")}
+        return out
+
+    before, schema = cat.read_docs("c").collect(), cat.read_docs("c").schema
+    assert stamps() == {("created_at", "INT96"), ("updated_at", "INT96")}
+    res = SqlEngine(spark, cat).execute(f"DELETE FROM {name} "
+                                        "WHERE doc_id = 'd1'")
+    assert res.affected == 1
+    assert stamps() == {("created_at", "INT96"), ("updated_at", "INT96")}
+    assert cat.read_docs("c").schema == schema
+    assert sorted(cat.read_docs("c").collect()) == sorted(
+        r for r in before if r["doc_id"] != "d1")

@@ -124,6 +124,9 @@ class CollectionCatalog:
         self.spark = spark
         self.root = root or tempfile.mkdtemp(prefix="vectodb_collections_")
         self.keep_versions = keep_versions
+        # footer row count per data file path; files are never changed
+        # in place, so each footer is read once (``_rows``)
+        self._footer_rows: dict[str, int] = {}
         os.makedirs(self.root, exist_ok=True)
         # re-register collections that already exist on disk
         for name in self.list_collections():
@@ -163,6 +166,17 @@ class CollectionCatalog:
             return sorted(f"{vdir}/{f}" for f in os.listdir(
                 self._data_path(name, v))
                 if f.startswith("part-") and f.endswith(".parquet"))
+
+    def _rows(self, name: str, files: list[str]) -> int:
+        """Row count of ``files`` from their footers, each read once
+        per catalog (no job)."""
+        n = 0
+        for f in files:
+            p = os.path.join(self._dir(name), f)
+            if p not in self._footer_rows:
+                self._footer_rows[p] = pq.ParquetFile(p).metadata.num_rows
+            n += self._footer_rows[p]
+        return n
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self._pointer(name))
@@ -258,9 +272,10 @@ class CollectionCatalog:
         files, n = list(carry), 0
         for f in sorted(os.listdir(path)):
             if f.startswith("part-") and f.endswith(".parquet"):
-                rows = pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                entry = f"{os.path.basename(path)}/{f}"
+                rows = self._rows(name, [entry])
                 if rows:
-                    files.append(f"{os.path.basename(path)}/{f}")
+                    files.append(entry)
                     n += rows
                 else:
                     os.remove(os.path.join(path, f))
@@ -286,6 +301,7 @@ class CollectionCatalog:
             for f in os.listdir(vdir):
                 if f"{os.path.basename(vdir)}/{f}" not in live:
                     os.remove(os.path.join(vdir, f))
+                    self._footer_rows.pop(os.path.join(vdir, f), None)
             if not os.listdir(vdir):
                 os.rmdir(vdir)
 
@@ -510,7 +526,7 @@ class CollectionCatalog:
         Returns the matched count; nothing matched commits nothing.
 
         A collection of at most ``chooser.DRIVER_REWRITE_MAX_ROWS``
-        footer rows is rewritten on the driver: one job collects the
+        footer rows (``_rows``, no job) is rewritten on the driver: one job collects the
         matched rows' ``_metadata.file_path`` and ``row_index`` (and,
         for UPDATE, their SET columns from ``_set``) as Arrow, and
         each touched file is streamed through pyarrow one row group at
@@ -522,8 +538,8 @@ class CollectionCatalog:
         files = self._files(name)
         if not files:
             return 0
-        scan = self._scan(name, files)
-        if name.endswith(DOCS_SUFFIX) or not rewrite_on_driver(scan):
+        if (name.endswith(DOCS_SUFFIX)
+                or not rewrite_on_driver(self._rows(name, files))):
             hits = self._touched(name, files, lambda df: df.where(match))
             if hits:
                 old = self._scan(name, list(hits))
@@ -531,7 +547,7 @@ class CollectionCatalog:
                              else self._set(old, sets, match),
                              [f for f in files if f not in hits])
             return sum(hits.values())
-        hit = scan.where(match)
+        hit = self._scan(name, files).where(match)
         cols = []
         if sets is not None:
             # the SET values are computed after the match, which reads
