@@ -231,21 +231,21 @@ def text_tier(df: DataFrame, tier: str = "auto") -> str:
 # collects the matched rows' (file, row index[, SET columns]) to the
 # driver in one job and rewrites the touched files there with pyarrow;
 # above it the grouped match plus a Spark write job rewrites them.
-# cap: a tier CROSSOVER that also bounds what the driver holds, since
-# the matched rows number at most the collection's rows. Probe, dim 128,
-# one OPTIMIZE file plus one 500-row file, local[4], 2 GiB driver,
-# 4-core host; point DML = median warm ms of one-id DELETE / UPDATE
-# metadata / UPDATE vector (jobs: driver 1, Spark 3); whole = UPDATE
-# SET vector of every row, with the Python / JVM peak-RSS growth:
+# Probe, dim 128, one OPTIMIZE file plus one 500-row file, local[4],
+# 2 GiB driver, 4-core host; point DML = median warm ms of one-id DELETE
+# / UPDATE metadata / UPDATE vector (jobs: driver 1, Spark 3); whole =
+# UPDATE SET vector of every row, with the Python / JVM peak-RSS growth:
 #     rows   driver point    Spark point      driver whole     Spark whole
 #     3.5k   165/191/163     453/417/356
 #     50k    393/361/389     842/860/815      1.4 s +237/+134  1.1 s +0/+10 MB
 #     100k   618/549/648     1506/1487/1447   2.0 s +460/+254  1.7 s +0/+22 MB
 #     500k   2151/1937/2407  3093/2994/2912   6.2 s +1566/+466 4.2 s +0/+0 MB
-# Point DML is 1.4-2.7x faster on the driver at every size, but the
-# driver's peak grows ~3 KB per matched row (the collected SET values
-# plus the row groups being rewritten), so the cap holds the worst case,
-# a whole-table UPDATE SET vector, near 0.5 GB of Python memory.
+# cap: a tier CROSSOVER that also bounds what the driver holds, since
+# the matched rows number at most the collection's rows. Point DML is
+# 1.4-2.7x faster on the driver at every size, but the driver's peak
+# grows ~3 KB per matched row (the collected SET values plus the row
+# groups being rewritten), so the cap holds the worst case, a
+# whole-table UPDATE SET vector, near 0.5 GB of Python memory.
 DRIVER_REWRITE_MAX_ROWS = 100_000
 
 
