@@ -24,7 +24,7 @@ actions):
 - INSERT and ``insert_df`` write only their new rows. DELETE, UPDATE
   and the document upsert rewrite only the files that hold a matching
   row. OPTIMIZE rewrites the whole snapshot into new files.
-- DELETE and UPDATE on a collection below
+- DELETE and UPDATE on a collection of at most
   ``chooser.DRIVER_REWRITE_MAX_ROWS`` rows run one match job and
   rewrite the touched files on the driver with pyarrow, row group by
   row group; larger ones, and the document upsert, write through Spark.
@@ -64,7 +64,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.vector import vector_lit
 from ..operators.chooser import rewrite_on_driver
-from ..operators.chooser import rows as footer_rows
 from ..schema import DOCUMENTS_SCHEMA, VECTORS_SCHEMA
 from ..sources.pqwriter import parquet_writer, write_parquet
 
@@ -423,7 +422,7 @@ class CollectionCatalog:
         """DROP COLLECTION -> count of removed vectors (the reference
         deletes every vector from its single store, executor.go:616-652).
         The document sidecar, if any, goes with it."""
-        n = footer_rows(self.read(name)) if self.exists(name) else 0
+        n = self._rows(name, self._files(name)) if self.exists(name) else 0
         self.spark.catalog.dropTempView(name)
         shutil.rmtree(self._dir(name), ignore_errors=True)
         shutil.rmtree(self._dir(name + DOCS_SUFFIX), ignore_errors=True)
@@ -502,7 +501,7 @@ class CollectionCatalog:
             dname, touched.join(keys, "doc_id", "left_anti").unionByName(new),
             [f for f in files if f not in hits])
         # written = the touched files' rows that survived + the new rows
-        return written - (footer_rows(touched) - sum(hits.values()))
+        return written - (self._rows(dname, list(hits)) - sum(hits.values()))
 
     def export_docs_json(self, name: str, path: str) -> int:
         """Export the document sidecar as JSON — format parity with the
@@ -526,12 +525,12 @@ class CollectionCatalog:
         Returns the matched count; nothing matched commits nothing.
 
         A collection of at most ``chooser.DRIVER_REWRITE_MAX_ROWS``
-        footer rows (``_rows``, no job) is rewritten on the driver: one job collects the
-        matched rows' ``_metadata.file_path`` and ``row_index`` (and,
-        for UPDATE, their SET columns from ``_set``) as Arrow, and
-        each touched file is streamed through pyarrow one row group at
-        a time into the new version, dropping or replacing those
-        positions. A larger one runs the grouped match (``_touched``)
+        footer rows (``_rows``, no job) is rewritten on the driver: one
+        job collects the matched rows' ``_metadata.file_path`` and
+        ``row_index`` (and, for UPDATE, their SET columns from
+        ``_set``) as Arrow, and each touched file is streamed through
+        pyarrow one row group at a time into the new version, dropping
+        or replacing those positions. A larger one runs the grouped match (``_touched``)
         and rewrites the touched files with a Spark write job. So does
         a document table, whose INT96 timestamps a pyarrow round trip
         would write back as INT64 nanoseconds."""
