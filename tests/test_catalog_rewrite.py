@@ -26,6 +26,8 @@ STEPS = [
     "0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5] WHERE id = 'r0004'",
     # the WHERE reads the column the SET rewrites
     "UPDATE c SET metadata.tag = 'v' WHERE metadata.tag = 'u'",
+    # a SET key and value that need quoting in SQL
+    "UPDATE c SET metadata.note = 'it''s a\\b' WHERE id = 'r0005'",
 ]
 
 
@@ -102,11 +104,12 @@ def test_driver_and_spark_rewrites_agree(spark, tmp_path, monkeypatch):
         got[p] = _run(spark, str(tmp_path / p))
     assert got["driver"] == got["spark"]
     counts = [n for n, _ in got["driver"][0]]
-    assert counts[0] == 3 and counts[2:] == [2, 1, 2]   # s2 went in step 2
+    assert counts[0] == 3 and counts[2:] == [2, 1, 2, 1]  # s2 went in step 2
     rows = dict((r[0], r) for r in got["driver"][0][-1][1])
     assert rows["r0007"][2] == () and "r0003" not in rows   # NULL stays
     assert dict(rows["r0002"][2])["tag"] == "v"
     assert rows["r0004"][1] == (0.5,) * 16
+    assert dict(rows["r0005"][2]) == {"tag": "t", "note": "it's a\\b"}
 
 
 def test_driver_rewrite_copies_a_file_minus_its_matches(spark, tmp_path,

@@ -6,6 +6,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal, for expressions that are
+    parsed from one string rather than built one py4j call per node."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def bind_once(expr: Column, f) -> Column:
     """Evaluate ``expr`` exactly once per row and pass it to ``f`` as a
     higher-order-function lambda variable.

@@ -50,6 +50,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.util import sql_string
 from ..session import session_scratch_dir
 from ..sources.pqwriter import parquet_writer
 from .chooser import rows as _rows
@@ -305,8 +306,7 @@ def _in(col: str, values) -> Column:
     if not vals:
         return F.lit(False)
     if all(isinstance(v, str) for v in vals):
-        lits = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-                for v in vals)
+        lits = map(sql_string, vals)
     elif all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
         lits = map(str, vals)
     else:
