@@ -531,10 +531,11 @@ class CollectionCatalog:
         ``row_index`` (and, for UPDATE, their SET columns from
         ``_set``) as Arrow, and each touched file is streamed through
         pyarrow one row group at a time into the new version, dropping
-        or replacing those positions. A larger one runs the grouped match (``_touched``)
-        and rewrites the touched files with a Spark write job. So does
-        a document table, whose INT96 timestamps a pyarrow round trip
-        would write back as INT64 nanoseconds."""
+        or replacing those positions. A larger one runs the grouped
+        match (``_touched``) and rewrites the touched files with a
+        Spark write job. So does a document table, whose INT96
+        timestamps a pyarrow round trip would write back as INT64
+        nanoseconds."""
         files = self._files(name)
         if not files:
             return 0
@@ -602,7 +603,8 @@ class CollectionCatalog:
         ~40 ms of py4j calls per UPDATE."""
         out = {}
         if "embedding" in sets:
-            out["embedding"] = vector_lit(sets["embedding"]).cast("array<float>")
+            out["embedding"] = vector_lit(sets["embedding"]) \
+                .cast("array<float>")
         if sets.get("metadata"):
             keys = ", ".join(map(sql_string, sets["metadata"]))
             patch = ", ".join(f"{sql_string(k)}, {sql_string(v)}"
